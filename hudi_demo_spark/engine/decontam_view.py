@@ -42,10 +42,11 @@ from hudi_demo_spark.engine.derived import (
     _ALLOWED,
     _bounded_vals,
     _data_ops,
+    _pruned_read,
     _save_props,
     _view_has_data,
+    _window_since,
 )
-from hudi_demo_spark.engine.timeline import Timeline
 from hudi_demo_spark.functions.textfn import word_ngrams
 from hudi_demo_spark.operators.util import spread
 
@@ -103,21 +104,11 @@ def refresh_decontam_view(engine, name: str) -> dict | None:
     text_col = cfg.props["decontam.text_col"]
     n = int(cfg.props["decontam.ngram"])
 
-    t_tl = Timeline(engine._resolve(train).path)
-    e_tl = Timeline(engine._resolve(ev).path)
     t_begin = cfg.props.get(_TRAIN_OFFSET)
     e_begin = cfg.props.get(_EVAL_OFFSET)
-    t_end, e_end = t_tl.last_instant(), e_tl.last_instant()
-
-    def _window(tl, begin, end):
-        return _data_ops([
-            m for m in tl.instants()
-            if (begin is None or m["instant"] > begin)
-            and end is not None and m["instant"] <= end
-        ])
-
-    t_win = _window(t_tl, t_begin, t_end)
-    e_win = _window(e_tl, e_begin, e_end)
+    t_end, t_win = _window_since(engine, train, t_begin)
+    e_end, e_win = _window_since(engine, ev, e_begin)
+    t_win, e_win = _data_ops(t_win), _data_ops(e_win)
     if not t_win and not e_win:
         _save_props(engine, name, {
             _TRAIN_OFFSET: t_end or t_begin,
@@ -152,10 +143,7 @@ def refresh_decontam_view(engine, name: str) -> dict | None:
                 train, begin=t_begin, end=t_end
             ).persist()
             vals = _bounded_vals(changed, RECORD_KEY_META)
-            snap = (
-                engine.read(train, point_prune=(RECORD_KEY_META, vals))
-                if vals is not None else engine.read(train)
-            )
+            snap = _pruned_read(engine, train, RECORD_KEY_META, vals, [])
             cand = snap.join(
                 F.broadcast(changed), RECORD_KEY_META, "left_semi"
             ).drop(*_META)

@@ -27,6 +27,9 @@ incremental at 100 TB.
 
 from __future__ import annotations
 
+from importlib import import_module
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, functions as F
 
 from hudi_demo_spark.engine.config import (
@@ -83,6 +86,32 @@ def _pruned_read(engine, table: str, col: str | None, vals, meta_cols):
 
 def _data_ops(window: list[dict]) -> list[dict]:
     return [m for m in window if m["operation"] not in _ROW_PRESERVING]
+
+
+def _window_since(engine, source: str, begin: str | None):
+    """(end, instants in (begin, end]) of `source` from ONE parse of its
+    timeline; (None, []) when nothing committed after `begin`."""
+    instants = Timeline(engine._resolve(source).path).instants()
+    end = instants[-1]["instant"] if instants else None
+    if end is None or end == begin:
+        return None, []
+    return end, [m for m in instants if begin is None or m["instant"] > begin]
+
+
+def _refresh_window(engine, name: str, cfg, source: str):
+    """A single-source view's pending window on `source`: (begin, end,
+    mutated) — `mutated` when the window holds DML beyond inserts — or
+    None when there is nothing to fold. A window of table services only
+    (no row changed) advances the view's offset here."""
+    begin = cfg.props.get(_OFFSET_PROP)
+    end, window = _window_since(engine, source, begin)
+    if end is None:
+        return None
+    data_win = _data_ops(window)
+    if not data_win:
+        _save_props(engine, name, {_OFFSET_PROP: end})
+        return None
+    return begin, end, any(m["operation"] not in _ALLOWED for m in data_win)
 
 
 def _view_has_data(engine, name: str) -> bool:
@@ -337,24 +366,11 @@ def refresh_rollup(engine, name: str) -> dict | None:
     group_cols = cfg.props["derived.group_cols"].split(",")
     (sum_cols, min_cols, max_cols, approx_cols, hist_cols,
      sample_cols) = _agg_cols(cfg)
-    src_cfg = engine._resolve(source)
-    tl = Timeline(src_cfg.path)
-    begin = cfg.props.get(_OFFSET_PROP)
-    end = tl.last_instant()
-    if end is None or begin == end:
+    win = _refresh_window(engine, name, cfg, source)
+    if win is None:
         return None
-    window = [
-        m for m in tl.instants()
-        if (begin is None or m["instant"] > begin) and m["instant"] <= end
-    ]
-    data_win = _data_ops(window)
-    if not data_win:
-        # services only (clean/cluster/compact/...): no row changed —
-        # advance the offset without touching the rollup
-        _save_props(engine, name, {_OFFSET_PROP: end})
-        return None
-    bad = [m["operation"] for m in data_win if m["operation"] not in _ALLOWED]
-    if bad:
+    begin, end, mutated = win
+    if mutated:
         # updates/deletes in the window: additive folding would need
         # retractions — switch to PARTIAL RECOMPUTE maintenance instead
         # (exact re-aggregation of only the groups whose rows changed,
@@ -683,18 +699,6 @@ def refresh_join_view(engine, name: str) -> dict | None:
     lkey, rkey = lcfg.record_key_fields, rcfg.record_key_fields
     meta_cols = [RECORD_KEY_META, PARTITION_PATH_META, COMMIT_TIME_META]
 
-    def window(src_cfg, prop):
-        tl = Timeline(src_cfg.path)
-        begin = cfg.props.get(prop)
-        end = tl.last_instant()
-        if end is None or begin == end:
-            return begin, None, []
-        return begin, end, [
-            m for m in tl.instants()
-            if (begin is None or m["instant"] > begin)
-            and m["instant"] <= end
-        ]
-
     def _advance(le, re_):
         upd = {}
         if le is not None:
@@ -704,8 +708,10 @@ def refresh_join_view(engine, name: str) -> dict | None:
         if upd:
             _save_props(engine, name, upd)
 
-    lb, le, lwin = window(lcfg, "derived.join.left_offset")
-    rb, re_, rwin = window(rcfg, "derived.join.right_offset")
+    lb = cfg.props.get("derived.join.left_offset")
+    rb = cfg.props.get("derived.join.right_offset")
+    le, lwin = _window_since(engine, left, lb)
+    re_, rwin = _window_since(engine, right, rb)
     if le is None and re_ is None:
         return None
     l_data, r_data = _data_ops(lwin), _data_ops(rwin)
@@ -989,23 +995,12 @@ def refresh_filter_view(engine, name: str) -> dict | None:
     cols = [
         c for c in cfg.props.get("derived.filter.columns", "").split(",") if c
     ] or None
-    src_cfg = engine._resolve(source)
-    key_fields = src_cfg.record_key_fields
+    key_fields = engine._resolve(source).record_key_fields
     meta_cols = [RECORD_KEY_META, PARTITION_PATH_META, COMMIT_TIME_META]
-    tl = Timeline(src_cfg.path)
-    begin = cfg.props.get(_OFFSET_PROP)
-    end = tl.last_instant()
-    if end is None or begin == end:
+    win = _refresh_window(engine, name, cfg, source)
+    if win is None:
         return None
-    window = [
-        m for m in tl.instants()
-        if (begin is None or m["instant"] > begin) and m["instant"] <= end
-    ]
-    data_win = _data_ops(window)
-    if not data_win:
-        _save_props(engine, name, {_OFFSET_PROP: end})
-        return None
-    mutated = any(m["operation"] not in _ALLOWED for m in data_win)
+    begin, end, mutated = win
     if not mutated:
         delta = engine.read_incremental(source, begin=begin, end=end)
         fresh = delta.drop(*meta_cols).filter(pred)
@@ -1016,10 +1011,7 @@ def refresh_filter_view(engine, name: str) -> dict | None:
     # a pruned (key, commit_time) diff scan, no full row images
     changed = engine.changed_keys(source, begin=begin, end=end).persist()
     vals = _bounded_vals(changed, RECORD_KEY_META)
-    snap = (
-        engine.read(source, point_prune=(RECORD_KEY_META, vals))
-        if vals is not None else engine.read(source)
-    )
+    snap = _pruned_read(engine, source, RECORD_KEY_META, vals, [])
     live = snap.join(F.broadcast(changed), RECORD_KEY_META, "left_semi")
     # persisted: consumed by the upsert AND the survivors anti-join
     fresh = live.filter(pred).drop(*meta_cols).persist()
@@ -1048,37 +1040,79 @@ def refresh_filter_view(engine, name: str) -> dict | None:
     return out
 
 
+class _Kind(NamedTuple):
+    """One derived-table kind: the props naming its source tables (the
+    first one marks a table as this kind) and its refresher, found by
+    module and function name at call time — the index modules import
+    this one, so importing them here would be a cycle."""
+
+    sources: tuple[str, ...]
+    module: str
+    refresher: str
+
+    def deps(self, props: dict) -> list[str]:
+        return [props[p] for p in self.sources]
+
+    def refresh(self, engine, name: str):
+        return getattr(import_module(self.module), self.refresher)(
+            engine, name
+        )
+
+
+# every derived kind; `refresh_all` and `CALL refresh_<kind>` both
+# dispatch from here, so a new kind is one more entry
+_KINDS = {
+    "rollup": _Kind(("derived.source",), __name__, "refresh_rollup"),
+    "join": _Kind(
+        ("derived.join.left", "derived.join.right"), __name__,
+        "refresh_join_view",
+    ),
+    "filter": _Kind(
+        ("derived.filter.source",), __name__, "refresh_filter_view"
+    ),
+    "vecindex": _Kind(
+        ("vecindex.source",), "hudi_demo_spark.engine.vector_index",
+        "refresh_vector_index",
+    ),
+    "mhindex": _Kind(
+        ("mhindex.source",), "hudi_demo_spark.engine.minhash_index",
+        "refresh_minhash_index",
+    ),
+    "textindex": _Kind(
+        ("textindex.source",), "hudi_demo_spark.engine.text_index",
+        "refresh_text_index",
+    ),
+    "decontam": _Kind(
+        ("decontam.train", "decontam.eval"),
+        "hudi_demo_spark.engine.decontam_view", "refresh_decontam_view",
+    ),
+}
+
+
+def _kind_refreshed_by(proc: str) -> _Kind | None:
+    """The kind whose refresher a `CALL <proc>` names, or None."""
+    return next((k for k in _KINDS.values() if k.refresher == proc), None)
+
+
 def refresh_all(engine) -> dict[str, dict | None]:
     """Refresh EVERY derived table in dependency order — the one-call
     settle for cascading views (a rollup over a rollup, a join view over
-    a rollup): topological over the `derived.source` / `derived.join.*`
-    edges, so an upstream delta has propagated through level N before
-    level N+1 refreshes. Returns {view: commit meta | None} in refresh
-    order. Raises on a dependency cycle (impossible to settle)."""
+    a rollup): topological over each table's source edges, so an
+    upstream delta has propagated through level N before level N+1
+    refreshes. The kinds, their sources and their refreshers come from
+    the `_KINDS` registry; adding a kind means adding one entry there.
+    Returns {view: commit meta | None} in refresh order. Raises on a
+    dependency cycle (impossible to settle)."""
     deps: dict[str, list[str]] = {}
-    kinds: dict[str, str] = {}
+    kinds: dict[str, _Kind] = {}
     for name in engine.list_tables():
         props = engine._resolve(name).props
-        if "derived.source" in props:
-            deps[name] = [props["derived.source"]]
-            kinds[name] = "rollup"
-        elif "derived.join.left" in props:
-            deps[name] = [
-                props["derived.join.left"], props["derived.join.right"]
-            ]
-            kinds[name] = "join"
-        elif "derived.filter.source" in props:
-            deps[name] = [props["derived.filter.source"]]
-            kinds[name] = "filter"
-        elif "vecindex.source" in props:
-            deps[name] = [props["vecindex.source"]]
-            kinds[name] = "vecindex"
-        elif "mhindex.source" in props:
-            deps[name] = [props["mhindex.source"]]
-            kinds[name] = "mhindex"
-        elif "decontam.train" in props:
-            deps[name] = [props["decontam.train"], props["decontam.eval"]]
-            kinds[name] = "decontam"
+        kind = next(
+            (k for k in _KINDS.values() if k.sources[0] in props), None
+        )
+        if kind is not None:
+            deps[name] = kind.deps(props)
+            kinds[name] = kind
     order: list[str] = []
     pending = set(deps)
     while pending:
@@ -1091,22 +1125,7 @@ def refresh_all(engine) -> dict[str, dict | None]:
             )
         order.extend(ready)
         pending.difference_update(ready)
-    from hudi_demo_spark.engine.decontam_view import refresh_decontam_view
-    from hudi_demo_spark.engine.minhash_index import refresh_minhash_index
-    from hudi_demo_spark.engine.vector_index import refresh_vector_index
-
-    refreshers = {
-        "rollup": refresh_rollup,
-        "join": refresh_join_view,
-        "filter": refresh_filter_view,
-        "vecindex": refresh_vector_index,
-        "mhindex": refresh_minhash_index,
-        "decontam": refresh_decontam_view,
-    }
-    out: dict[str, dict | None] = {}
-    for n in order:
-        out[n] = refreshers[kinds[n]](engine, n)
-    return out
+    return {n: kinds[n].refresh(engine, n) for n in order}
 
 
 def _refresh_recompute(
@@ -1138,9 +1157,7 @@ def _refresh_recompute(
     keys = engine.changed_keys(source, begin=begin, end=end).persist()
     key_vals = _bounded_vals(keys, RECORD_KEY_META)
     snap_k = _project(
-        engine.read(source, point_prune=(RECORD_KEY_META, key_vals))
-        if key_vals is not None else engine.read(source),
-        expr_cols,
+        _pruned_read(engine, source, RECORD_KEY_META, key_vals, []), expr_cols
     )
     affected = snap_k.join(keys, RECORD_KEY_META, "left_semi").select(*group_cols)
     if begin is not None:

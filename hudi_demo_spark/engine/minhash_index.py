@@ -43,10 +43,10 @@ from hudi_demo_spark.engine.config import (
     RECORD_KEY_META,
 )
 from hudi_demo_spark.engine.derived import (
-    _ALLOWED,
     _OFFSET_PROP,
     _bounded_vals,
-    _data_ops,
+    _pruned_read,
+    _refresh_window,
     _save_props,
 )
 from hudi_demo_spark.engine.timeline import Timeline
@@ -159,20 +159,10 @@ def refresh_minhash_index(engine, name: str) -> dict | None:
     source = cfg.props["mhindex.source"]
     id_col, text_col, num_hashes, bands = _params(cfg)
     meta_cols = [RECORD_KEY_META, PARTITION_PATH_META, COMMIT_TIME_META]
-    tl = Timeline(engine._resolve(source).path)
-    begin = cfg.props.get(_OFFSET_PROP)
-    end = tl.last_instant()
-    if end is None or begin == end:
+    win = _refresh_window(engine, name, cfg, source)
+    if win is None:
         return None
-    window = [
-        m for m in tl.instants()
-        if (begin is None or m["instant"] > begin) and m["instant"] <= end
-    ]
-    data_win = _data_ops(window)
-    if not data_win:
-        _save_props(engine, name, {_OFFSET_PROP: end})
-        return None
-    mutated = any(m["operation"] not in _ALLOWED for m in data_win)
+    begin, end, mutated = win
     if not mutated:
         delta = engine.read_incremental(source, begin=begin, end=end)
         out = engine.upsert(
@@ -195,10 +185,7 @@ def refresh_minhash_index(engine, name: str) -> dict | None:
         changed.unpersist()
         _save_props(engine, name, {_OFFSET_PROP: end})
         return None
-    snap = (
-        engine.read(source, point_prune=(RECORD_KEY_META, vals))
-        if vals is not None else engine.read(source)
-    )
+    snap = _pruned_read(engine, source, RECORD_KEY_META, vals, [])
     live = snap.join(F.broadcast(changed), RECORD_KEY_META, "left_semi")
     # persisted: feeds both union branches (directly, and via the
     # survivors anti-join inside `dead`) — one signing pass, not two

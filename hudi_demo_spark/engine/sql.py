@@ -412,7 +412,10 @@ class SqlRouter:
         """Hudi Spark-SQL procedure surface (CALL <proc>(k => 'v', ...)) —
         IncrementalQuery.scala:36-37's `call show_commits` plus the
         table-service procedures (rollback_to_instant, run_compaction,
-        run_clustering, clean)."""
+        run_clustering, clean). `refresh_<kind>(table => 'v')` routes
+        through the derived-table registry (`derived._KINDS`): every
+        refresher named there is a procedure, so adding a kind means
+        adding one registry entry, not a branch here."""
         m = re.match(r"call\s+(\w+)\s*\((.*)\)\s*$", s, re.I | re.S)
         if not m:
             raise ValueError(f"unsupported CALL shape: {s[:120]}")
@@ -447,6 +450,16 @@ class SqlRouter:
             )
         if table is None:
             raise ValueError(f"call {proc}(table => '<name>', ...)")
+        from hudi_demo_spark.engine.derived import _kind_refreshed_by
+
+        kind = _kind_refreshed_by(proc)
+        if kind is not None:
+            meta = kind.refresh(self.engine, table)
+            return _rows_df(
+                self.spark,
+                [(meta is not None, (meta or {}).get("instant"))],
+                "refreshed boolean, instant string",
+            )
         if proc == "show_commits":
             return self.engine.show_commits(table)
         if proc in ("show_fsview_all", "show_fsview"):
@@ -692,15 +705,6 @@ class SqlRouter:
                 sample_cols=_json.loads(samples) if samples else None,
             )
             return None
-        if proc == "refresh_rollup":
-            from hudi_demo_spark.engine.derived import refresh_rollup
-
-            meta = refresh_rollup(self.engine, table)
-            return _rows_df(self.spark, 
-                [(meta is not None,
-                  (meta or {}).get("instant"))],
-                "refreshed boolean, instant string",
-            )
         if proc == "rollup_sample":
             # CALL rollup_sample(table => 'roll', col => 'k') — serve
             # the maintained bottom-k sample (group cols…, rank, col)
@@ -754,17 +758,6 @@ class SqlRouter:
                 pq_sample_mod=int(smod) if smod else None,
             )
             return None
-        if proc == "refresh_vector_index":
-            from hudi_demo_spark.engine.vector_index import (
-                refresh_vector_index,
-            )
-
-            meta = refresh_vector_index(self.engine, table)
-            return _rows_df(self.spark, 
-                [(meta is not None,
-                  (meta or {}).get("instant"))],
-                "refreshed boolean, instant string",
-            )
         if proc == "create_minhash_index":
             # CALL create_minhash_index(table => 'docs', name => 'mh',
             #   id_col => 'doc_id', text_col => 'text'
@@ -786,17 +779,6 @@ class SqlRouter:
                 bands=int(args.get("bands", 16)),
             )
             return None
-        if proc == "refresh_minhash_index":
-            from hudi_demo_spark.engine.minhash_index import (
-                refresh_minhash_index,
-            )
-
-            meta = refresh_minhash_index(self.engine, table)
-            return _rows_df(self.spark, 
-                [(meta is not None,
-                  (meta or {}).get("instant"))],
-                "refreshed boolean, instant string",
-            )
         if proc == "create_decontam_view":
             # CALL create_decontam_view(table => 'train', name => 'clean',
             #   eval_table => 'ev', id_col => 'doc_id',
@@ -819,17 +801,6 @@ class SqlRouter:
                 ngram=int(args.get("ngram", 8)),
             )
             return None
-        if proc == "refresh_decontam_view":
-            from hudi_demo_spark.engine.decontam_view import (
-                refresh_decontam_view,
-            )
-
-            meta = refresh_decontam_view(self.engine, table)
-            return _rows_df(self.spark, 
-                [(meta is not None,
-                  (meta or {}).get("instant"))],
-                "refreshed boolean, instant string",
-            )
         if proc == "create_join_view":
             # CALL create_join_view(table => 'fact', name => 'view',
             #                       right_table => 'dim', on => 'k1,k2'
@@ -849,15 +820,6 @@ class SqlRouter:
                 how=args.get("how", "inner"),
             )
             return None
-        if proc == "refresh_join_view":
-            from hudi_demo_spark.engine.derived import refresh_join_view
-
-            meta = refresh_join_view(self.engine, table)
-            return _rows_df(self.spark, 
-                [(meta is not None,
-                  (meta or {}).get("instant"))],
-                "refreshed boolean, instant string",
-            )
         if proc == "create_filter_view":
             # CALL create_filter_view(table => 'src', name => 'v',
             #     predicate => 'lang = ''en''' [, columns => 'a,b'])
@@ -878,15 +840,6 @@ class SqlRouter:
                 self.engine, table, name, predicate, columns=columns
             )
             return None
-        if proc == "refresh_filter_view":
-            from hudi_demo_spark.engine.derived import refresh_filter_view
-
-            meta = refresh_filter_view(self.engine, table)
-            return _rows_df(self.spark, 
-                [(meta is not None,
-                  (meta or {}).get("instant"))],
-                "refreshed boolean, instant string",
-            )
         raise ValueError(f"unknown procedure: {proc}")
 
     def _create(self, s: str) -> None:

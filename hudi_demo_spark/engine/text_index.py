@@ -56,12 +56,10 @@ from hudi_demo_spark.engine.config import (
     RECORD_KEY_META,
 )
 from hudi_demo_spark.engine.derived import (
-    _ALLOWED,
     _OFFSET_PROP,
-    _data_ops,
+    _refresh_window,
     _save_props,
 )
-from hudi_demo_spark.engine.timeline import Timeline
 from hudi_demo_spark.functions.hashfn import xxhash64_py
 from hudi_demo_spark.functions.textfn import tokens
 from hudi_demo_spark.operators.util import rows_df as _rows_df
@@ -199,20 +197,10 @@ def refresh_text_index(engine, name: str) -> dict | None:
     cfg = engine._resolve(name)
     source = cfg.props["textindex.source"]
     id_col, text_col, buckets = _params(cfg)
-    tl = Timeline(engine._resolve(source).path)
-    begin = cfg.props.get(_OFFSET_PROP)
-    end = tl.last_instant()
-    if end is None or begin == end:
+    win = _refresh_window(engine, name, cfg, source)
+    if win is None:
         return None
-    window = [
-        m for m in tl.instants()
-        if (begin is None or m["instant"] > begin) and m["instant"] <= end
-    ]
-    data_win = _data_ops(window)
-    if not data_win:
-        _save_props(engine, name, {_OFFSET_PROP: end})
-        return None
-    mutated = any(m["operation"] not in _ALLOWED for m in data_win)
+    begin, end, mutated = win
     if not mutated:
         # persisted: feeds the postings upsert AND the scalar fold —
         # uncached, the incremental read would run twice

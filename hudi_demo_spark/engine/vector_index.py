@@ -38,13 +38,12 @@ from hudi_demo_spark.engine.config import (
     RECORD_KEY_META,
 )
 from hudi_demo_spark.engine.derived import (
-    _ALLOWED,
     _OFFSET_PROP,
     _bounded_vals,
-    _data_ops,
+    _pruned_read,
+    _refresh_window,
     _save_props,
 )
-from hudi_demo_spark.engine.timeline import Timeline
 from hudi_demo_spark.operators.util import rows_df as _rows_df
 from hudi_demo_spark.operators.similarity import (
     cosine_similarity,
@@ -234,21 +233,10 @@ def refresh_vector_index(engine, name: str) -> dict | None:
     cfg = engine._resolve(name)
     source = cfg.props["vecindex.source"]
     meta_cols = [RECORD_KEY_META, PARTITION_PATH_META, COMMIT_TIME_META]
-    src_cfg = engine._resolve(source)
-    tl = Timeline(src_cfg.path)
-    begin = cfg.props.get(_OFFSET_PROP)
-    end = tl.last_instant()
-    if end is None or begin == end:
+    win = _refresh_window(engine, name, cfg, source)
+    if win is None:
         return None
-    window = [
-        m for m in tl.instants()
-        if (begin is None or m["instant"] > begin) and m["instant"] <= end
-    ]
-    data_win = _data_ops(window)
-    if not data_win:
-        _save_props(engine, name, {_OFFSET_PROP: end})
-        return None
-    mutated = any(m["operation"] not in _ALLOWED for m in data_win)
+    begin, end, mutated = win
     if not mutated:
         delta = engine.read_incremental(source, begin=begin, end=end)
         out = engine.upsert(_assign_cells(delta.drop(*meta_cols), cfg), name)
@@ -258,10 +246,15 @@ def refresh_vector_index(engine, name: str) -> dict | None:
     # a pruned (key, commit_time) diff scan, no full row images
     changed = engine.changed_keys(source, begin=begin, end=end).persist()
     vals = _bounded_vals(changed, RECORD_KEY_META)
-    snap = (
-        engine.read(source, point_prune=(RECORD_KEY_META, vals))
-        if vals is not None else engine.read(source)
-    )
+    # _bounded_vals folds "empty" into None (its no-values return), so an
+    # empty CDC window (e.g. an UPDATE that matched nothing) needs one
+    # cheap probe over the now-cached `changed` to distinguish it from
+    # "over the prune cap"; nothing to re-assign or evict when empty
+    if vals is None and not changed.take(1):
+        changed.unpersist()
+        _save_props(engine, name, {_OFFSET_PROP: end})
+        return None
+    snap = _pruned_read(engine, source, RECORD_KEY_META, vals, [])
     live = snap.join(F.broadcast(changed), RECORD_KEY_META, "left_semi")
     # persisted: feeds both union branches (directly, and via the
     # survivors anti-join inside `dead`) — one assignment pass, not two
@@ -287,9 +280,10 @@ def refresh_vector_index(engine, name: str) -> dict | None:
         .withColumn(DELETED_META, F.lit(True))
     )
     payload = fresh.unionByName(dead, allowMissingColumns=True)
-    out = None
-    if payload.take(1):  # a no-op window writes nothing
-        out = engine.upsert(payload, name)
+    # `changed` is non-empty here (the empty window returned above) and
+    # every changed id contributes a fresh row or a tombstone, so the
+    # payload is non-empty without a pre-flight job
+    out = engine.upsert(payload, name)
     fresh.unpersist()
     changed.unpersist()
     _save_props(engine, name, {_OFFSET_PROP: end})

@@ -179,6 +179,46 @@ def test_refresh_is_single_commit_minhash(engine, spark):
     assert ids == [i for i in range(30) if i % 7 != 0]
 
 
+def test_empty_dml_window_writes_no_index_commit(engine, spark):
+    """An UPDATE that matches no row still commits an `update` on the
+    source. The MinHash and vector indexes fold that empty DML window
+    without writing: the refresh returns None, the index timeline gains
+    no instant, and the offset moves past the update."""
+    from hudi_demo_spark.engine.derived import _OFFSET_PROP
+    from hudi_demo_spark.engine.minhash_index import (
+        create_minhash_index,
+        refresh_minhash_index,
+    )
+    from hudi_demo_spark.engine.vector_index import (
+        create_vector_index,
+        refresh_vector_index,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta doc {i}", [float(i % 3), 1.0, 0.5])
+         for i in range(12)],
+        "doc_id int, text string, emb array<float>",
+    )
+    engine.create_table("docs", record_key="doc_id")
+    engine.insert(docs, "docs")
+    create_minhash_index(
+        engine, "docs", "mh", "doc_id", "text", num_hashes=16, bands=4
+    )
+    create_vector_index(engine, "docs", "vix", "doc_id", "emb", n_centroids=2)
+    refreshers = {"mh": refresh_minhash_index, "vix": refresh_vector_index}
+    for name, refresh in refreshers.items():
+        assert refresh(engine, name) is not None
+    engine.sql("update docs set text = 'gone' where doc_id = 99")
+    last = Timeline(engine._resolve("docs").path).instants()[-1]
+    assert last["operation"] == "update"
+    for name, refresh in refreshers.items():
+        tl = Timeline(engine._resolve(name).path)
+        before = len(tl.instants())
+        assert refresh(engine, name) is None
+        assert len(tl.instants()) == before
+        assert engine._resolve(name).props[_OFFSET_PROP] == last["instant"]
+
+
 def test_refresh_is_single_commit_filter_view(engine, spark):
     from hudi_demo_spark.engine.derived import (
         create_filter_view,

@@ -729,8 +729,9 @@ def test_call_filter_view_procedure(engine, spark):
 
 def test_call_minhash_index_and_decontam_view(engine, spark):
     """CALL surface parity for the round-7 maintainers: minhash index
-    and decontamination view create/refresh through the SQL router, and
-    both participate in the catalog-wide `refresh_views` settle."""
+    and decontamination view create/refresh through the SQL router, a
+    text index refreshes through it, and all three participate in the
+    catalog-wide `refresh_views` settle."""
     engine.sql("create table mdocs (doc_id int, text string) using hudi "
                "options (primaryKey = 'doc_id')")
     engine.sql("insert into mdocs values "
@@ -754,6 +755,18 @@ def test_call_minhash_index_and_decontam_view(engine, spark):
         "on a.band = b.band and a.bucket = b.bucket and a.doc_id < b.doc_id"
     ).select("a", "b").distinct().collect()
     assert {(r["a"], r["b"]) for r in pairs} == {(1, 2)}
+    # a text index on the same docs refreshes through the same CALL
+    # route and serves hits (it has no CALL create procedure)
+    from hudi_demo_spark.engine.text_index import (
+        create_text_index,
+        text_index_search,
+    )
+
+    create_text_index(engine, "mdocs", "mtix", "doc_id", "text", buckets=4)
+    got = engine.sql("call refresh_text_index(table => 'mtix')").collect()
+    assert got[0]["refreshed"] is True
+    hits = text_index_search(engine, "mtix", ["totally"]).collect()
+    assert [r["doc_id"] for r in hits] == [3]
     engine.sql(
         "call create_decontam_view(table => 'mdocs', name => 'mclean', "
         "eval_table => 'mev', id_col => 'doc_id', text_col => 'text', "
@@ -763,10 +776,13 @@ def test_call_minhash_index_and_decontam_view(engine, spark):
     assert got[0]["refreshed"] is True
     ids = sorted(r.doc_id for r in engine.read("mclean").collect())
     assert ids == [1, 2]  # doc 3 shares the eval 4-gram
-    # catalog-wide settle covers BOTH new maintainer kinds
+    # catalog-wide settle covers every maintainer kind on the docs
     engine.sql("insert into mdocs values "
                "(4, 'brand new clean content four words more')")
     out = {r["view"]: r["refreshed"]
            for r in engine.sql("call refresh_views()").collect()}
     assert out.get("mmh") is True and out.get("mclean") is True
+    assert out.get("mtix") is True
     assert 4 in [r.doc_id for r in engine.read("mclean").collect()]
+    hits = text_index_search(engine, "mtix", ["brand"]).collect()
+    assert [r["doc_id"] for r in hits] == [4]
