@@ -7,18 +7,22 @@ Hudi's BLOOM index stores a bloom filter over record keys in every base
 file's parquet footer and consults it during upsert tagging, after
 key-range pruning: a file whose range overlaps the batch may still be
 skippable when the filter proves none of the batch's keys are present.
-This module is the engine analog: filters are built DISTRIBUTEDLY (one
-Arrow-batched ``applyInPandas`` pass over the just-written key column,
-grouped by file — no per-file driver scan, so the build cost is O(batch)
-executor work at any table size) and persisted as sidecar files under
-``<table>/_index/bloom/``, mirroring the data layout. Lookups are
-driver-side and vectorized (numpy) and only engage for small batches —
-the point-lookup regime where bloom pruning pays; large batches touch
-most files anyway and skip the sidecar reads entirely.
+This module is the engine analog: each filter is built by the write's
+metadata tail, in the same pyarrow open of the just-written file that
+reads its footer stats — on the driver for ordinary commits (no Spark
+job), inside one executor job for bulk ones (many files or many keys),
+where each task writes its files' sidecars and the driver sees only
+acks — and persisted as a
+sidecar file under ``<table>/_index/bloom/``, mirroring the data layout.
+A filter depends only on the multiset of its file's keys, so both
+sides write the same bytes. Lookups are driver-side and vectorized
+(numpy) and only engage for small batches — the point-lookup regime
+where bloom pruning pays; large batches touch most files anyway and skip
+the sidecar reads entirely.
 
 Hashing is md5 double-hashing (``h1 + i*h2 mod m``) — engine-portable
-and identical bits on build (executor pandas) and probe (driver numpy),
-with no dependency on JVM hash functions. No false negatives by
+and identical bits on build and probe (driver or executor), with no
+dependency on JVM hash functions. No false negatives by
 construction: an overloaded filter (file rows > the dynamic entry cap)
 degrades to higher FPP, never to a wrong skip.
 """

@@ -66,17 +66,10 @@ def _file_instant(name: str) -> str:
     return parts[1] if len(parts) >= 3 and parts[0] in ("b", "d") else ""
 
 
-def _footer_minmax(path: str, cols: list[str]) -> dict[str, list]:
-    """{col: [min, max]} from one parquet footer (module-level so the
-    distributed footer pass can pickle it to executors). A column whose
-    row-group stats are missing, or whose min/max is not a JSON-safe
+def _footer_minmax(md, cols: list[str]) -> dict[str, list]:
+    """{col: [min, max]} from one parquet footer's row-group stats. A
+    column whose stats are missing, or whose min/max is not a JSON-safe
     scalar, is simply absent — callers treat that as un-prunable."""
-    try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-    except Exception:  # pragma: no cover
-        return {}
     name_to_idx = {
         md.schema.column(i).name: i for i in range(md.num_columns)
     }
@@ -104,6 +97,40 @@ def _footer_minmax(path: str, cols: list[str]) -> dict[str, list]:
             out[c] = [lo, hi]
         except Exception:
             continue
+    return out
+
+
+def _scan_written(
+    path: str, cols: list[str], sidecar: str | None, fpp: float, cap: int
+) -> dict:
+    """The metadata tail of one just-written parquet file, in ONE open:
+    footer row count, [min, max] of `cols`, and — when `sidecar` is
+    given and the file has rows — the bloom filter over its record-key
+    column, written to `sidecar` (tmp + rename, so a reader never sees a
+    torn blob). Module-level so the executor pass can pickle it; the
+    result is a few scalars, never the bitmap. rows = -1 when the footer
+    is unreadable (the file is then kept, never taken for empty)."""
+    import pyarrow.parquet as pq
+
+    try:
+        pf = pq.ParquetFile(path)
+    except (OSError, ValueError):  # pragma: no cover
+        return {"rows": -1, "stats": {}, "bloom": False}
+    with pf:
+        md = pf.metadata
+        out = {"rows": md.num_rows, "stats": _footer_minmax(md, cols),
+               "bloom": False}
+        if not (sidecar and md.num_rows):
+            return out
+        keys = pf.read(columns=[RECORD_KEY_META]).column(0).to_pylist()
+    from hudi_demo_spark.engine import bloom as B
+
+    side = Path(sidecar)
+    side.parent.mkdir(parents=True, exist_ok=True)
+    tmp = side.parent / (side.name + ".tmp")
+    tmp.write_bytes(B.build(keys, fpp, cap))
+    tmp.replace(side)
+    out["bloom"] = True
     return out
 
 
@@ -548,13 +575,22 @@ class Engine:
     def _materialize(
         self, df: DataFrame, cfg: TableConfig, instant: str, kind: str,
         pre_arranged: bool = False, approx_bytes: int | None = None,
-    ) -> list[dict]:
+        stats_cols: list[str] | None = None,
+    ) -> tuple[list[dict], int]:
         """Write df into the table layout: hive-style partition dirs,
         files named by instant (the Hudi file-slice naming analog).
         One partitioned Spark write + driver-side renames (metadata ops).
         `pre_arranged` skips the key-hash repartitions (parallelism /
         bucket props) — clustering arranges rows by sort range and a hash
-        repartition here would destroy that layout."""
+        repartition here would destroy that layout. `stats_cols` adds
+        columns to the recorded [min, max] stats (clustering's sort
+        columns).
+
+        Returns (added file metas, rows written). Rows written is Hudi's
+        numWrites, the commit's `rows_written` stat: the footer row
+        counts of the new files (a COW rewrite counts the rows it
+        carries over, a MOR delta its log rows); -1 if a footer was
+        unreadable."""
         par = cfg.props.get("write.parallelism")
         if par and not pre_arranged:
             df = df.repartition(int(par), F.col(RECORD_KEY_META))
@@ -620,15 +656,26 @@ class Engine:
         # metadata tail (renames, footer stats, bloom build) runs under a
         # fresh liveness window even after a long Spark job
         tl_marker.heartbeat_inflight(instant)
+        from hudi_demo_spark.engine import bloom as B
+
         data = Path(cfg.path) / DATA_DIR
-        added: list[dict] = []
         srcs = sorted(tmp.rglob("*.parquet"))
-        # empty-part detection reads one footer per file: distributed at
-        # the same threshold as _footer_stats so a bulk commit landing
-        # thousands of files never serializes footer IO on the driver
-        nrows = self._footer_rows([str(s) for s in srcs])
+        bloom = kind == "base" and self._truthy(
+            cfg.props.get("index.bloom.enabled")
+        )
+        # the metadata tail in ONE scan per file (driver-side for
+        # ordinary commits, one executor job for bulk ones): footer row
+        # count, key range + column stats, and the bloom sidecar, staged
+        # beside the file and published with it by the renames below
+        scans = self._scan_files(
+            [(str(s), str(s) + ".bf" if bloom else None) for s in srcs],
+            [RECORD_KEY_META, *self._stats_cols(cfg, stats_cols)],
+            cfg.props,
+        )
+        added: list[dict] = []
         for src in srcs:
-            if nrows.get(str(src), -1) == 0:
+            scan = scans[str(src)]
+            if scan["rows"] == 0:
                 # empty part files (empty input slices) are dead weight:
                 # never prunable, opened by every snapshot read forever
                 src.unlink()
@@ -641,14 +688,28 @@ class Engine:
             tdir.mkdir(parents=True, exist_ok=True)
             fname = f"{prefix}_{instant}_{len(added):05d}.parquet"
             shutil.move(str(src), str(tdir / fname))
-            added.append(
-                {
-                    "path": f"{pp}/{fname}" if pp else fname,
-                    "kind": kind,
-                    "partition": pp,
-                    "bytes": (tdir / fname).stat().st_size,
-                }
-            )
+            f = {
+                "path": f"{pp}/{fname}" if pp else fname,
+                "kind": kind,
+                "partition": pp,
+                "bytes": (tdir / fname).stat().st_size,
+            }
+            # per-file key range: the engine's range index (M1 —
+            # JavaClientHive2Hudi.java:167-180) — upserts prune files
+            # whose range cannot intersect the batch; col stats back
+            # `read(range_filter=...)` file skipping
+            st = dict(scan["stats"])
+            kr = st.pop(RECORD_KEY_META, None)
+            if kr is not None:
+                f["key_min"], f["key_max"] = kr
+            if st:
+                f["col_stats"] = st
+            if scan["bloom"]:
+                side = B.sidecar_path(cfg.path, f["path"])
+                side.parent.mkdir(parents=True, exist_ok=True)
+                Path(str(src) + ".bf").replace(side)
+                f["bloom"] = True
+            added.append(f)
         shutil.rmtree(tmp, ignore_errors=True)
         try:
             # staging parent is SHARED across concurrent writers (one
@@ -657,32 +718,6 @@ class Engine:
             (Path(cfg.path) / "_tmp").rmdir()
         except OSError:
             pass
-        # persistent column-stats index (Hudi metadata-table col_stats
-        # analog): with `write.stats_cols`, EVERY write records [min,max]
-        # for the configured columns alongside the key range, so
-        # `read(range_filter=...)` file skipping works on never-clustered
-        # tables and survives post-clustering rewrites
-        raw_stats = str(cfg.props.get("write.stats_cols", "")).strip()
-        if raw_stats == "*":
-            # Hudi metadata-table default: col_stats for every column;
-            # non-scalar columns are skipped footer-side
-            schema = self._stored_schema(cfg)
-            stats_cols = (
-                [
-                    f.name
-                    for f in schema.fields
-                    if f.name not in META_COLS and f.name != DELETED_META
-                ]
-                if schema is not None
-                else []
-            )
-        else:
-            stats_cols = [
-                c.strip() for c in raw_stats.split(",") if c.strip()
-            ]
-        self._attach_key_ranges(added, data, stats_cols)
-        if kind == "base" and self._truthy(cfg.props.get("index.bloom.enabled")):
-            self._build_blooms(cfg, added)
         if kind == "base":
             from hudi_demo_spark.engine import functional_index as fi
 
@@ -690,33 +725,8 @@ class Engine:
                 fi.FunctionalIndex(self.spark, cfg, name, expr).append(
                     [f["path"] for f in added], instant
                 )
-        return added
-
-    @staticmethod
-    def _parquet_rows(path: Path) -> int:
-        """Row count from the parquet footer; -1 if unreadable (file is
-        then kept — conservative)."""
-        try:
-            import pyarrow.parquet as pq
-
-            return pq.ParquetFile(str(path)).metadata.num_rows
-        except Exception:  # pragma: no cover
-            return -1
-
-    def _footer_rows(self, paths: list[str]) -> dict[str, int]:
-        """{path: footer row count} — same driver/executor split as
-        `_footer_stats`: small commits read on the driver, large commits
-        fan out (O(#files / cluster), not O(#files) serial)."""
-        if len(paths) >= self._FOOTER_DISTRIBUTE_MIN:
-            sc = self.spark.sparkContext
-            slices = max(1, min(len(paths) // 16, 256))
-            rows_fn = Engine._parquet_rows
-            return dict(
-                sc.parallelize(paths, slices)
-                .map(lambda p: (p, rows_fn(Path(p))))
-                .collect()
-            )
-        return {p: self._parquet_rows(Path(p)) for p in paths}
+        rows = [scan["rows"] for scan in scans.values()]
+        return added, -1 if any(n < 0 for n in rows) else sum(rows)
 
     @contextmanager
     def _file_sizing(self, cfg: TableConfig, approx_bytes: int | None = None):
@@ -759,140 +769,92 @@ class Engine:
                 else:
                     conf.set(k, v)
 
-    # files-per-commit above which footer stats are read executor-side:
-    # one pyarrow footer read is ~1 ms, so a driver loop is fine for
-    # ordinary commits but serializes a bulk ingest (a 1 TB commit at
-    # 128 MB targets lands ~8k files → ~8 s driver stall, growing with
-    # commit size, not cluster size)
+    # files-per-commit above which the metadata tail (footers, stats,
+    # bloom sidecars) runs executor-side: one pyarrow footer read is
+    # ~1 ms, so a driver loop is fine for ordinary commits but
+    # serializes a bulk ingest (a 1 TB commit at 128 MB targets lands
+    # ~8k files → ~8 s driver stall, growing with commit size, not
+    # cluster size)
     _FOOTER_DISTRIBUTE_MIN = 64
+    # footer rows per commit from which a tail that builds bloom sidecars
+    # runs executor-side at ANY file count: hashing costs ~5 µs per key
+    # on one driver core, and one job spreading it over min(files, cores)
+    # tasks costs ~0.4 s to launch (4 cores, 4 files: 50k keys took
+    # 0.24 s on the driver vs 0.49 s as a job, 100k 0.48 s vs 0.46 s,
+    # 400k 2.09 s vs 0.67 s)
+    _BLOOM_BUILD_DISTRIBUTE_ROWS = 100_000
     # same tradeoff for bloom-sidecar PROBES during upsert tagging: a few
     # sidecars read faster on the driver than a job launches; many read
     # in parallel on executors (serial driver IO grows with table size)
     _BLOOM_PROBE_DISTRIBUTE_MIN = 64
 
-    def _footer_stats(
-        self, paths: list[str], cols: list[str]
-    ) -> dict[str, dict[str, list]]:
-        """{path: {col: [min, max]}} from parquet footers. Small commits
-        read on the driver (no job-launch overhead); large commits fan
-        the footer reads out over executors so commit-time metadata work
-        is O(#files / cluster) instead of O(#files) on the driver."""
-        if len(paths) >= self._FOOTER_DISTRIBUTE_MIN:
-            sc = self.spark.sparkContext
-            slices = max(1, min(len(paths) // 16, 256))
-            pairs = (
-                sc.parallelize(paths, slices)
-                .map(lambda p: (p, _footer_minmax(p, cols)))
+    def _scan_files(
+        self, files: list[tuple[str, str | None]], cols: list[str],
+        props: dict,
+    ) -> dict[str, dict]:
+        """{path: `_scan_written` result} for (path, sidecar or None)
+        pairs, sidecars sized by the table `props`' bloom settings. Small
+        commits scan on the driver with pyarrow (no job launch); large
+        ones — by file count, or by footer rows when sidecars are built —
+        fan out as ONE parallelize job, so commit-time metadata work is
+        O(#files / cluster), not O(#files) on the driver, and bloom
+        bitmaps are written by the executors, never shipped."""
+        import pyarrow.parquet as pq
+
+        from hudi_demo_spark.engine import bloom as B
+
+        fpp = float(props.get("index.bloom.fpp", B.DEFAULT_FPP))
+        cap = int(props.get("index.bloom.max_entries", B.DEFAULT_MAX_ENTRIES))
+
+        def rows(path: str) -> int:
+            try:
+                return pq.read_metadata(path).num_rows
+            except (OSError, ValueError):  # pragma: no cover
+                return 0  # `_scan_written` reports it as rows = -1
+
+        sc = self.spark.sparkContext
+        if len(files) >= self._FOOTER_DISTRIBUTE_MIN or (
+            sum(rows(p) for p, side in files if side)
+            >= self._BLOOM_BUILD_DISTRIBUTE_ROWS
+        ):
+            slices = min(
+                len(files), max(len(files) // 16, sc.defaultParallelism), 256
+            )
+            return dict(
+                sc.parallelize(files, slices)
+                .map(lambda f: (f[0], _scan_written(f[0], cols, f[1], fpp, cap)))
                 .collect()
             )
-            return {p: st for p, st in pairs if st}
-        out = {}
-        for p in paths:
-            st = _footer_minmax(p, cols)
-            if st:
-                out[p] = st
-        return out
+        return {p: _scan_written(p, cols, side, fpp, cap) for p, side in files}
 
-    def _attach_key_ranges(
-        self, added: list[dict], data: Path, stats_cols: list[str] | None = None
-    ) -> None:
-        """Record per-file min/max record key — and [min, max] for
-        `stats_cols` (the column-stats index behind clustering's file
-        skipping) — in the commit metadata, in ONE footer pass. The key
-        range is the engine's bloom/range index analog (M1 —
-        JavaClientHive2Hudi.java:167-180): upserts prune base files whose
-        key range cannot intersect the incoming batch. Only JSON-safe
-        scalar types (int/float/str) are recorded; anything else leaves
-        the file un-prunable (conservative)."""
-        cols = [RECORD_KEY_META, *(stats_cols or [])]
-        stats = self._footer_stats(
-            [str(data / f["path"]) for f in added], cols
-        )
-        for f in added:
-            st = stats.get(str(data / f["path"]))
-            if not st:
-                continue
-            kr = st.get(RECORD_KEY_META)
-            if kr is not None:
-                f["key_min"], f["key_max"] = kr
-            cs = {c: v for c, v in st.items() if c != RECORD_KEY_META}
-            if cs:
-                f["col_stats"] = cs
-
-    def _attach_col_stats(
-        self, added: list[dict], data: Path, cols: list[str]
-    ) -> None:
-        """Column-stats-only variant (clustering records stats for its
-        sort columns on the rewritten files)."""
-        stats = self._footer_stats(
-            [str(data / f["path"]) for f in added], list(cols)
-        )
-        for f in added:
-            st = stats.get(str(data / f["path"]))
-            if st:
-                f["col_stats"] = {**f.get("col_stats", {}), **st}
+    def _stats_cols(
+        self, cfg: TableConfig, extra: list[str] | None = None
+    ) -> list[str]:
+        """Columns whose [min, max] every write records (the Hudi
+        metadata-table col_stats analog, `write.stats_cols`): file
+        skipping for `read(range_filter=...)` on never-clustered tables,
+        surviving post-clustering rewrites. "*" means every scalar data
+        column (non-scalar ones are skipped footer-side); `extra`
+        appends columns not already listed."""
+        raw = str(cfg.props.get("write.stats_cols", "")).strip()
+        if raw == "*":
+            schema = self._stored_schema(cfg)
+            cols = (
+                [
+                    f.name
+                    for f in schema.fields
+                    if f.name not in META_COLS and f.name != DELETED_META
+                ]
+                if schema is not None
+                else []
+            )
+        else:
+            cols = [c.strip() for c in raw.split(",") if c.strip()]
+        return cols + [c for c in extra or [] if c not in cols]
 
     @staticmethod
     def _truthy(v) -> bool:
         return str(v or "").lower() in ("1", "true", "yes")
-
-    def _build_blooms(self, cfg: TableConfig, added: list[dict]) -> list:
-        """Bloom index build (M1 — JavaClientHive2Hudi.java:167-180): one
-        distributed pass over the just-written base files' key column
-        (column-pruned scan, Arrow-batched per-file groups) producing a
-        bloom sidecar per file under _index/bloom/. The sidecar bitmap
-        is WRITTEN INSIDE THE EXECUTOR TASK (the lake is a shared
-        filesystem, same premise as the data files themselves) — the
-        driver only collects tiny (file, ok) acks and flips `bloom:
-        true` flags, so a bulk commit landing thousands of files never
-        funnels gigabytes of bitmaps through the driver. Files flagged
-        in commit metadata so probes need no filesystem discovery."""
-        from hudi_demo_spark.engine import bloom as B
-
-        files = [f for f in added if f.get("kind") == "base"]
-        if not files:
-            return []
-        data = Path(cfg.path) / DATA_DIR
-        fpp = float(cfg.props.get("index.bloom.fpp", B.DEFAULT_FPP))
-        cap = int(
-            cfg.props.get("index.bloom.max_entries", B.DEFAULT_MAX_ENTRIES)
-        )
-        key_df = self.spark.read.parquet(
-            *[str(data / f["path"]) for f in files]
-        ).select(
-            F.input_file_name().alias("__f"),
-            F.col(RECORD_KEY_META).cast("string").alias("__k"),
-        )
-        root = str(cfg.path)
-        prefix = str(data).rstrip("/") + "/"
-
-        def _one(pdf):
-            import pandas as pd
-
-            from hudi_demo_spark.engine import bloom as BB
-            from hudi_demo_spark.engine.config import relpath_from_uri
-
-            rel = relpath_from_uri(pdf["__f"].iloc[0], prefix.rstrip("/"))
-            blob = bytes(BB.build(pdf["__k"], fpp, cap))
-            side = BB.sidecar_path(root, rel)
-            side.parent.mkdir(parents=True, exist_ok=True)
-            tmp = side.parent / (side.name + ".tmp")
-            tmp.write_bytes(blob)
-            tmp.replace(side)  # atomic publish: probes never see a torn blob
-            return pd.DataFrame({"f": [rel], "ok": [True]})
-
-        rows = (
-            key_df.groupBy("__f")
-            .applyInPandas(_one, "f string, ok boolean")
-            .collect()
-        )
-        by_name = {Path(f["path"]).name: f for f in files}
-        for r in rows:
-            f = by_name.get(Path(r["f"]).name)
-            if f is None or not r["ok"]:  # pragma: no cover
-                continue
-            f["bloom"] = True
-        return rows
 
     def _bloom_prune(
         self,
@@ -900,6 +862,7 @@ class Engine:
         candidates: dict[str, dict],
         batch: DataFrame,
         batch_rows: int,
+        pairs: list | None,
     ) -> dict[str, dict]:
         """Bloom probe (after range pruning): drop candidate base files
         whose filter PROVES none of the batch's keys are present. Only
@@ -909,7 +872,9 @@ class Engine:
         everything and the bloom is the only thing standing between a
         20-key upsert and a whole-partition rewrite. Files without a
         sidecar (pre-bloom commits, external bootstrap, deltas) are kept
-        — never a false skip."""
+        — never a false skip. `pairs` are the batch's (partition, key)
+        rows when `_tag_files` already collected them (they are then
+        hashed on the driver, ~10 ms); None hashes on the executors."""
         from hudi_demo_spark.engine import bloom as B
 
         if not self._truthy(cfg.props.get("index.bloom.enabled")):
@@ -929,24 +894,11 @@ class Engine:
             return candidates
         import numpy as np
 
-        distinct_pairs = batch.select(
-            F.coalesce(
-                F.col(PARTITION_PATH_META).cast("string"), F.lit("")
-            ).alias("__pp"),
-            F.col(RECORD_KEY_META).cast("string").alias("__k"),
-        ).distinct()
-        hash_dist_min = int(
-            cfg.props.get("index.bloom.hash.distribute_min", 20_000)
-        )
         hcache: dict[str, np.ndarray] = {}
-        if batch_rows <= hash_dist_min:
-            # point-lookup regime: collecting ≤20k skinny pairs and
-            # hashing on the driver is ~10 ms — a python-worker stage
-            # here costs 20-50× the work it distributes (measured +0.5 s
-            # per upsert at sf0.1)
+        if pairs is not None:
             by_part: dict[str, list[str]] = {}
-            for pp, k in distinct_pairs.collect():
-                by_part.setdefault(pp or "", []).append(k)
+            for pp, k in dict.fromkeys((pp or "", k) for pp, k in pairs):
+                by_part.setdefault(pp, []).append(k)
             for pp, ks in by_part.items():
                 hcache[pp] = np.array(
                     [B.key_hashes(k) for k in ks], dtype=np.uint64
@@ -958,6 +910,13 @@ class Engine:
             # driver never loops over raw keys. uint64 rides the wire as
             # two's-complement int64 (reinterpret) — Arrow longs are
             # signed.
+            distinct_pairs = batch.select(
+                F.coalesce(
+                    F.col(PARTITION_PATH_META).cast("string"), F.lit("")
+                ).alias("__pp"),
+                F.col(RECORD_KEY_META).cast("string").alias("__k"),
+            ).distinct()
+
             def _hash_pairs(it):
                 import pandas as pd
 
@@ -1023,11 +982,12 @@ class Engine:
         hcache: dict,
         glob,
     ) -> set:
-        """Fan the sidecar reads out to executors (mirror of
-        `_build_blooms`): candidate relpaths parallelize into tasks, the
-        batch's key-hash arrays ride a broadcast (≤1.6 MB at the 100k
-        lookup cap), each task loads ITS sidecars from the shared
-        filesystem and acks a tiny (relpath, keep) row. The driver never
+        """Fan the sidecar reads out to executors (mirror of the write
+        tail's executor-side sidecar build, `_scan_files`): candidate
+        relpaths parallelize into tasks, the batch's key-hash arrays
+        ride a broadcast (≤1.6 MB at the 100k lookup cap), each task
+        loads ITS sidecars from the shared filesystem and acks a tiny
+        (relpath, keep) row. The driver never
         opens a sidecar — at 100 TB a point upsert whose uuid keys defeat
         range pruning probes thousands of sidecars in parallel instead of
         serially (JavaClientHive2Hudi.java:167-180's tagging pass is
@@ -1571,9 +1531,13 @@ class Engine:
                 f"violations: {[r.asDict() for r in sample]}"
             )
 
-    def _index_append(self, cfg: TableConfig, stamped: DataFrame) -> None:
+    def _index_append(
+        self, cfg: TableConfig, stamped: DataFrame, rows: int
+    ) -> None:
         """Maintain the record index and any secondary indexes after a
-        committed write: append the batch's pairs. First write on an
+        committed write: append the batch's pairs (`rows`: the batch's
+        row count or an upper bound, -1 if unknown; it picks the
+        secondary-index append shape). First write on an
         index-less table builds from the live snapshot instead, so
         completeness is guaranteed even when the prop is enabled on an
         existing table. Soft-delete tombstone rows are dropped first —
@@ -1591,7 +1555,7 @@ class Engine:
                 )
             else:
                 idx.append(stamped)
-        self._secondary_append(cfg, stamped)
+        self._secondary_append(cfg, stamped, rows)
 
     def _secondary_index(self, cfg: TableConfig, col: str):
         """SecondaryIndex for `col` when declared (`index.secondary`
@@ -1611,7 +1575,9 @@ class Engine:
             )
         return stamped
 
-    def _secondary_append(self, cfg: TableConfig, stamped: DataFrame) -> None:
+    def _secondary_append(
+        self, cfg: TableConfig, stamped: DataFrame, rows: int
+    ) -> None:
         from hudi_demo_spark.engine import secondary_index as si
 
         stamped = self._drop_tombstones(stamped)
@@ -1622,10 +1588,10 @@ class Engine:
             if not idx.usable():
                 idx.build(self.read(cfg).select(col, PARTITION_PATH_META))
             else:
-                idx.append(stamped)
+                idx.append(stamped, small=0 <= rows <= self._summary_bound(cfg))
 
     def _secondary_append_updated(
-        self, cfg: TableConfig, batch: DataFrame, set_cols
+        self, cfg: TableConfig, batch: DataFrame, set_cols, rows: int
     ) -> None:
         """After an in-place rewrite (UPDATE / MERGE with explicit SET
         maps), append the REWRITTEN rows' (value, partition) pairs for
@@ -1641,7 +1607,7 @@ class Engine:
         if not touched:
             return
         self._secondary_append(
-            cfg, batch.select(*touched, PARTITION_PATH_META)
+            cfg, batch.select(*touched, PARTITION_PATH_META), rows
         )
 
     def _secondary_truncate(self, cfg: TableConfig) -> None:
@@ -2402,12 +2368,15 @@ class Engine:
         rows = []
         for m in Timeline(cfg.path).instants(include_archived=True):
             removed = m["files_removed"]
+            # commits that record no row count (metadata-only actions,
+            # the sessionless writers' None) show -1
+            written = m.get("stats", {}).get("rows_written")
             rows.append(
                 (
                     m["instant"],
                     m["action"],
                     m["operation"],
-                    int(m.get("stats", {}).get("rows_written", -1)),
+                    -1 if written is None else int(written),
                     len(m["files_added"]),
                     -1 if removed == "*" else len(removed),
                 )
@@ -2783,9 +2752,6 @@ class Engine:
     # write path  (W1-W14)
     # ------------------------------------------------------------------
 
-    def _commit_stats(self, files: list[dict], rows: int | None) -> dict:
-        return {"rows_written": rows if rows is not None else -1}
-
     def insert(
         self,
         df: DataFrame,
@@ -2824,14 +2790,9 @@ class Engine:
         out = self._prepare(df, cfg, instant)
         if drop_duplicates:
             out = self._dedup_batch(out, cfg)
-            tl = Timeline(cfg.path)
-            ranges, n_rows = self._batch_key_ranges(out)
-            live = tl.live_files()
-            if self._is_global(cfg):
-                candidates = self._global_candidates(cfg, live, ranges, out)
-            else:
-                candidates = self._affected_files(live, ranges)
-            candidates = self._bloom_prune(cfg, candidates, out, n_rows)
+            candidates, _ = self._tag_files(
+                cfg, Timeline(cfg.path).live_files(), out
+            )
             if candidates:
                 on = self._merge_key_cols(cfg)
                 existing = self._read_files(cfg, candidates)
@@ -2847,14 +2808,14 @@ class Engine:
                     )
                 out = out.join(existing.select(*on), on, "left_anti")
         kind = "base" if cfg.table_type == COW else "delta"
-        added = self._materialize(out, cfg, instant, kind)
+        added, written = self._materialize(out, cfg, instant, kind)
         self._precommit_validate(cfg, instant, added, [])
         action = tlmod.COMMIT if cfg.table_type == COW else tlmod.DELTACOMMIT
         meta = Timeline(cfg.path).commit(
-            instant, action, operation, added, [], self._commit_stats(added, None),
+            instant, action, operation, added, [], {"rows_written": written},
             batch_id=batch_id,
         )
-        self._index_append(cfg, out)
+        self._index_append(cfg, out, written)
         self._maybe_compact(cfg)
         self._maybe_cluster(cfg)
         self._maybe_ttl(cfg)
@@ -2942,14 +2903,14 @@ class Engine:
         cfg = self._resolve(table)
         instant = new_instant()
         out = self._prepare(df, cfg, instant)
-        added = self._materialize(out, cfg, instant, "base")
+        added, written = self._materialize(out, cfg, instant, "base")
         meta = Timeline(cfg.path).commit(
             instant,
             tlmod.REPLACECOMMIT,
             "insert_overwrite_table",
             added,
             "*",
-            self._commit_stats(added, None),
+            {"rows_written": written},
         )
         idx = self._record_index(cfg)
         if idx is not None:
@@ -2957,7 +2918,8 @@ class Engine:
             # rebuild from the new content instead of appending
             idx.build(out.select(RECORD_KEY_META, PARTITION_PATH_META))
         self._secondary_truncate(cfg)
-        self._secondary_append(cfg, out)  # unusable → rebuilds from snapshot
+        # unusable → rebuilds from snapshot
+        self._secondary_append(cfg, out, written)
         return meta
 
     def insert_overwrite(self, df: DataFrame, table: str | TableConfig) -> dict:
@@ -2976,7 +2938,7 @@ class Engine:
         out = self._prepare(df, cfg, instant)
         tl = Timeline(cfg.path)
         live = tl.live_files()
-        added = self._materialize(out, cfg, instant, "base")
+        added, written = self._materialize(out, cfg, instant, "base")
         # partitions actually written (empty input slices are dropped by
         # _materialize, matching Hudi: only partitions receiving data are
         # replaced)
@@ -2991,9 +2953,9 @@ class Engine:
             "insert_overwrite",
             added,
             removed,
-            self._commit_stats(added, None),
+            {"rows_written": written},
         )
-        self._index_append(cfg, out)
+        self._index_append(cfg, out, written)
         return meta
 
     def delete_partition(
@@ -3295,12 +3257,59 @@ class Engine:
         return out
 
     @staticmethod
+    def _summary_bound(cfg: TableConfig) -> int:
+        """Batch rows small enough to summarize with one collect:
+        `index.bloom.hash.distribute_min` (default 20k). The prop first
+        bounded the bloom probe's driver-side key hashing; it now also
+        picks `_tag_files`' key-range path on EVERY table, bloom or not,
+        and the secondary-index append shape (`_secondary_append`)."""
+        return int(cfg.props.get("index.bloom.hash.distribute_min", 20_000))
+
+    def _tag_files(
+        self, cfg: TableConfig, live: dict[str, dict], batch: DataFrame
+    ) -> tuple[dict[str, dict], int]:
+        """Upsert tagging, Hudi's index lookup (JavaClientHive2Hudi.java:
+        167-180) shared by insert-dedup, upsert, delete_keys and merge:
+        (live files that may hold one of the batch's keys, batch rows).
+
+        The batch is summarized by ONE bounded collect of its (partition,
+        key) rows, at most `_summary_bound` of them: the per-partition
+        key ranges, the row count and the bloom probe keys all come from
+        it, one Spark job where an aggregate plus a pair collect took
+        five. A batch past the bound falls back to the key-range
+        aggregate and executor-side bloom hashing; the discarded collect
+        then costs one job more than the aggregate alone. Then key-range
+        pruning (global: across partitions, plus the record index), then
+        the bloom probe."""
+        bound = self._summary_bound(cfg)
+        pairs = (
+            batch.select(PARTITION_PATH_META, RECORD_KEY_META)
+            .limit(bound + 1)
+            .collect()
+        )
+        if len(pairs) <= bound:
+            ranges: dict[str, tuple[str, str]] = {}
+            for pp, k in pairs:
+                lo, hi = ranges.get(pp, (k, k))
+                ranges[pp] = (min(lo, k), max(hi, k))
+            n_rows = len(pairs)
+        else:
+            (ranges, n_rows), pairs = self._batch_key_ranges(batch), None
+        if self._is_global(cfg):
+            candidates = self._global_candidates(cfg, live, ranges, batch)
+        else:
+            candidates = self._affected_files(live, ranges)
+        return (
+            self._bloom_prune(cfg, candidates, batch, n_rows, pairs),
+            n_rows,
+        )
+
+    @staticmethod
     def _batch_key_ranges(
         df: DataFrame,
     ) -> tuple[dict[str, tuple[str, str]], int]:
-        """({partition: (min_key, max_key)}, total_rows) of an incoming
-        batch — one tiny aggregate, the upsert 'index lookup' input; the
-        row count gates the broadcast merge fast path."""
+        """({partition: (min_key, max_key)}, total_rows) of a batch too
+        big to collect — one aggregate, `_tag_files`' fallback."""
         rows = (
             df.groupBy(PARTITION_PATH_META)
             .agg(F.min(RECORD_KEY_META), F.max(RECORD_KEY_META), F.count("*"))
@@ -3404,13 +3413,13 @@ class Engine:
         tl = Timeline(cfg.path)
         if cfg.table_type == MOR:
             batch = self._dedup_batch(batch, cfg)
-            added = self._materialize(batch, cfg, instant, "delta")
+            added, written = self._materialize(batch, cfg, instant, "delta")
             self._precommit_validate(cfg, instant, added, [])
             meta = tl.commit(
                 instant, tlmod.DELTACOMMIT, "upsert", added, [],
-                self._commit_stats(added, None), batch_id=batch_id,
+                {"rows_written": written}, batch_id=batch_id,
             )
-            self._index_append(cfg, batch)
+            self._index_append(cfg, batch, written)
             self._maybe_compact(cfg)
             self._maybe_ttl(cfg)
             return meta
@@ -3418,23 +3427,14 @@ class Engine:
         try:
             live = tl.live_files()
             if live:
-                ranges, batch_rows = self._batch_key_ranges(batch)
-                if self._is_global(cfg):
-                    affected = self._global_candidates(
-                        cfg, live, ranges, batch
-                    )
-                else:
-                    affected = self._affected_files(live, ranges)
-                affected = self._bloom_prune(
-                    cfg, affected, batch, batch_rows
-                )
+                affected, batch_rows = self._tag_files(cfg, live, batch)
             else:
                 # first write (every derived view's bootstrap refresh):
-                # nothing to prune or merge against, so skip the
-                # key-range aggregate — it would execute the batch's
-                # whole lineage (often an expensive recompute) just to
-                # learn bounds nobody consumes. The write below is then
-                # the lineage's single execution.
+                # nothing to prune or merge against, so skip the batch
+                # summary — it would execute the batch's whole lineage
+                # (often an expensive recompute) just to learn bounds
+                # nobody consumes. The write below is then the lineage's
+                # single execution.
                 affected, batch_rows = {}, 0
             # cost-based merge strategy: when the affected base is LARGE
             # and the batch small, shuffling every affected file through
@@ -3497,15 +3497,15 @@ class Engine:
                     # reserved marker, applied above — never persisted
                     # into COW base files
                     winner = winner.drop(DELETED_META)
-            added = self._materialize(
+            added, written = self._materialize(
                 winner, cfg, instant, "base", approx_bytes=affected_bytes
             )
             self._precommit_validate(cfg, instant, added, sorted(affected))
             meta = tl.commit(
                 instant, tlmod.COMMIT, "upsert", added, sorted(affected),
-                self._commit_stats(added, None), batch_id=batch_id,
+                {"rows_written": written}, batch_id=batch_id,
             )
-            self._index_append(cfg, batch)
+            self._index_append(cfg, batch, batch_rows if live else written)
             self._maybe_ttl(cfg)
             return meta
         finally:
@@ -3546,12 +3546,13 @@ class Engine:
                 DELETED_META, F.lit(True)
             ).withColumn(COMMIT_TIME_META, F.lit(instant))
             markers = self._conform(markers, cfg)
-            added = self._materialize(markers, cfg, instant, "delta")
+            added, written = self._materialize(markers, cfg, instant, "delta")
             if not added:
                 return tl.commit(instant, tlmod.COMMIT, "delete", [], [],
                                  {"rows_deleted": 0})
             self._precommit_validate(cfg, instant, added, [])
-            meta = tl.commit(instant, tlmod.DELTACOMMIT, "delete", added, [])
+            meta = tl.commit(instant, tlmod.DELTACOMMIT, "delete", added, [],
+                             {"rows_written": written})
             self._maybe_compact(cfg)
             return meta
         # COW: NOT persisted — caching would serve the footprint scan
@@ -3574,13 +3575,13 @@ class Engine:
         keep = self._read_files(cfg, affected).filter(
             ~F.coalesce(cond, F.lit(False))
         )
-        added = self._materialize(
+        added, written = self._materialize(
             keep, cfg, instant, "base",
             approx_bytes=sum(m.get("bytes") or 0 for m in affected.values()),
         )
         self._precommit_validate(cfg, instant, added, sorted(affected))
         return tl.commit(instant, tlmod.COMMIT, "delete", added,
-                         sorted(affected))
+                         sorted(affected), {"rows_written": written})
 
     def delete_keys(self, table: str | TableConfig, keys_df: DataFrame) -> dict:
         """DELETE by key list (W8) — client.delete(List<HoodieKey>)
@@ -3607,13 +3608,6 @@ class Engine:
         keyed = keyed.select(PARTITION_PATH_META, RECORD_KEY_META).distinct().persist()
         tl = Timeline(cfg.path)
         try:
-            ranges, n_keys = self._batch_key_ranges(keyed)
-            live = tl.live_files()
-            if self._is_global(cfg):
-                affected = self._global_candidates(cfg, live, ranges, keyed)
-            else:
-                affected = self._affected_files(live, ranges)
-            affected = self._bloom_prune(cfg, affected, keyed, n_keys)
             if cfg.table_type == MOR:
                 snap = self.read(cfg)
                 markers = (
@@ -3622,20 +3616,22 @@ class Engine:
                     .withColumn(COMMIT_TIME_META, F.lit(instant))
                 )
                 markers = self._conform(markers, cfg)
-                added = self._materialize(markers, cfg, instant, "delta")
+                added, written = self._materialize(markers, cfg, instant, "delta")
                 self._precommit_validate(cfg, instant, added, [])
-                meta = tl.commit(instant, tlmod.DELTACOMMIT, "delete", added, [])
+                meta = tl.commit(instant, tlmod.DELTACOMMIT, "delete", added,
+                                 [], {"rows_written": written})
                 self._maybe_compact(cfg)
                 return meta
+            affected, _ = self._tag_files(cfg, tl.live_files(), keyed)
             base = self._read_files(cfg, affected)
             keep = base.join(keyed.select(*on), on, "left_anti")
-            added = self._materialize(
+            added, written = self._materialize(
                 keep, cfg, instant, "base",
                 approx_bytes=sum(m.get("bytes") or 0 for m in affected.values()),
             )
             self._precommit_validate(cfg, instant, added, sorted(affected))
             return tl.commit(instant, tlmod.COMMIT, "delete", added,
-                             sorted(affected))
+                             sorted(affected), {"rows_written": written})
         finally:
             keyed.unpersist()
 
@@ -3676,10 +3672,11 @@ class Engine:
             updated = updated.withColumns(dict(assigns))
             updated = updated.withColumn(COMMIT_TIME_META, F.lit(instant))
             updated = self._conform(updated, cfg)
-            added = self._materialize(updated, cfg, instant, "delta")
+            added, written = self._materialize(updated, cfg, instant, "delta")
             self._precommit_validate(cfg, instant, added, [])
-            meta = tl.commit(instant, tlmod.DELTACOMMIT, "update", added, [])
-            self._secondary_append_updated(cfg, updated, set)
+            meta = tl.commit(instant, tlmod.DELTACOMMIT, "update", added, [],
+                             {"rows_written": written})
+            self._secondary_append_updated(cfg, updated, set, written)
             self._maybe_compact(cfg)
             return meta
         snap = self.read(
@@ -3707,16 +3704,17 @@ class Engine:
             cond, F.lit(instant)
         ).otherwise(F.col(COMMIT_TIME_META))
         out = out.withColumns(newcols)
-        added = self._materialize(
+        added, written = self._materialize(
             out, cfg, instant, "base",
             approx_bytes=sum(m.get("bytes") or 0 for m in affected.values()),
         )
         self._precommit_validate(cfg, instant, added, sorted(affected))
-        meta = tl.commit(instant, tlmod.COMMIT, "update", added, sorted(affected))
+        meta = tl.commit(instant, tlmod.COMMIT, "update", added,
+                         sorted(affected), {"rows_written": written})
         # simultaneous projection, matching the written data exactly —
         # sequential withColumn would index values the write never produced
         idx_batch = matched.withColumns(dict(assigns))
-        self._secondary_append_updated(cfg, idx_batch, set)
+        self._secondary_append_updated(cfg, idx_batch, set, written)
         return meta
 
     def merge(
@@ -3764,7 +3762,6 @@ class Engine:
         src = self._dedup_batch(src, cfg).persist()
         flagged = None
         try:
-            ranges, n_src = self._batch_key_ranges(src)
             live = tl.live_files()
             on = self._merge_key_cols(cfg)
             has_by_source = (
@@ -3774,20 +3771,16 @@ class Engine:
             if has_by_source:
                 # by-source clauses can touch ANY unmatched target row:
                 # pruning would hide rows from them — full live scan
-                affected = dict(live)
-            elif self._is_global(cfg):
-                # global index: a source row may match a target row in a
-                # DIFFERENT partition (and a matched update moves it) —
-                # key-only join over the globally pruned candidate set
-                affected = self._global_candidates(cfg, live, ranges, src)
+                affected, src_rows = dict(live), -1
             else:
-                affected = self._affected_files(live, ranges)
-            if not has_by_source:
-                # bloom-pruned files provably hold none of the source's
-                # keys: their rows would all take the keep-unmatched-
-                # target branch, so leaving them live unscanned is
-                # semantics-preserving
-                affected = self._bloom_prune(cfg, affected, src, n_src)
+                # files pruned by key range or bloom provably hold none
+                # of the source's keys: their rows would all take the
+                # keep-unmatched-target branch, so leaving them live
+                # unscanned is semantics-preserving. Global index: a
+                # source row may match a target row in a DIFFERENT
+                # partition (and a matched update moves it) — key-only
+                # join over the globally pruned candidate set
+                affected, src_rows = self._tag_files(cfg, live, src)
             base = self._read_files(cfg, affected)
             if cfg.table_type == MOR:
                 base = self._merge_view(base, cfg)
@@ -3998,7 +3991,7 @@ class Engine:
                 out = flagged.drop("__touched")
             else:
                 out = j.filter(keep).select(*sel)
-            rewritten = self._materialize(
+            rewritten, written = self._materialize(
                 out, cfg, instant, "base",
                 approx_bytes=sum(m.get("bytes") or 0 for m in affected.values()),
             )
@@ -4006,12 +3999,15 @@ class Engine:
                 cfg, instant, rewritten, sorted(affected)
             )
             meta = tl.commit(
-                instant, tlmod.COMMIT, "merge", rewritten, sorted(affected)
+                instant, tlmod.COMMIT, "merge", rewritten, sorted(affected),
+                {"rows_written": written},
             )
-            self._index_append(cfg, src)
+            self._index_append(cfg, src, src_rows)
             if flagged is not None:
                 touched = flagged.filter(F.col("__touched")).drop("__touched")
-                self._secondary_append_updated(cfg, touched, explicit_cols)
+                self._secondary_append_updated(
+                    cfg, touched, explicit_cols, written
+                )
             return meta
         finally:
             src.unpersist()
@@ -4327,9 +4323,10 @@ class Engine:
         merged = self._merge_view(df, cfg)
         if DELETED_META in merged.columns:
             merged = merged.filter(~F.coalesce(F.col(DELETED_META), F.lit(False)))
-        added = self._materialize(merged, cfg, instant, "base")
+        added, written = self._materialize(merged, cfg, instant, "base")
         return tl.commit(
-            instant, tlmod.COMPACTION, "compact", added, sorted(affected)
+            instant, tlmod.COMPACTION, "compact", added, sorted(affected),
+            {"rows_written": written},
         )
 
     def log_compact(self, table: str | TableConfig) -> dict | None:
@@ -4373,10 +4370,10 @@ class Engine:
         folded = self._merge_view(df, cfg)
         # delete markers MUST survive folding (they still shadow base
         # rows); only read() filters them
-        added = self._materialize(folded, cfg, instant, "delta")
+        added, written = self._materialize(folded, cfg, instant, "delta")
         return tl.commit(
             instant, "logcompaction", "log_compact", added, sorted(target),
-            self._commit_stats(added, None),
+            {"rows_written": written},
         )
 
     def compact(
@@ -4633,17 +4630,17 @@ class Engine:
             # projection preserves the range partitioning + sort order
             arranged = arranged.drop(*drop_helpers)
         with self._file_sizing(cfg):
-            added = self._materialize(
-                arranged, cfg, instant, "base", pre_arranged=True
+            added, written = self._materialize(
+                arranged, cfg, instant, "base", pre_arranged=True,
+                stats_cols=sort_cols,
             )
-        self._attach_col_stats(added, Path(cfg.path) / DATA_DIR, sort_cols)
         return tl.commit(
             instant,
             tlmod.REPLACECOMMIT,
             "cluster",
             added,
             sorted(live),
-            self._commit_stats(added, None),
+            {"rows_written": written},
         )
 
     def schedule_clustering(
@@ -4798,14 +4795,14 @@ class Engine:
             df = self._merge_view(df, cfg)
         if DELETED_META in df.columns:
             df = df.filter(~F.coalesce(F.col(DELETED_META), F.lit(False)))
-        added = self._materialize(df, cfg, instant, "base")
+        added, written = self._materialize(df, cfg, instant, "base")
         return tl.commit(
             instant,
             tlmod.REPLACECOMMIT,
             "bucket_resize",
             added,
             sorted(live),
-            self._commit_stats(added, None),
+            {"rows_written": written},
         )
 
     def clean(

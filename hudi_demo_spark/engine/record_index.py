@@ -92,24 +92,20 @@ class RecordIndex:
     def _bucket(self, col) -> Column:
         return F.pmod(F.xxhash64(col), F.lit(self.buckets))
 
-    def _entries(self, df: DataFrame) -> DataFrame:
-        return (
+    def append(self, df: DataFrame) -> None:
+        """Append the distinct (key, partition) pairs of a stamped batch.
+        ONE shuffle keyed by bucket (AQE coalesces tiny batches): it
+        already co-locates equal pairs, so the distinct needs no second
+        exchange, and each touched bucket gains one file per commit;
+        `compact` bounds the accumulation."""
+        (
             df.select(
                 F.col(RECORD_KEY_META).alias("key"),
                 F.col(PARTITION_PATH_META).alias("partition"),
             )
-            .distinct()
             .withColumn(BUCKET_COL, self._bucket(F.col("key")))
-        )
-
-    def append(self, df: DataFrame) -> None:
-        """Append the (key, partition) pairs of a stamped batch. One
-        shuffle keyed by bucket (AQE coalesces tiny batches), so each
-        touched bucket gains one file per commit; `compact` bounds the
-        accumulation."""
-        (
-            self._entries(df)
             .repartition(F.col(BUCKET_COL))
+            .distinct()
             .write.mode("append")
             .partitionBy(BUCKET_COL)
             .parquet(str(self.path))
@@ -122,14 +118,16 @@ class RecordIndex:
         self._mark_complete()
 
     def compact(self) -> None:
-        """Fold the append log to distinct pairs (size bound)."""
+        """Fold the append log to distinct pairs (size bound): one
+        bucket-keyed shuffle, one file per bucket."""
         if not self.usable() or not any(self.path.rglob("*.parquet")):
             return
-        distinct = self.spark.read.parquet(str(self.path)).distinct()
         tmp = self.path.parent / "keys_compacting"
         shutil.rmtree(tmp, ignore_errors=True)
         (
-            distinct.repartition(F.col(BUCKET_COL))
+            self.spark.read.parquet(str(self.path))
+            .repartition(F.col(BUCKET_COL))
+            .distinct()
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
             .parquet(str(tmp))

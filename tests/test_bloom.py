@@ -183,10 +183,15 @@ def test_bloom_clean_sweeps_sidecars(engine, spark):
 @pytest.mark.slow
 def test_bulk_commit_writes_sidecars_executor_side(engine, spark):
     """Scale contract: a bulk commit landing many base files must not
-    funnel bloom bitmaps through the driver — _build_blooms writes each
-    sidecar inside its executor task and the driver only collects tiny
-    (file, ok) acks. Proven by committing 64+ base files across 64
-    partitions and inspecting the returned ack rows."""
+    funnel bloom bitmaps through the driver — the write's metadata tail
+    (`_scan_files`) writes each sidecar inside its executor task and the
+    driver only collects a few scalars per file. Proven by committing
+    64+ base files across 64 partitions and inspecting what the tail
+    returns for them."""
+    from pathlib import Path
+
+    from hudi_demo_spark.engine.config import DATA_DIR
+
     engine.create_table(
         "tb64", record_key="id", precombine="ts", partition_by="dt",
         props={"index.bloom.enabled": "true"},
@@ -206,9 +211,17 @@ def test_bulk_commit_writes_sidecars_executor_side(engine, spark):
         assert side.is_file() and side.stat().st_size > 0
         # no leftover tmp from the atomic publish
         assert not (side.parent / (side.name + ".tmp")).exists()
-    # the driver-side ack rows carry NO bitmap payload
-    acks = engine._build_blooms(cfg, [dict(m, path=p) for p, m in base.items()])
-    assert acks and all(set(r.asDict()) == {"f", "ok"} and r["ok"] for r in acks)
+    # what the driver receives per file carries NO bitmap payload
+    data = Path(cfg.path) / DATA_DIR
+    scans = engine._scan_files(
+        [(str(data / p), str(B.sidecar_path(cfg.path, p))) for p in base],
+        [],
+        cfg.props,
+    )
+    assert len(scans) == len(base) and all(
+        set(s) == {"rows", "stats", "bloom"} and s["bloom"]
+        for s in scans.values()
+    )
     # probes still prune: a single-key upsert touches one file group
     upd = spark.createDataFrame(
         [(7, 700.0, 9, "p07")], "id int, price double, ts long, dt string"
@@ -218,3 +231,149 @@ def test_bulk_commit_writes_sidecars_executor_side(engine, spark):
     got = engine.read("tb64").filter("id = 7").collect()
     assert got[0]["price"] == 700.0
     assert len(_live_by_path(engine, "tb64")) == n_before
+
+
+# ------------------------------------------- tagging and the metadata tail
+
+SCHEMA = "id int, name string, price double, ts long, dt string"
+
+
+def _upd(spark, ids, name="upd"):
+    from hudi_demo_spark.operators.util import rows_df
+
+    return rows_df(
+        spark, [(i, name, 99.0, 200, "2022-09-05") for i in ids], SCHEMA
+    )
+
+
+def _file_ids(engine, t, paths) -> dict:
+    """{relpath: (commit ordinal, file index)} — data-file names carry
+    their commit's instant, which differs between tables written with
+    the same rows."""
+    from pathlib import Path
+
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    instants = [m["instant"] for m in Timeline(engine._resolve(t).path).instants()]
+    order = {i: n for n, i in enumerate(sorted(instants))}
+    out = {}
+    for p in paths:
+        _, instant, idx = Path(p).stem.split("_")
+        out[p] = (order[instant], idx)
+    return out
+
+
+def test_point_upsert_job_budget(engine, spark):
+    """A 40-row COW upsert with a bloom and a secondary index runs at
+    most five Spark jobs: one bounded batch summary (ranges, row count
+    and bloom keys together), the merge and the write, a driver-side
+    metadata tail, and one shuffle plus its write for the index append.
+    The aggregate + pair-collect tagging, the applyInPandas bloom build
+    and the two-shuffle index append took 13."""
+    t = _seed(engine, spark, {"index.bloom.enabled": "true"})
+    engine.create_index(t, "name")
+    up = _upd(spark, range(1, 160, 4))
+    sc = spark.sparkContext
+    group = "test_bloom:point_upsert"
+    sc.setJobGroup(group, "40-row upsert")
+    try:
+        meta = engine.upsert(up, t)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 5, len(jobs)
+    # keys ≡ 1 (mod 4) all live in the second seed commit's files: the
+    # bloom probe, fed by the summary, still prunes every other file
+    removed = _file_ids(engine, t, meta["files_removed"]).values()
+    assert {o for o, _ in removed} == {1}
+    assert engine.read(t).filter("name = 'upd'").count() == 40
+
+
+def _blooms_by_file(engine, t):
+    """{(seed commit ordinal, file index): sidecar bytes}."""
+    cfg = engine._resolve(t)
+    return {
+        fid: B.sidecar_path(cfg.path, p).read_bytes()
+        for p, fid in _file_ids(engine, t, _live_by_path(engine, t)).items()
+    }
+
+
+@pytest.mark.parametrize(
+    "switch", ["_FOOTER_DISTRIBUTE_MIN", "_BLOOM_BUILD_DISTRIBUTE_ROWS"]
+)
+def test_driver_and_executor_sidecars_byte_equal(
+    engine, spark, monkeypatch, switch
+):
+    """The metadata tail builds sidecars on the driver for small commits
+    and in one executor job past either size switch (file count, or
+    footer rows when blooms are built); both must write the same
+    bytes."""
+    import pyarrow.parquet as pq
+
+    from hudi_demo_spark import Engine
+    from hudi_demo_spark.engine.engine import Engine as E
+
+    _seed(engine, spark, {"index.bloom.enabled": "true"})
+    driver = _blooms_by_file(engine, "t")
+
+    opens, builds = [], []
+    real_pf, real_build = pq.ParquetFile, B.build
+
+    def driver_pf(*a, **kw):
+        opens.append(a)
+        return real_pf(*a, **kw)
+
+    def driver_build(*a):
+        builds.append(a)
+        return real_build(*a)
+
+    monkeypatch.setattr(E, switch, 1)
+    # driver-side modules only: executor workers import their own
+    monkeypatch.setattr(pq, "ParquetFile", driver_pf)
+    monkeypatch.setattr(B, "build", driver_build)
+    other = Engine(spark, engine.root.parent / "lake_exec")
+    _seed(other, spark, {"index.bloom.enabled": "true"})
+    # every file was scanned and every key hashed on executors
+    assert opens == [] and builds == []
+    executor = _blooms_by_file(other, "t")
+    assert driver and executor == driver
+
+
+@pytest.mark.parametrize("op", ["upsert", "merge", "delete_keys"])
+def test_batch_summary_fallback_matches_default(engine, spark, op):
+    """Past `index.bloom.hash.distribute_min` rows the tagging falls back
+    to the key-range aggregate and executor-side bloom hashing; with the
+    bound at 2 that path must rewrite the same files and leave the same
+    rows as the one-collect summary."""
+    from hudi_demo_spark import Engine
+
+    ids = [1, 5, 9, 13]  # all in the second seed commit's files
+    results = []
+    for eng, props in (
+        (engine, {}),
+        (
+            Engine(spark, engine.root.parent / "lake_fallback"),
+            {"index.bloom.hash.distribute_min": "2"},
+        ),
+    ):
+        t = _seed(eng, spark, {"index.bloom.enabled": "true", **props})
+        if op == "upsert":
+            meta = eng.upsert(_upd(spark, ids), t)
+        elif op == "merge":
+            meta = eng.merge(t, _upd(spark, ids + [4001]))
+        else:
+            meta = eng.delete_keys(
+                t,
+                spark.createDataFrame(
+                    [(i, "2022-09-05") for i in ids], "id int, dt string"
+                ),
+            )
+        removed = set(_file_ids(eng, t, meta["files_removed"]).values())
+        rows = sorted(
+            tuple(r)
+            for r in eng.read(t).select("id", "name", "price").collect()
+        )
+        results.append((removed, rows))
+    # the bloom pruned every file outside the second seed commit
+    assert {o for o, _ in results[0][0]} == {1}
+    assert results[0] == results[1]

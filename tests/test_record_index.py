@@ -148,3 +148,86 @@ def test_rli_survives_clustering(engine, spark):
     engine.upsert(_mkdf(spark, [(4, "z", 9.0, 200, "p2")]), t)
     st = _state(engine, t)
     assert (4, "z", 9.0, 200, "p2") in st and len(st) == 6
+
+
+@pytest.mark.parametrize("summary_bound", [None, "2"])
+def test_index_append_and_compact_keep_pairs_and_file_shape(
+    engine, spark, monkeypatch, summary_bound
+):
+    """Record and secondary index appends and compactions shuffle ONCE,
+    by bucket, and take the distinct inside that shuffle: the stored
+    pairs are still exactly the table's distinct pairs, each append
+    adds one file to each bucket it touches (and holds no duplicate),
+    and a compaction leaves one duplicate-free file per bucket. With the
+    batch-summary bound at 2, the 5-row batch is past it and the
+    secondary index drops duplicate pairs map-side first: same files,
+    same pairs."""
+    from hudi_demo_spark.engine.config import PARTITION_PATH_META, RECORD_KEY_META
+
+    props = {"index.record_level.buckets": "4", "index.secondary.buckets": "4"}
+    if summary_bound is not None:
+        props["index.bloom.hash.distribute_min"] = summary_bound
+    t = _setup(engine, spark, **props)
+    engine.create_index(t, "name")
+    cfg = engine._resolve(t)
+    rli = RecordIndex(spark, cfg)
+    sec = engine._secondary_index(cfg, "name")
+    indexes = ((rli, "key", RECORD_KEY_META), (sec, "value", "name"))
+
+    def stored(idx, col):
+        return [
+            tuple(r)
+            for r in spark.read.parquet(str(idx.path))
+            .select(col, "partition").collect()
+        ]
+
+    def truth(col):
+        snap = engine.read(t).select(
+            F.col(col).cast("string"), PARTITION_PATH_META
+        )
+        return {tuple(r) for r in snap.collect()}
+
+    def buckets(idx, col, df):
+        return {
+            f"__bucket={r[0]}"
+            for r in df.select(idx._bucket(F.col(col).cast("string")))
+            .distinct().collect()
+        }
+
+    before = {idx.path: set(idx.path.rglob("*.parquet")) for idx, _, _ in indexes}
+    # repeated (name, partition) pairs inside the batch, and key 1
+    # re-upserted with its old name
+    batch = _mkdf(spark, [
+        (7, "b", 1.0, 200, "p1"), (9, "b", 1.0, 200, "p1"),
+        (8, "c", 1.0, 200, "p2"), (10, "c", 1.0, 200, "p2"),
+        (1, "a", 2.0, 200, "p1"),
+    ])
+    from hudi_demo_spark.engine.secondary_index import SecondaryIndex
+
+    shapes, real_append = [], SecondaryIndex.append
+
+    def append(self, df, small=False):
+        shapes.append(small)
+        return real_append(self, df, small)
+
+    monkeypatch.setattr(SecondaryIndex, "append", append)
+    engine.upsert(batch, t)
+    assert shapes == [summary_bound is None]
+    stamped = engine.read(t).filter(F.col("id").isin(7, 9, 8, 10, 1))
+    for idx, col, src in indexes:
+        new = set(idx.path.rglob("*.parquet")) - before[idx.path]
+        assert sorted(f.parent.name for f in new) == sorted(
+            buckets(idx, src, stamped)
+        )
+        for f in new:
+            rows = spark.read.parquet(str(f)).collect()
+            assert len(rows) == len(set(rows))
+        assert set(stored(idx, col)) == truth(src)
+        idx.compact()
+        dirs = [d for d in idx.path.iterdir() if d.is_dir()]
+        assert dirs and all(
+            len(list(d.glob("*.parquet"))) == 1 for d in dirs
+        )
+        pairs = stored(idx, col)
+        assert len(pairs) == len(set(pairs))
+        assert set(pairs) == truth(src)

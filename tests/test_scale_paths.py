@@ -190,7 +190,7 @@ def test_incremental_unclean_range_records_zero_skips(engine, spark):
 
 
 # ---------------------------------------------------------------------------
-# minor: empty-file footer check distributes past _FOOTER_DISTRIBUTE_MIN
+# minor: the write's footer scan distributes past _FOOTER_DISTRIBUTE_MIN
 # ---------------------------------------------------------------------------
 
 def test_footer_rows_distributes_large_commits(engine, tmp_path, monkeypatch):
@@ -215,15 +215,15 @@ def test_footer_rows_distributes_large_commits(engine, tmp_path, monkeypatch):
     # module in their own processes, so counts stay correct iff the read
     # fanned out
     monkeypatch.setattr(pq, "ParquetFile", driver_pf)
-    out = engine._footer_rows(paths)
+    out = engine._scan_files([(p, None) for p in paths], [], {})
     assert calls == []  # zero driver footer reads at 70 files
-    assert out[paths[0]] == 0 and out[paths[1]] == 3
+    assert out[paths[0]]["rows"] == 0 and out[paths[1]]["rows"] == 3
     assert len(out) == 70
 
     # under the threshold the driver path is used (and counted)
-    small = engine._footer_rows(paths[:5])
+    small = engine._scan_files([(p, None) for p in paths[:5]], [], {})
     assert len(calls) == 5
-    assert small[paths[0]] == 0 and small[paths[1]] == 3
+    assert small[paths[0]]["rows"] == 0 and small[paths[1]]["rows"] == 3
 
 
 # ---------------------------------------------------------------------------

@@ -2405,3 +2405,56 @@ def test_planning_stays_flat_after_archival_at_4k_commits(engine, spark):
     # 30 instants + checkpoint vs ~4k instants — measured ~7x on this
     # box (~110 ms -> ~15 ms); 0.5 leaves ample headroom for load.
     assert min(laps_arch) < 0.5 * min(laps_active), (laps_active, laps_arch)
+
+
+def test_commit_stats_count_rows_written(engine, spark):
+    """`rows_written` (Hudi's numWrites, shown as show_commits'
+    total_records) is the row count of the files a commit adds, read
+    from their footers: a COW insert's rows, a COW upsert's whole
+    rewritten file group (carried-over rows included), a MOR delta's
+    deduped batch."""
+    from pathlib import Path
+
+    from hudi_demo_spark.engine.config import DATA_DIR, MOR
+
+    def counted(t, meta):
+        data = Path(engine._resolve(t).path) / DATA_DIR
+        return spark.read.parquet(
+            *[str(data / f["path"]) for f in meta["files_added"]]
+        ).count()
+
+    def shown(t, meta):
+        (row,) = [
+            c for c in engine.show_commits(t).collect()
+            if c["commit_time"] == meta["instant"]
+        ]
+        return row["total_records"]
+
+    engine.create_table("c", record_key="id", precombine="ts",
+                        partition_by="dt")
+    ins = engine.insert(spark.createDataFrame(ROWS, SCHEMA), "c")
+    assert ins["stats"]["rows_written"] == 5 == counted("c", ins)
+    up = engine.upsert(
+        spark.createDataFrame(
+            [(1, "u", 1.0, 9000, "2022-11-25"), (6, "n", 6.0, 9000, "2022-11-25")],
+            SCHEMA,
+        ),
+        "c",
+    )
+    # partition 2022-11-25 is rewritten whole: ids 1, 2 and the new 6
+    assert up["stats"]["rows_written"] == 3 == counted("c", up)
+    engine.create_table("m", record_key="id", precombine="ts",
+                        partition_by="dt", table_type=MOR)
+    engine.insert(spark.createDataFrame(ROWS, SCHEMA), "m")
+    delta = engine.upsert(
+        spark.createDataFrame(
+            [(1, "u", 1.0, 9000, "2022-11-25"), (1, "v", 2.0, 9001, "2022-11-25"),
+             (3, "w", 3.0, 9000, "2022-11-26")],
+            SCHEMA,
+        ),
+        "m",
+    )
+    assert delta["action"] == "deltacommit"
+    assert delta["stats"]["rows_written"] == 2 == counted("m", delta)
+    for t, meta in (("c", ins), ("c", up), ("m", delta)):
+        assert shown(t, meta) == meta["stats"]["rows_written"]
