@@ -66,6 +66,15 @@ def _file_instant(name: str) -> str:
     return parts[1] if len(parts) >= 3 and parts[0] in ("b", "d") else ""
 
 
+def _values(vals) -> list:
+    """A point probe's values as a list; a bare scalar is one value."""
+    return list(vals) if isinstance(vals, (list, tuple, set)) else [vals]
+
+
+def _in_partitions(files: dict[str, dict], parts: set) -> dict[str, dict]:
+    return {p: m for p, m in files.items() if m.get("partition", "") in parts}
+
+
 def _footer_minmax(md, cols: list[str]) -> dict[str, list]:
     """{col: [min, max]} from one parquet footer's row-group stats. A
     column whose stats are missing, or whose min/max is not a JSON-safe
@@ -132,26 +141,6 @@ def _scan_written(
     tmp.replace(side)
     out["bloom"] = True
     return out
-
-
-class _SegPred:
-    """Engine-generated partition predicate evaluable ON THE DRIVER:
-    `fn(partition_path) -> bool` with exact-segment semantics (what
-    _auto_partition_filter's Column form expressed). Composes under
-    & / | like a Column, so the auto-routing conjunction code is
-    form-agnostic; _prune_files recognizes it and skips the per-read
-    Spark evaluation job."""
-
-    __slots__ = ("fn",)
-
-    def __init__(self, fn):
-        self.fn = fn
-
-    def __and__(self, other: "_SegPred") -> "_SegPred":
-        return _SegPred(lambda p, a=self.fn, b=other.fn: a(p) and b(p))
-
-    def __or__(self, other: "_SegPred") -> "_SegPred":
-        return _SegPred(lambda p, a=self.fn, b=other.fn: a(p) or b(p))
 
 
 class PreCommitValidationError(RuntimeError):
@@ -1175,86 +1164,54 @@ class Engine:
         point_prune: tuple | None = None,
         where: str | Column | None = None,
     ) -> DataFrame:
-        """Snapshot read (S1/S2); `as_of` time-travels; `read_optimized`
-        skips MOR deltas; `partition_filter` prunes the file list at
-        metadata level (a predicate on the partition path string).
-        `range_filter=(col, lo, hi)` — or a LIST of such tuples for
-        multi-dimensional predicates (the z-order read path) — applies
-        `lo <= col <= hi` AND skips files whose clustered col-stats
-        range cannot overlap — exact results whether or not the table
-        was ever clustered (files without stats are always scanned).
-        `point_filter=(col, values)` applies `col IN values`; when a
-        secondary index exists on `col` (Hudi 1.0 CREATE INDEX —
-        `create_index`), the scan is pruned to the partitions the index
-        maps those values to, falling back to col-stats skipping
-        otherwise. `point_prune=(col, values)` applies the SAME file
-        pruning but NO row filter — for callers that join/semi-join on
-        the probed identity next (derived-view maintenance), where a
-        thousands-of-literals IN expression would only bloat the plan.
-        `func_filter=(index_name, lo, hi)` applies
-        `lo <= expr <= hi` for a functional index's expression
-        (`create_functional_index`), skipping base files whose recorded
-        expression range cannot overlap (deltas/unindexed files always
-        scanned). `where` applies an arbitrary row predicate AND
-        auto-routes its simple forms (`col = lit` / `col IN (...)` /
-        `col BETWEEN lo AND hi`) through whichever pruning the table
-        serves — partition-path matching for partition columns,
-        secondary-index point probes, col-stats range skipping — the
-        same auto-routing DML gets; complex predicates still filter
-        correctly, just unpruned."""
+        """Snapshot read (S1/S2). `as_of` time-travels to an instant;
+        `query_type="read_optimized"` skips MOR deltas.
+
+        The other arguments are predicates:
+
+        - `partition_filter`: any predicate on `_hoodie_partition_path`;
+          it prunes files only, rows are not filtered.
+        - `point_filter=(col, values)`: `col IN values`.
+        - `point_prune=(col, values)`: the same file pruning with no row
+          filter, for callers that join on the probed identity next
+          (derived-view maintenance), where a thousands-of-literals IN
+          would only bloat the plan.
+        - `range_filter=(col, lo, hi)`, or a list of such tuples (the
+          z-order read path): `lo <= col <= hi`.
+        - `func_filter=(index_name, lo, hi)`: `lo <= expr <= hi` on a
+          functional index's expression; None is an open bound.
+        - `where`: any row predicate. A string is also routed by
+          `_where_probes` into partition, point and range probes; what
+          the router cannot parse still filters rows, unpruned.
+
+        All of them prune the file list in ONE ordered pass
+        (`_prune_pass`) where every probe composes and none wins over
+        another: partition, record-key ranges / record index, secondary
+        index, col stats, functional index. Each pruner keeps the files
+        it knows nothing about, so pruning never changes the rows."""
         cfg = self._resolve(table)
-        if where is not None:
-            if partition_filter is None:
-                partition_filter = self._auto_partition_filter(cfg, where)
-            if point_filter is None and partition_filter is None:
-                point_filter = self._auto_point_filter(cfg, where)
-            if (
-                range_filter is None
-                and partition_filter is None
-                and point_filter is None
-            ):
-                range_filter = self._auto_range_filter(cfg, where)
-        tl = Timeline(cfg.path)
-        files = tl.live_files(as_of)
-        if query_type == "read_optimized":
-            files = {p: m for p, m in files.items() if m.get("kind") != "delta"}
-        if partition_filter is not None:
-            # honored for unpartitioned tables too (partition path is ""):
-            # silently ignoring it would widen a caller's delete/update
-            # scope to the whole table.
-            files = self._prune_files(files, partition_filter)
-        ranges = None
-        if range_filter is not None:
-            ranges = (
-                list(range_filter)
-                if isinstance(range_filter, list)
-                else [range_filter]
-            )
-            for rf in ranges:
-                files = self._prune_by_stats(files, *rf)
-                if as_of is None:  # index is current-state; see point_filter
-                    files = self._secondary_range_prune(cfg, files, *rf)
-        if point_prune is not None:
-            pcol, pvals = point_prune
-            pvals = (
-                list(pvals)
-                if isinstance(pvals, (list, tuple, set))
-                else [pvals]
-            )
-            files = self._point_prune_files(cfg, files, pcol, pvals, as_of)
-        if point_filter is not None:
-            pcol, pvals = point_filter
-            pvals = list(pvals) if isinstance(pvals, (list, tuple, set)) else [pvals]
-            files = self._point_prune_files(cfg, files, pcol, pvals, as_of)
-        func_expr = None
+        ranges = (
+            range_filter if isinstance(range_filter, list)
+            else [] if range_filter is None else [range_filter]
+        )
+        probes = [("range", *r) for r in ranges] + [
+            ("point", p[0], _values(p[1]))
+            for p in (point_filter, point_prune) if p is not None
+        ]
+        func = None
         if func_filter is not None:
             fname, flo, fhi = func_filter
             fidx = self._functional_index(cfg, fname)
             if fidx is None:
                 raise ValueError(f"no functional index named {fname!r}")
-            func_expr = fidx.expr
-            if fidx.usable():
-                files = fidx.prune(files, flo, fhi)
+            func = (fidx, flo, fhi)
+        files = Timeline(cfg.path).live_files(as_of)
+        if query_type == "read_optimized":
+            files = {p: m for p, m in files.items() if m.get("kind") != "delta"}
+        files = self._prune_pass(
+            cfg, files, probes + self._where_probes(cfg, where),
+            partition_filter, func, as_of,
+        )
         has_delta = any(m.get("kind") == "delta" for m in files.values())
         df = self._read_files(cfg, files)
         if cfg.table_type == MOR and query_type == "snapshot" and has_delta:
@@ -1263,16 +1220,12 @@ class Engine:
             df = df.filter(~F.coalesce(F.col(DELETED_META), F.lit(False))).drop(
                 DELETED_META
             )
-        if ranges is not None:
-            for col, lo, hi in ranges:
-                df = df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
+        for col, lo, hi in ranges:
+            df = df.filter(F.col(col).between(lo, hi))
         if point_filter is not None:
-            pcol, pvals = point_filter
-            pvals = list(pvals) if isinstance(pvals, (list, tuple, set)) else [pvals]
-            df = df.filter(F.col(pcol).isin(pvals))
-        if func_expr is not None:
-            _, flo, fhi = func_filter
-            e = F.expr(func_expr)
+            df = df.filter(F.col(point_filter[0]).isin(_values(point_filter[1])))
+        if func is not None:
+            e = F.expr(fidx.expr)
             if flo is not None:
                 df = df.filter(e >= F.lit(flo))
             if fhi is not None:
@@ -1280,6 +1233,73 @@ class Engine:
         if where is not None:
             df = df.filter(_as_cond(where))
         return df
+
+    def _prune_pass(
+        self,
+        cfg: TableConfig,
+        files: dict[str, dict],
+        probes: list[tuple],
+        partition_filter,
+        func: tuple | None,
+        as_of: str | None,
+    ) -> dict[str, dict]:
+        """`read`'s one ordered file-pruning pass. `probes` are
+        `_where_probes` tuples; `func` is (functional index, lo, hi).
+
+        1. partition: `partition_filter` (evaluated over the distinct
+           paths), then partition-segment probes;
+        2. point probes on `_hoodie_record_key`: the record-level index
+           on current-state reads of global tables, then per-file key
+           ranges (per-file facts, valid for time travel too);
+        3. secondary index on point and range probes, current-state
+           reads only: the index may lack values that existed
+           historically;
+        4. col stats on point and range probes;
+        5. the functional index.
+
+        When the remaining files hold any delta (a MOR snapshot; a
+        read-optimized read has none), layers 4 and 5 keep every file:
+        their ranges describe one file version, and a row's current
+        version may sit in a delta they would skip, leaving the stale
+        base row (or, with an out-of-order preCombine, a stale delta row
+        that DML would then tombstone). Layers 1-3 are partition- or
+        key-grained, so a key's base and deltas survive them together."""
+        if partition_filter is not None:
+            # honored for unpartitioned tables too (partition path is ""):
+            # silently ignoring it would widen a caller's delete/update
+            # scope to the whole table.
+            files = self._prune_files(files, partition_filter)
+        for kind, col, *arg in probes:
+            if kind == "part":
+                files = self._prune_segments(cfg, files, col, *arg)
+        ridx = self._record_index(cfg) if as_of is None else None
+        for kind, col, *arg in probes:
+            if kind != "point" or col != RECORD_KEY_META:
+                continue
+            if ridx is not None and ridx.usable():
+                kdf = _rows_df(
+                    self.spark, [(str(v),) for v in arg[0]],
+                    f"{RECORD_KEY_META} string",
+                )
+                files = _in_partitions(files, ridx.lookup_partitions(kdf))
+            files = self._prune_by_key_ranges(files, arg[0])
+        for kind, col, *arg in probes if as_of is None else []:
+            if kind == "range":
+                files = self._secondary_range_prune(cfg, files, col, *arg)
+            elif kind == "point":
+                idx = self._secondary_index(cfg, col)
+                if idx is not None and idx.usable():
+                    files = _in_partitions(files, idx.lookup_partitions(arg[0]))
+        if any(m.get("kind") == "delta" for m in files.values()):
+            return files
+        for kind, col, *arg in probes:
+            if kind == "point":
+                files = self._prune_by_stats_set(files, col, *arg)
+            elif kind == "range":
+                files = self._prune_by_stats(files, col, *arg)
+        if func is not None and func[0].usable():
+            files = func[0].prune(files, *func[1:])
+        return files
 
     # types whose `cast(cast(x as string) as T)` round-trip is exact in
     # Spark — the secondary index stores values as cast-to-string, so a
@@ -1311,10 +1331,9 @@ class Engine:
             return files
         if not isinstance(dt, self._RANGE_CASTABLE):
             return files
-        hit = idx.lookup_partitions_range(lo, hi, dt.simpleString())
-        return {
-            p: m for p, m in files.items() if m.get("partition", "") in hit
-        }
+        return _in_partitions(
+            files, idx.lookup_partitions_range(lo, hi, dt.simpleString())
+        )
 
     @staticmethod
     def _prune_by_stats(
@@ -1335,48 +1354,6 @@ class Engine:
                     pass
             out[p] = m
         return out
-
-    def _point_prune_files(
-        self,
-        cfg: TableConfig,
-        files: dict[str, dict],
-        pcol: str,
-        pvals: list,
-        as_of: str | None,
-    ) -> dict[str, dict]:
-        """Shared file pruning for a `col IN values` probe — the read
-        path behind both point_filter (prune + row filter) and
-        point_prune (prune only). RECORD_KEY_META probes ride the
-        per-file key ranges (valid for time-travel too — ranges are
-        per-file facts) plus the record-level index on current-state
-        reads of global tables; other columns ride a secondary index
-        when declared (current-state only — the index may lack values
-        that existed historically), else sorted-probe col-stats
-        skipping."""
-        if pcol == RECORD_KEY_META:
-            if as_of is None:
-                ridx = self._record_index(cfg)
-                if ridx is not None and ridx.usable():
-                    kdf = _rows_df(self.spark, 
-                        [(str(v),) for v in pvals],
-                        f"{RECORD_KEY_META} string",
-                    )
-                    hit = ridx.lookup_partitions(kdf)
-                    files = {
-                        p: m
-                        for p, m in files.items()
-                        if m.get("partition", "") in hit
-                    }
-            return self._prune_by_key_ranges(files, pvals)
-        idx = self._secondary_index(cfg, pcol) if as_of is None else None
-        if idx is not None and idx.usable():
-            hit = idx.lookup_partitions(pvals)
-            return {
-                p: m
-                for p, m in files.items()
-                if m.get("partition", "") in hit
-            }
-        return self._prune_by_stats_set(files, pcol, pvals)
 
     @staticmethod
     def _prune_by_stats_set(
@@ -1437,26 +1414,38 @@ class Engine:
         """Metadata-level partition pruning: evaluate the predicate on
         the distinct partition-path strings, keep matching files. At
         100 TB this is the difference between scanning the table and
-        scanning one partition. Engine-generated predicates
-        (_auto_partition_filter) arrive as _SegPred and evaluate on the
-        driver — no Spark job for the common `col = lit` / `IN` DML and
-        index-probe reads (~0.3 s of fixed overhead each otherwise);
-        arbitrary user str/Column predicates keep the Spark evaluation."""
+        scanning one partition."""
         pps = sorted({m.get("partition", "") for m in files.values()})
-        if isinstance(partition_filter, _SegPred):
-            keep = {p for p in pps if partition_filter.fn(p)}
-        else:
-            pdf = _rows_df(self.spark, 
-                [(p,) for p in pps],
-                T.StructType(
-                    [T.StructField(PARTITION_PATH_META, T.StringType())]
-                ),
-            )
-            keep = {
-                r[0]
-                for r in pdf.filter(_as_cond(partition_filter)).collect()
-            }
-        return {p: m for p, m in files.items() if m.get("partition", "") in keep}
+        pdf = _rows_df(
+            self.spark,
+            [(p,) for p in pps],
+            T.StructType(
+                [T.StructField(PARTITION_PATH_META, T.StringType())]
+            ),
+        )
+        return _in_partitions(
+            files,
+            {r[0] for r in pdf.filter(_as_cond(partition_filter)).collect()},
+        )
+
+    @staticmethod
+    def _prune_segments(
+        cfg: TableConfig, files: dict[str, dict], col: str, vals: list
+    ) -> dict[str, dict]:
+        """Partition pruning for `col IN vals` on a partition column, on
+        the driver (no Spark job): keep files whose path holds the exact
+        segment, `col=value` hive-style and positional otherwise, so a
+        value that prefixes another never over-matches."""
+        want = {f"{col}={v}" if cfg.hive_style else str(v) for v in vals}
+        i = cfg.partition_fields.index(col)
+
+        def hit(pp: str) -> bool:
+            segs = pp.split("/")
+            if cfg.hive_style:
+                return not want.isdisjoint(segs)
+            return i < len(segs) and segs[i] in want
+
+        return {p: m for p, m in files.items() if hit(m.get("partition", ""))}
 
     @staticmethod
     def _is_global(cfg: TableConfig) -> bool:
@@ -1639,280 +1628,119 @@ class Engine:
             raise ValueError(f"no such column: {col}")
         idx.build(snap.select(col, PARTITION_PATH_META))
 
-    _EQ_COND = re.compile(r"^\s*`?(\w+)`?\s*=\s*(?:'([^']*)'|(-?\d+))\s*$")
-    _IN_COND = re.compile(r"^\s*`?(\w+)`?\s+in\s*\(([^()]*)\)\s*$", re.I)
-    _LIT = re.compile(r"^(?:'([^']*)'|(-?\d+))$")
+    _LIT = r"(?:'([^'\\]*)'|(-?\d+))"
+    _EQ_COND = re.compile(rf"^`?(\w+)`?\s*=\s*{_LIT}$")
+    _IN_COND = re.compile(r"^`?(\w+)`?\s+in\s*\(([^()]*)\)$", re.I)
     _BETWEEN_COND = re.compile(
-        r"^\s*`?(\w+)`?\s+between\s+(?:'([^']*)'|(-?\d+))"
-        r"\s+and\s+(?:'([^']*)'|(-?\d+))\s*$",
-        re.I,
+        rf"^`?(\w+)`?\s+between\s+{_LIT}\s+and\s+{_LIT}$", re.I
     )
-    # the expanded spelling of BETWEEN: col >= lo AND col <= hi
-    _RANGE_CONJ = re.compile(
-        r"^\s*`?(\w+)`?\s*>=\s*(?:'([^']*)'|(-?\d+))"
-        r"\s+and\s+`?(\w+)`?\s*<=\s*(?:'([^']*)'|(-?\d+))\s*$",
-        re.I,
+    _BOUND_COND = re.compile(rf"^`?(\w+)`?\s*(>=|<=)\s*{_LIT}$")
+    _TOKEN = re.compile(
+        r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`|[()\[\]]|\w+", re.S
     )
 
-    def _auto_point_filter(self, cfg: TableConfig, condition) -> tuple | None:
-        """(col, values) when `condition` is a simple ``col = lit`` /
-        ``col IN (lits)`` on a secondary-indexed column — lets DML
-        (delete/update) prune its match scan through the index without
-        the caller saying so. Conservative about literal typing: the
-        index stores values via Spark's cast-to-string, so only quoted
-        strings (exact) and bare integers against integer-typed columns
-        (exact decimal form) are auto-routed; anything else (floats,
-        expressions) returns None and the DML scans normally — a probe
-        that stringifies differently than the stored cast would MISS
-        partitions, which for DML means lost rows, so the gate errs
-        hard toward None."""
-        if not isinstance(condition, str):
-            return None
-        from hudi_demo_spark.engine import secondary_index as si
-
-        cols = set(si.indexed_columns(cfg))
-        if not cols:
-            return None
-
-        def lit_value(col: str, quoted, num):
-            schema = self._stored_schema(cfg)
-            if schema is None:
-                return None
-            try:
-                dt = schema[col].dataType
-            except KeyError:
-                return None
-            if quoted is not None:
-                # a quoted literal against a non-string column matches
-                # rows under Spark's coercion ('05' = 5) but the index
-                # stores the cast-to-string form ('5') — probing with
-                # the raw string would prune to zero files and silently
-                # lose the DML's rows, so only string columns qualify
-                return quoted if isinstance(dt, T.StringType) else None
-            if isinstance(
-                dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)
-            ):
-                return num
-            return None
-
-        m = self._EQ_COND.match(condition)
-        if m and m.group(1) in cols:
-            v = lit_value(m.group(1), m.group(2), m.group(3))
-            return (m.group(1), [v]) if v is not None else None
-        m = self._IN_COND.match(condition)
-        if m and m.group(1) in cols:
-            vals = []
-            for part in m.group(2).split(","):
-                mm = self._LIT.match(part.strip())
-                if not mm:
-                    return None
-                v = lit_value(m.group(1), mm.group(1), mm.group(2))
-                if v is None:
-                    return None
-                vals.append(v)
-            return (m.group(1), vals) if vals else None
-        # AND-conjunction: the full condition implies each conjunct, so
-        # routing the first parsed one prunes a superset (the caller
-        # still applies the full row predicate)
-        parts = self._routable_conjuncts(condition)
-        if len(parts) > 1:
-            for c in parts:
-                r = self._auto_point_filter(cfg, c)
-                if r is not None:
-                    return r
-        return None
-
-    @staticmethod
-    def _routable_conjuncts(condition) -> list[str]:
-        """Pieces of an AND-conjunction that may be routed to pruning
-        INDIVIDUALLY: the full condition implies each conjunct, so
-        pruning (or row-filtering) by any parsed conjunct keeps a
-        superset of the matches — unparsed conjuncts are simply
-        skipped. Returns [] when routing is unsafe: a TOP-LEVEL OR
-        binds looser than AND, so a conjunct-based prune would drop
-        the other disjunct's rows (lost DML). The OR detector is
-        quote/paren-aware and matches the keyword on word boundaries
-        across any whitespace; a split landing inside a quoted literal
-        yields pieces that cannot fully match the anchored routing
-        regexes, so it degrades to no pruning, never a wrong prune."""
+    @classmethod
+    def _routable_conjuncts(cls, condition) -> list[str]:
+        """Top-level AND-conjuncts of `condition`: the full condition
+        implies each one, so pruning by any parsed conjunct keeps a
+        superset of the matches, and unparsed ones are simply skipped.
+        Returns [] when routing is unsafe: a TOP-LEVEL OR binds looser
+        than AND, so a conjunct-based prune would drop the other
+        disjunct's rows (lost DML). Quoted literals and identifiers
+        (backslash escapes included) are single tokens here, and
+        parenthesised groups and CASE ... END nest, so neither OR
+        detection nor the split ever lands inside them; the AND of a
+        `BETWEEN lo AND hi` is not a split point. Unbalanced nesting
+        (say, a bare column named `end`) also returns []."""
         if not isinstance(condition, str):
             return []
-        depth, quote = 0, None
-        low = condition.lower()
-        for i, ch in enumerate(condition):
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch in "([":
+        parts, start, depth, between = [], 0, 0, False
+        for m in cls._TOKEN.finditer(condition):
+            tok = m.group().lower()
+            if tok in ("(", "[", "case"):
                 depth += 1
-            elif ch in ")]":
+            elif tok in (")", "]", "end"):
                 depth -= 1
-            elif (
-                depth == 0
-                and low.startswith("or", i)
-                and (i == 0 or not (low[i - 1].isalnum() or low[i - 1] == "_"))
-                and (
-                    i + 2 >= len(low)
-                    or not (low[i + 2].isalnum() or low[i + 2] == "_")
-                )
-            ):
+                if depth < 0:
+                    return []
+            elif depth:
+                continue
+            elif tok == "or":
                 return []
-        return re.split(r"\s+and\s+", condition, flags=re.I)
+            elif tok == "between":
+                between = True
+            elif tok == "and" and between:
+                between = False
+            elif tok == "and":
+                parts.append(condition[start:m.start()].strip())
+                start = m.end()
+        return [] if depth else parts + [condition[start:].strip()]
 
-    def _auto_partition_filter(self, cfg: TableConfig, condition):
-        """partition-path predicate (a Column over `_hoodie_partition_path`)
-        when `condition` is a simple ``col = lit`` / ``col IN (lits)`` on
-        a PARTITION column — lets reads and DML prune the file list to
-        the named partitions without the caller spelling the path
-        syntax. Same conservative literal-typing gate as
-        `_auto_point_filter`: partition paths store the cast-to-string
-        column value, so only quoted strings against string columns and
-        bare integers against integral columns are routed — a coerced
-        literal could stringify differently and silently prune matching
-        partitions (lost DML rows). Pruning matches the exact path
-        SEGMENT (`col=value` hive-style, positional otherwise), so a
-        value that prefixes another never over-matches. AND-conjunctions
-        route each parsed conjunct (`_routable_conjuncts`)."""
-        if not isinstance(condition, str) or not cfg.partition_fields:
-            return None
-        parts = self._routable_conjuncts(condition)
-        if not parts:
-            return None
-        if len(parts) > 1:
-            preds = [
-                p
-                for p in (
-                    self._auto_partition_filter(cfg, c) for c in parts
-                )
-                if p is not None
-            ]
-            if not preds:
-                return None
-            out = preds[0]
-            for p in preds[1:]:
-                out = out & p
-            return out
-        schema = self._stored_schema(cfg)
+    def _where_probes(self, cfg: TableConfig, where) -> list[tuple]:
+        """The one where-router: the typed pruning probes a `where`
+        string implies, for `read`'s prune pass.
+
+        - ``("part", col, vals)``: ``col = lit`` / ``col IN (lits)`` on a
+          partition column, a partition-segment probe;
+        - ``("point", col, vals)``: the same shapes on any other column;
+          the pass decides between key ranges, secondary index and col
+          stats;
+        - ``("range", col, lo, hi)``: ``col BETWEEN lo AND hi``, or a
+          ``col >= lo`` and a ``col <= hi`` conjunct on one column.
+
+        Every probe is implied by the full condition (see
+        `_routable_conjuncts`); the caller still applies it as the row
+        filter. Literal typing is conservative because partition paths
+        and the secondary index store Spark's cast-to-string form:
+        quoted literals match only string columns and bare integers
+        only integral columns, normalised with int() ('007' is stored
+        as '7'). A coerced literal ('05' against an int column) could
+        stringify differently and prune matching files: lost rows. So
+        anything else (floats, expressions) yields no probe, and an
+        empty-string or 'default' partition value neither, since both
+        are stored under the 'default' sentinel with NULL rows."""
+        from hudi_demo_spark.engine.keys import DEFAULT_PARTITION
+
+        conjuncts = self._routable_conjuncts(where)
+        schema = self._stored_schema(cfg) if conjuncts else None
         if schema is None:
-            return None
+            return []
+        types = {f.name: f.dataType for f in schema.fields}
 
-        def lit_value(col: str, quoted, num):
-            try:
-                dt = schema[col].dataType
-            except KeyError:
-                return None
+        def lit(col, quoted, num):
+            dt = types.get(col)
             if quoted is not None:
                 return quoted if isinstance(dt, T.StringType) else None
-            if isinstance(
-                dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)
-            ):
-                return num
-            return None
-
-        def seg_pred(col: str, vals: list[str]):
-            from hudi_demo_spark.engine.keys import DEFAULT_PARTITION
-
-            if any(v == "" or v == DEFAULT_PARTITION for v in vals):
-                # empty-string values are STORED under the 'default'
-                # partition sentinel (keys.partition_path_col), and a
-                # literal probe for the sentinel itself is ambiguous
-                # with NULL rows — pruning either would lose matching
-                # rows, so fall back to an unpruned scan
-                return None
-            if cfg.hive_style:
-                targets = frozenset(f"{col}={v}" for v in vals)
-                return _SegPred(
-                    lambda pp, t=targets: any(
-                        s in t for s in pp.split("/")
-                    )
-                )
-            idx = cfg.partition_fields.index(col)
-            targets = frozenset(str(v) for v in vals)
-
-            def match(pp, i=idx, t=targets):
-                segs = pp.split("/")
-                return i < len(segs) and segs[i] in t
-
-            return _SegPred(match)
-
-        m = self._EQ_COND.match(condition)
-        if m and m.group(1) in cfg.partition_fields:
-            v = lit_value(m.group(1), m.group(2), m.group(3))
-            return seg_pred(m.group(1), [v]) if v is not None else None
-        m = self._IN_COND.match(condition)
-        if m and m.group(1) in cfg.partition_fields:
-            vals = []
-            for part in m.group(2).split(","):
-                mm = self._LIT.match(part.strip())
-                if not mm:
-                    return None
-                v = lit_value(m.group(1), mm.group(1), mm.group(2))
-                if v is None:
-                    return None
-                vals.append(v)
-            return seg_pred(m.group(1), vals) if vals else None
-        return None
-
-    def _auto_range_filter(self, cfg: TableConfig, condition) -> tuple | None:
-        """(col, lo, hi) when `condition` is a simple ``col BETWEEN lit
-        AND lit`` — lets DML route range predicates through col-stats
-        skipping AND the secondary index's range probe
-        (`_secondary_range_prune`) without the caller saying so. Same
-        conservative literal-typing gate as `_auto_point_filter`: quoted
-        literals only against string columns, bare integers only against
-        integral columns — a coerced comparison could prune partitions
-        that match under Spark's coercion, losing DML rows. Routed for
-        ANY column (col-stats pruning needs no index; the index probe
-        engages when one exists)."""
-        if not isinstance(condition, str):
-            return None
-        m = self._BETWEEN_COND.match(condition)
-        if not m:
-            mc = self._RANGE_CONJ.match(condition)
-            # the conjunction spelling must reference ONE column
-            if not mc or mc.group(1) != mc.group(4):
-                # AND-conjunction: route the first conjunct that parses
-                # as a range (superset prune; caller filters fully).
-                # Skip pieces containing BETWEEN remnants: the split on
-                # ' and ' also cuts through BETWEEN ... AND ..., whose
-                # halves can't match the anchored patterns anyway.
-                parts = self._routable_conjuncts(condition)
-                if len(parts) > 1:
-                    for c in parts:
-                        r = self._auto_range_filter(cfg, c)
-                        if r is not None:
-                            return r
-                return None
-            m = mc
-        col = m.group(1)
-        schema = self._stored_schema(cfg)
-        if schema is None:
-            return None
-        try:
-            dt = schema[col].dataType
-        except KeyError:
-            return None
-
-        def lit_value(quoted, num):
-            if quoted is not None:
-                return quoted if isinstance(dt, T.StringType) else None
-            if isinstance(
-                dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)
-            ):
+            if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):
                 return int(num)
             return None
 
-        if m.re is self._RANGE_CONJ:
-            lo = lit_value(m.group(2), m.group(3))
-            hi = lit_value(m.group(5), m.group(6))
-        else:
-            lo = lit_value(m.group(2), m.group(3))
-            hi = lit_value(m.group(4), m.group(5))
-        if lo is None or hi is None:
-            return None
-        return (col, lo, hi)
+        probes, lows, highs = [], {}, {}
+        for c in conjuncts:
+            if m := self._BETWEEN_COND.match(c):
+                lo, hi = lit(m[1], m[2], m[3]), lit(m[1], m[4], m[5])
+                if lo is not None and hi is not None:
+                    probes.append(("range", m[1], lo, hi))
+                continue
+            if m := self._BOUND_COND.match(c):
+                v = lit(m[1], m[3], m[4])
+                if v is not None:
+                    (lows if m[2] == ">=" else highs)[m[1]] = v
+                continue
+            if m := self._EQ_COND.match(c):
+                vals = [lit(m[1], m[2], m[3])]
+            elif m := self._IN_COND.match(c):
+                lits = [re.fullmatch(self._LIT, v.strip()) for v in m[2].split(",")]
+                vals = [lit(m[1], *x.groups()) if x else None for x in lits]
+            else:
+                continue
+            if None in vals:
+                continue
+            if m[1] not in cfg.partition_fields:
+                probes.append(("point", m[1], vals))
+            elif not {"", DEFAULT_PARTITION} & set(vals):
+                probes.append(("part", m[1], vals))
+        return probes + [("range", c, lows[c], highs[c]) for c in lows if c in highs]
 
     def create_functional_index(
         self, table: str | TableConfig, name: str, expr: str
@@ -3526,17 +3354,9 @@ class Engine:
         cond = _as_cond(condition)
         instant = new_instant()
         tl = Timeline(cfg.path)
-        snap = self.read(
-            cfg,
-            partition_filter=(
-                partition_filter
-                if partition_filter is not None
-                else self._auto_partition_filter(cfg, condition)
-            ),
-            point_filter=self._auto_point_filter(cfg, condition),
-            range_filter=self._auto_range_filter(cfg, condition),
+        matched = self.read(
+            cfg, partition_filter=partition_filter, where=condition
         )
-        matched = snap.filter(cond)
         if cfg.table_type == MOR:
             # MOR writes delete MARKERS — no base rewrite, so the file
             # footprint is useless here; one scan materializes the
@@ -3655,21 +3475,13 @@ class Engine:
         instant = new_instant()
         tl = Timeline(cfg.path)
         assigns = {k: _as_cond(v) for k, v in set.items()}
-        auto_pf = self._auto_point_filter(cfg, where)
-        auto_rf = self._auto_range_filter(cfg, where)
-        if partition_filter is None:
-            partition_filter = self._auto_partition_filter(cfg, where)
+        matched = self.read(cfg, partition_filter=partition_filter, where=where)
         if cfg.table_type == MOR:
-            snap = self.read(
-                cfg, partition_filter=partition_filter, point_filter=auto_pf,
-            range_filter=auto_rf
-            )
-            updated = snap.filter(cond)
             # SIMULTANEOUS assignment (one projection over the pre-update
             # row, same as the COW path and SQL UPDATE semantics): a
             # sequential withColumn loop would feed later assignments
             # the already-overwritten values (SET a=b, b=a would not swap)
-            updated = updated.withColumns(dict(assigns))
+            updated = matched.withColumns(dict(assigns))
             updated = updated.withColumn(COMMIT_TIME_META, F.lit(instant))
             updated = self._conform(updated, cfg)
             added, written = self._materialize(updated, cfg, instant, "delta")
@@ -3679,11 +3491,6 @@ class Engine:
             self._secondary_append_updated(cfg, updated, set, written)
             self._maybe_compact(cfg)
             return meta
-        snap = self.read(
-            cfg, partition_filter=partition_filter, point_filter=auto_pf,
-            range_filter=auto_rf
-        )
-        matched = snap.filter(cond)
         affected_parts, hit = self._matched_scan_footprint(
             matched, cap=self._file_prune_cap(cfg)
         )

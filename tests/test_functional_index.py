@@ -59,8 +59,8 @@ def test_maintained_on_writes(engine, spark):
 
 def test_mor_merge_never_resurrects_skipped_base(engine, spark):
     """A base row whose NEW (delta) value moves out of the probed range:
-    the probe must not return the stale base version. Deltas carry no
-    entries, so they are never skipped and the merge winner is exact."""
+    the probe must not return the stale base version, nor a delta
+    version that loses the merge."""
     t = _setup(engine, spark, name="fxmor", table_type="mor")
     engine.create_functional_index(t, "fxv", "price * 2")
     # id=1: 10.0 -> 600.0 (out of [0,100] probe) via MOR delta
@@ -72,6 +72,16 @@ def test_mor_merge_never_resurrects_skipped_base(engine, spark):
     # and the moved row is findable at its new value
     got_hi = engine.read(t, func_filter=("fxv", 1100.0, 1300.0))
     assert [(r["id"], r["name"]) for r in got_hi.collect()] == [(1, "a2")]
+    # out-of-order preCombine: id=3's delta (ts 0, in range) LOSES the
+    # merge to its base (ts 1, 900.0, out of range); skipping that base
+    # would serve the losing delta row alone. Compacting first gives the
+    # base files index entries, so there is a base to skip.
+    engine.compact(t)
+    engine.upsert(
+        spark.createDataFrame([(3, "c0", 5.0, 0, "2022-01-02")], SCHEMA), t
+    )
+    got = engine.read(t, func_filter=("fxv", 0.0, 100.0))
+    assert sorted(r["id"] for r in got.collect()) == [2]
 
 
 def test_sql_ddl_and_show(engine, spark):

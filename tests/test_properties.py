@@ -564,3 +564,54 @@ def test_prepare_equals_stamp_conform(spark, tmp_path_factory):
         grows = sorted(map(str, got.collect()))
         wrows = sorted(map(str, want.collect()))
         assert grows == wrows, (tbl, keep)
+
+
+# ---------------------------------------------------------------------------
+# read pruning: the where-router's grammar, any combination
+# ---------------------------------------------------------------------------
+
+_where_atom = st.sampled_from([
+    "p = 'a'", "p = ''", "p = 'default'", "p in ('a', 'b')", "c = 3",
+    "c = '3'", "c in (1, 03)", "s = 7", "s = '07'", "f = 1.5",
+    "v between 10 and 30", "v >= 5", "v <= 60",
+    "_hoodie_record_key = '7'",
+])
+_where_conj = st.lists(_where_atom, min_size=1, max_size=3).map(" and ".join)
+_where_dnf = st.lists(_where_conj, min_size=1, max_size=2).map(" or ".join)
+_where = st.one_of(
+    _where_dnf,
+    st.tuples(_where_conj, _where_dnf).map(lambda t: f"{t[0]} and ({t[1]})"),
+)
+
+
+@given(st.lists(_where, min_size=1, max_size=4),
+       st.sampled_from(["cow", "mor"]), st.booleans())
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_pruned_read_equals_filtered_read(
+    spark, tmp_path_factory, wheres, table_type, indexed
+):
+    """A pruned read equals the unpruned read plus the filter, for any
+    predicate of the router's grammar (tests/test_prune_pass.py's
+    fixture rows), with and without a secondary index, now and as of
+    the commit before the upsert."""
+    from test_prune_pass import _ROWS, _SCHEMA, _UPSERT, _state
+
+    from hudi_demo_spark.engine import Engine
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    eng = Engine(spark, tmp_path_factory.mktemp("prune"))
+    eng.create_table(
+        "t", record_key="id", precombine="ts", partition_by="p",
+        table_type=table_type, props={"write.stats_cols": "c,v,s"},
+    )
+    eng.insert(spark.createDataFrame(_ROWS, _SCHEMA), "t")
+    if indexed:
+        eng.create_index("t", "c")
+    first = Timeline(eng._resolve("t").path).last_instant()
+    eng.upsert(spark.createDataFrame(_UPSERT, _SCHEMA), "t")
+    for w in wheres:
+        for as_of in (None, first):
+            assert _state(eng.read("t", as_of=as_of, where=w)) == _state(
+                eng.read("t", as_of=as_of).filter(w)
+            ), (w, as_of)

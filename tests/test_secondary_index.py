@@ -151,20 +151,26 @@ def test_dml_auto_routes_through_index(engine, spark):
 
 
 def test_auto_point_filter_gate(engine, spark):
-    """The auto-routing gate: floats and non-indexed columns fall back
-    to None (full scan), integer literals only for integer columns."""
+    """The where-router's literal gate: floats and integer literals
+    against a double column yield no probe (full scan), integer literals
+    only for integer columns. An existing column needs no index to get
+    a point probe: the prune pass picks the index, col stats or
+    nothing."""
     t = _setup(engine, spark, name="sxgate")
     engine.create_index(t, "city")
     engine.create_index(t, "price")  # double column
     cfg = engine._resolve(t)
-    assert engine._auto_point_filter(cfg, "city = 'paris'") == ("city", ["paris"])
-    assert engine._auto_point_filter(cfg, "city in ('a', 'b')") == (
-        "city", ["a", "b"]
-    )
-    assert engine._auto_point_filter(cfg, "price = 10") is None  # double col
-    assert engine._auto_point_filter(cfg, "price = 10.0") is None
-    assert engine._auto_point_filter(cfg, "name = 'x'") is None  # unindexed
-    assert engine._auto_point_filter(cfg, "city = 'a' or id = 1") is None
+    assert engine._where_probes(cfg, "city = 'paris'") == [
+        ("point", "city", ["paris"])
+    ]
+    assert engine._where_probes(cfg, "city in ('a', 'b')") == [
+        ("point", "city", ["a", "b"])
+    ]
+    assert engine._where_probes(cfg, "price = 10") == []  # double col
+    assert engine._where_probes(cfg, "price = 10.0") == []
+    assert engine._where_probes(cfg, "name = 'x'") == []  # no such column
+    assert engine._where_probes(cfg, "id = 1") == [("point", "id", [1])]
+    assert engine._where_probes(cfg, "city = 'a' or id = 1") == []
 
 
 @pytest.mark.parametrize("table_type", ["cow", "mor"])
@@ -232,12 +238,12 @@ def test_auto_point_filter_rejects_quoted_nonstring(engine, spark):
     engine.create_index(t, "city")
     engine.create_index(t, "ts")  # long column
     cfg = engine._resolve(t)
-    assert engine._auto_point_filter(cfg, "ts = '05'") is None
-    assert engine._auto_point_filter(cfg, "ts in ('1', '2')") is None
-    assert engine._auto_point_filter(cfg, "ts = 5") == ("ts", ["5"])
-    assert engine._auto_point_filter(cfg, "city = 'paris'") == (
-        "city", ["paris"]
-    )
+    assert engine._where_probes(cfg, "ts = '05'") == []
+    assert engine._where_probes(cfg, "ts in ('1', '2')") == []
+    assert engine._where_probes(cfg, "ts = 5") == [("point", "ts", [5])]
+    assert engine._where_probes(cfg, "city = 'paris'") == [
+        ("point", "city", ["paris"])
+    ]
     # end-to-end: coerced DML must not lose rows (falls back to scan)
     engine.update(t, set={"price": "0.0"}, where="ts = '01'")
     assert {r["price"] for r in engine.read(t).collect()} == {0.0}
@@ -298,12 +304,14 @@ def test_range_probe_string_column_and_dml_routing(engine, spark):
     t = _setup(engine, spark)
     engine.sql(f"create index idx_city on {t} using secondary_index (city)")
     cfg = engine._resolve(t)
-    # auto-routing: BETWEEN parses to a range filter with exact typing
-    assert engine._auto_range_filter(cfg, "city between 'lima' and 'paris'") \
-        == ("city", "lima", "paris")
-    assert engine._auto_range_filter(cfg, "id between 2 and 3") == ("id", 2, 3)
+    # routing: BETWEEN parses to a range probe with exact typing
+    assert engine._where_probes(cfg, "city between 'lima' and 'paris'") \
+        == [("range", "city", "lima", "paris")]
+    assert engine._where_probes(cfg, "id between 2 and 3") == [
+        ("range", "id", 2, 3)
+    ]
     # quoted literal on a non-string column: refused (coercion hazard)
-    assert engine._auto_range_filter(cfg, "id between '2' and '3'") is None
+    assert engine._where_probes(cfg, "id between '2' and '3'") == []
     # DML rides the route end-to-end and stays exact
     engine.update(t, set={"price": F.lit(99.0)},
                   where="city between 'lima' and 'paris'")
@@ -313,18 +321,20 @@ def test_range_probe_string_column_and_dml_routing(engine, spark):
 
 def test_auto_range_filter_conjunction_form(engine, spark):
     """`col >= lo and col <= hi` (the expanded BETWEEN spelling) routes
-    through the same range-filter pruning as BETWEEN; mismatched or
+    through the same range-probe pruning as BETWEEN; mismatched or
     coerced forms are refused."""
     t = _setup(engine, spark)
     cfg = engine._resolve(t)
-    assert engine._auto_range_filter(cfg, "ts >= 1 and ts <= 3") == ("ts", 1, 3)
-    assert engine._auto_range_filter(
-        cfg, "city >= 'a' and city <= 'm'"
-    ) == ("city", "a", "m")
+    assert engine._where_probes(cfg, "ts >= 1 and ts <= 3") == [
+        ("range", "ts", 1, 3)
+    ]
+    assert engine._where_probes(cfg, "city >= 'a' and city <= 'm'") == [
+        ("range", "city", "a", "m")
+    ]
     # two different columns: not a range on one column
-    assert engine._auto_range_filter(cfg, "ts >= 1 and id <= 3") is None
+    assert engine._where_probes(cfg, "ts >= 1 and id <= 3") == []
     # quoted literal on a non-string column: refused (coercion hazard)
-    assert engine._auto_range_filter(cfg, "ts >= '1' and ts <= '3'") is None
+    assert engine._where_probes(cfg, "ts >= '1' and ts <= '3'") == []
     # DML end-to-end through the conjunction route
     engine.update(t, set={"price": F.lit(7.0)},
                   where="id >= 2 and id <= 3")
@@ -333,27 +343,28 @@ def test_auto_range_filter_conjunction_form(engine, spark):
 
 
 def test_auto_point_filter_conjunctions(engine, spark):
-    """AND-conjunctions route the first parseable conjunct (superset
-    prune; the caller applies the full row predicate); a top-level OR
-    disables routing even with a routable-looking conjunct."""
+    """AND-conjunctions route every parseable conjunct (superset prune;
+    the caller applies the full row predicate), BETWEEN included; a
+    top-level OR disables routing even with a routable-looking
+    conjunct."""
     t = _setup(engine, spark, name="sxconj")
     engine.create_index(t, "city")
     cfg = engine._resolve(t)
-    assert engine._auto_point_filter(cfg, "city = 'paris' and price > 5") == (
-        "city", ["paris"]
-    )
-    assert engine._auto_point_filter(
+    assert engine._where_probes(cfg, "city = 'paris' and price > 5") == [
+        ("point", "city", ["paris"])
+    ]
+    assert engine._where_probes(
         cfg, "price > 5 and city in ('a', 'b')"
-    ) == ("city", ["a", "b"])
-    assert engine._auto_point_filter(
+    ) == [("point", "city", ["a", "b"])]
+    assert engine._where_probes(
         cfg, "city = 'paris' and price > 5 or id = 1"
-    ) is None
-    assert engine._auto_range_filter(
+    ) == []
+    assert engine._where_probes(
         cfg, "city between 'a' and 'm' and price > 5"
-    ) is None or True  # BETWEEN halves are cut by the split: no routing
-    assert engine._auto_range_filter(
+    ) == [("range", "city", "a", "m")]
+    assert engine._where_probes(
         cfg, "price > 5 and city between 'a' and 'm'"
-    ) is None  # same: conservative fallback, never a wrong route
+    ) == [("range", "city", "a", "m")]
     # but a DML with a conjunction still deletes exactly
     engine.delete(t, "city = 'tokyo' and price >= 0")
     assert engine.read(t, point_filter=("city", "tokyo")).count() == 0
