@@ -7,6 +7,9 @@ Hudi's BLOOM index stores a bloom filter over record keys in every base
 file's parquet footer and consults it during upsert tagging, after
 key-range pruning: a file whose range overlaps the batch may still be
 skippable when the filter proves none of the batch's keys are present.
+The engine consults it in the same place for every record-key probe
+(`Engine._key_probe`): write tagging (insert-dedup, upsert,
+delete_keys, merge) and record-key point reads (``keycol = lit``).
 This module is the engine analog: each filter is built by the write's
 metadata tail, in the same pyarrow open of the just-written file that
 reads its footer stats — on the driver for ordinary commits (no Spark
@@ -15,10 +18,11 @@ where each task writes its files' sidecars and the driver sees only
 acks — and persisted as a
 sidecar file under ``<table>/_index/bloom/``, mirroring the data layout.
 A filter depends only on the multiset of its file's keys, so both
-sides write the same bytes. Lookups are driver-side and vectorized
-(numpy) and only engage for small batches — the point-lookup regime
-where bloom pruning pays; large batches touch most files anyway and skip
-the sidecar reads entirely.
+sides write the same bytes. Lookups are vectorized (numpy) and only
+engage for small probes — the point-lookup regime where bloom pruning
+pays; large batches touch most files anyway and skip the sidecar reads
+entirely. They run on the driver for a few candidate files and as one
+executor job for many (`Engine._per_file`, the switch the build shares).
 
 Hashing is md5 double-hashing (``h1 + i*h2 mod m``) — engine-portable
 and identical bits on build and probe (driver or executor), with no

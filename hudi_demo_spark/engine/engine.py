@@ -28,6 +28,7 @@ import re
 import shutil
 import urllib.parse
 from contextlib import contextmanager
+from datetime import datetime, timedelta, timezone
 from functools import reduce
 from pathlib import Path
 
@@ -57,6 +58,21 @@ from hudi_demo_spark.operators.util import rows_df as _rows_df
 
 def _as_cond(cond: str | Column) -> Column:
     return F.expr(cond) if isinstance(cond, str) else cond
+
+
+def _check_key_assigns(cfg: TableConfig, assigns: dict, same=()) -> None:
+    """Refuse an assignment to a record-key field, as Hudi does: the
+    stored `_hoodie_record_key` is not recomputed on update, and the
+    record-key probes of `_where_probes` rely on it rendering the key
+    columns. `same` names the aliases whose own column (`s.id` for key
+    `id`) is an identity assignment and passes."""
+    fields = {f.lower() for f in cfg.record_key_fields or []}
+    for k, v in assigns.items():
+        ident = isinstance(v, str) and v.replace("`", "").strip().lower() in {
+            f"{a}.{k}".lower() for a in same
+        }
+        if k.lower() in fields and not ident:
+            raise ValueError(f"cannot update record key column {k}")
 
 
 def _file_instant(name: str) -> str:
@@ -141,6 +157,19 @@ def _scan_written(
     tmp.replace(side)
     out["bloom"] = True
     return out
+
+
+def _bloom_keep(root: str, rel: str, h) -> bool:
+    """False only when the bloom sidecar of data file `rel` PROVES none
+    of the probed keys (`h`: an (n, 2) uint64 array of `key_hashes`
+    pairs) are in the file. A missing or unreadable sidecar keeps the
+    file. Module-level so the executor pass can pickle it."""
+    from hudi_demo_spark.engine import bloom as B
+
+    if h is None or not len(h):
+        return True
+    bl = B.load(B.sidecar_path(root, rel))
+    return bl is None or B.might_contain_any(bl, h[:, 0], h[:, 1])
 
 
 class PreCommitValidationError(RuntimeError):
@@ -758,12 +787,14 @@ class Engine:
                 else:
                     conf.set(k, v)
 
-    # files-per-commit above which the metadata tail (footers, stats,
-    # bloom sidecars) runs executor-side: one pyarrow footer read is
-    # ~1 ms, so a driver loop is fine for ordinary commits but
-    # serializes a bulk ingest (a 1 TB commit at 128 MB targets lands
-    # ~8k files → ~8 s driver stall, growing with commit size, not
-    # cluster size)
+    # files per call from which per-file metadata work runs as ONE
+    # parallelize job instead of a driver loop (`_per_file`): the write's
+    # metadata tail (footers, stats, bloom sidecars) and the key probe's
+    # bloom step. One pyarrow footer or sidecar read is ~1 ms, so a
+    # driver loop is fine for ordinary commits and probes but serializes
+    # a bulk ingest (a 1 TB commit at 128 MB targets lands ~8k files →
+    # ~8 s driver stall, growing with commit size, not cluster size) or
+    # a probe of a uuid-keyed table whose key ranges all overlap
     _FOOTER_DISTRIBUTE_MIN = 64
     # footer rows per commit from which a tail that builds bloom sidecars
     # runs executor-side at ANY file count: hashing costs ~5 µs per key
@@ -772,22 +803,32 @@ class Engine:
     # 0.24 s on the driver vs 0.49 s as a job, 100k 0.48 s vs 0.46 s,
     # 400k 2.09 s vs 0.67 s)
     _BLOOM_BUILD_DISTRIBUTE_ROWS = 100_000
-    # same tradeoff for bloom-sidecar PROBES during upsert tagging: a few
-    # sidecars read faster on the driver than a job launches; many read
-    # in parallel on executors (serial driver IO grows with table size)
-    _BLOOM_PROBE_DISTRIBUTE_MIN = 64
+
+    def _per_file(self, fn, items: list, distribute: bool = False) -> list:
+        """[fn(x) for x in items], on the driver with no job launch, or
+        as ONE parallelize job from `_FOOTER_DISTRIBUTE_MIN` items on (or
+        when `distribute`), so the work is O(#items / cluster), not
+        O(#items) on the driver. `fn` must pickle (a module-level
+        function, or a closure over plain values) and return a few
+        scalars: bitmaps are written or read by the executors, never
+        shipped."""
+        sc = self.spark.sparkContext
+        if not distribute and len(items) < self._FOOTER_DISTRIBUTE_MIN:
+            return [fn(x) for x in items]
+        slices = min(
+            len(items), max(len(items) // 16, sc.defaultParallelism), 256
+        )
+        return sc.parallelize(items, slices).map(fn).collect()
 
     def _scan_files(
         self, files: list[tuple[str, str | None]], cols: list[str],
         props: dict,
     ) -> dict[str, dict]:
         """{path: `_scan_written` result} for (path, sidecar or None)
-        pairs, sidecars sized by the table `props`' bloom settings. Small
-        commits scan on the driver with pyarrow (no job launch); large
-        ones — by file count, or by footer rows when sidecars are built —
-        fan out as ONE parallelize job, so commit-time metadata work is
-        O(#files / cluster), not O(#files) on the driver, and bloom
-        bitmaps are written by the executors, never shipped."""
+        pairs, sidecars sized by the table `props`' bloom settings, run
+        by `_per_file`: past its file count, or past
+        `_BLOOM_BUILD_DISTRIBUTE_ROWS` footer rows when sidecars are
+        built, the commit-time metadata work is one executor job."""
         import pyarrow.parquet as pq
 
         from hudi_demo_spark.engine import bloom as B
@@ -801,20 +842,15 @@ class Engine:
             except (OSError, ValueError):  # pragma: no cover
                 return 0  # `_scan_written` reports it as rows = -1
 
-        sc = self.spark.sparkContext
-        if len(files) >= self._FOOTER_DISTRIBUTE_MIN or (
+        # footer rows are only counted below the file-count switch
+        many_keys = len(files) < self._FOOTER_DISTRIBUTE_MIN and (
             sum(rows(p) for p, side in files if side)
             >= self._BLOOM_BUILD_DISTRIBUTE_ROWS
-        ):
-            slices = min(
-                len(files), max(len(files) // 16, sc.defaultParallelism), 256
-            )
-            return dict(
-                sc.parallelize(files, slices)
-                .map(lambda f: (f[0], _scan_written(f[0], cols, f[1], fpp, cap)))
-                .collect()
-            )
-        return {p: _scan_written(p, cols, side, fpp, cap) for p, side in files}
+        )
+        return dict(self._per_file(
+            lambda f: (f[0], _scan_written(f[0], cols, f[1], fpp, cap)),
+            files, many_keys,
+        ))
 
     def _stats_cols(
         self, cfg: TableConfig, extra: list[str] | None = None
@@ -845,185 +881,164 @@ class Engine:
     def _truthy(v) -> bool:
         return str(v or "").lower() in ("1", "true", "yes")
 
-    def _bloom_prune(
+    def _key_probe(
         self,
         cfg: TableConfig,
-        candidates: dict[str, dict],
-        batch: DataFrame,
-        batch_rows: int,
-        pairs: list | None,
+        files: dict[str, dict],
+        intervals: dict,
+        n: int | None = None,
+        keys: dict | None = None,
+        batch: DataFrame | None = None,
+        current: bool = True,
     ) -> dict[str, dict]:
-        """Bloom probe (after range pruning): drop candidate base files
-        whose filter PROVES none of the batch's keys are present. Only
-        engages for small batches (`index.bloom.lookup.max_keys`, default
-        100k — JavaClientHive2Hudi.java:194's batch guidance): that is
-        the point-lookup regime where overlapping key ranges keep
-        everything and the bloom is the only thing standing between a
-        20-key upsert and a whole-partition rewrite. Files without a
-        sidecar (pre-bloom commits, external bootstrap, deltas) are kept
-        — never a false skip. `pairs` are the batch's (partition, key)
-        rows when `_tag_files` already collected them (they are then
-        hashed on the driver, ~10 ms); None hashes on the executors."""
-        from hudi_demo_spark.engine import bloom as B
+        """The one record-key pruning stage: the files that may hold one
+        of the probed keys, for write tagging (`_tag_files`), record-key
+        point reads (`_prune_pass`) and compaction's global widening
+        (`_compaction_scope`). The probed keys are `batch` (a frame with
+        `_hoodie_record_key` and `_hoodie_partition_path`) and/or `keys`
+        ({scope: [key]}), `n` of them; scopes as in `intervals`. Three
+        steps, each keeping every file it cannot rule out, so the stage
+        never changes rows:
 
-        if not self._truthy(cfg.props.get("index.bloom.enabled")):
-            return candidates
-        max_keys = int(
-            cfg.props.get("index.bloom.lookup.max_keys",
-                          B.DEFAULT_LOOKUP_MAX_KEYS)
-        )
-        if batch_rows > max_keys:
-            return candidates
-        probed = {
-            p: m
-            for p, m in candidates.items()
+        1. the record index, on a global table, for probes of the
+           current state (`current`; `as_of` reads pass False): it looks
+           up `batch`, else the keys of `keys[None]`;
+        2. key intervals: `intervals` maps a scope (a partition path, or
+           None for any partition) to [(lo, hi)] record-key intervals, a
+           point key being (k, k). A file is kept when its scope is
+           probed and one interval meets its [key_min, key_max] (sorted,
+           merged intervals + bisect: O(files · log intervals)). A None
+           bound, or a file without a key range, keeps the file;
+        3. the bloom probe of every kept base file with a sidecar, when
+           `n` is given: `_bloom_hashes` hashes the keys — only then, as
+           hashing a big batch is a Spark job — and `_bloom_keep` runs
+           per file through `_per_file`: on the driver, or as one job
+           from `_FOOTER_DISTRIBUTE_MIN` sidecars on."""
+        import bisect
+
+        probe = batch if batch is not None else (keys or {}).get(None)
+        ridx = self._record_index(cfg) if current and probe is not None else None
+        if ridx is not None and ridx.usable():
+            if isinstance(probe, list):
+                probe = _rows_df(
+                    self.spark, [(k,) for k in probe], f"{RECORD_KEY_META} string"
+                )
+            files = _in_partitions(files, ridx.lookup_partitions(probe))
+        spans: dict = {}
+        for scope, ivs in intervals.items():
+            spans[scope] = None  # unbounded: keeps every file in scope
+            if any(lo is None or hi is None for lo, hi in ivs):
+                continue
+            los, his = [], []
+            for lo, hi in sorted(ivs):
+                if his and lo <= his[-1]:
+                    his[-1] = max(his[-1], hi)
+                else:
+                    los.append(lo)
+                    his.append(hi)
+            spans[scope] = (los, his)
+        out: dict[str, dict] = {}
+        for p, m in files.items():
+            scope = None if None in spans else m.get("partition", "")
+            if scope not in spans:
+                continue
+            kmin, kmax = m.get("key_min"), m.get("key_max")
+            if spans[scope] and kmin is not None and kmax is not None:
+                los, his = spans[scope]
+                i = bisect.bisect_right(los, kmax) - 1
+                if i < 0 or his[i] < kmin:
+                    continue
+            out[p] = m
+        probed = [
+            (p, m.get("partition", ""))
+            for p, m in out.items()
             if m.get("bloom") and m.get("kind") == "base"
-        }
-        if not probed:
-            return candidates
+        ]
+        hs = (
+            self._bloom_hashes(cfg, n, keys, batch)
+            if probed and n is not None else None
+        )
+        if not hs:
+            return out
+        root = str(cfg.path)
+        keep = self._per_file(
+            lambda f: _bloom_keep(root, f[0], hs.get(None, hs.get(f[1]))),
+            probed,
+        )
+        drop = {p for (p, _), k in zip(probed, keep) if not k}
+        return {p: m for p, m in out.items() if p not in drop}
+
+    def _bloom_hashes(
+        self, cfg: TableConfig, n: int, keys: dict | None, batch=None
+    ) -> dict | None:
+        """{scope: (n, 2) uint64 `key_hashes` pairs} for `_key_probe`'s
+        bloom step, scopes as in its `intervals`. None when the table
+        keeps no blooms, or when the probe's `n` keys exceed
+        `index.bloom.lookup.max_keys` (default 100k —
+        JavaClientHive2Hudi.java:194's batch guidance): that is the
+        point-lookup regime where overlapping key ranges keep everything
+        and the bloom is the only thing standing between a 20-key upsert
+        and a whole-partition rewrite; larger batches touch most files
+        anyway. `keys` ({scope: [key]}) hash on the driver (~10 ms for a
+        summary-sized batch). With keys None the `batch` hashes on the
+        executors, vectorized in Arrow batches, and ONE bounded Arrow
+        transfer of fixed-width pairs (≤ max_keys × 16 B) comes back —
+        the driver never loops over raw keys."""
         import numpy as np
 
-        hcache: dict[str, np.ndarray] = {}
-        if pairs is not None:
-            by_part: dict[str, list[str]] = {}
-            for pp, k in dict.fromkeys((pp or "", k) for pp, k in pairs):
-                by_part.setdefault(pp, []).append(k)
-            for pp, ks in by_part.items():
-                hcache[pp] = np.array(
-                    [B.key_hashes(k) for k in ks], dtype=np.uint64
-                )
-        else:
-            # big batches hash EXECUTOR-SIDE (vectorized in Arrow
-            # batches); ONE bounded Arrow transfer of fixed-width hash
-            # pairs (≤ max_keys × 16 B) builds the probe arrays — the
-            # driver never loops over raw keys. uint64 rides the wire as
-            # two's-complement int64 (reinterpret) — Arrow longs are
-            # signed.
-            distinct_pairs = batch.select(
-                F.coalesce(
-                    F.col(PARTITION_PATH_META).cast("string"), F.lit("")
-                ).alias("__pp"),
-                F.col(RECORD_KEY_META).cast("string").alias("__k"),
-            ).distinct()
+        from hudi_demo_spark.engine import bloom as B
 
-            def _hash_pairs(it):
-                import pandas as pd
+        if not self._truthy(cfg.props.get("index.bloom.enabled")) or n > int(
+            cfg.props.get("index.bloom.lookup.max_keys",
+                          B.DEFAULT_LOOKUP_MAX_KEYS)
+        ):
+            return None
+        if keys is not None:
+            return {
+                s: np.array([B.key_hashes(k) for k in ks], dtype=np.uint64)
+                for s, ks in keys.items()
+            }
+        glob = self._is_global(cfg)
+        scope = F.coalesce(F.col(PARTITION_PATH_META).cast("string"), F.lit(""))
+        distinct_pairs = batch.select(
+            (F.lit("") if glob else scope).alias("__pp"),
+            F.col(RECORD_KEY_META).cast("string").alias("__k"),
+        ).distinct()
 
-                from hudi_demo_spark.engine import bloom as BB
-
-                for pdf in it:
-                    hs = [BB.key_hashes(k) for k in pdf["__k"]]
-                    yield pd.DataFrame(
-                        {
-                            "__pp": pdf["__pp"],
-                            "__h1": np.array(
-                                [h[0] for h in hs], dtype=np.uint64
-                            ).view(np.int64),
-                            "__h2": np.array(
-                                [h[1] for h in hs], dtype=np.uint64
-                            ).view(np.int64),
-                        }
-                    )
-
-            pairs_pdf = distinct_pairs.mapInPandas(
-                _hash_pairs, "__pp string, __h1 long, __h2 long"
-            ).toPandas()
-            for pp, g in pairs_pdf.groupby("__pp", sort=False):
-                hcache[pp] = np.stack(
-                    [
-                        g["__h1"].to_numpy().view(np.uint64),
-                        g["__h2"].to_numpy().view(np.uint64),
-                    ],
-                    axis=1,
-                )
-        glob = (
-            np.concatenate(list(hcache.values()))
-            if self._is_global(cfg) and hcache
-            else None
-        )
-        dist_min = int(
-            cfg.props.get("index.bloom.probe.distribute_min",
-                          self._BLOOM_PROBE_DISTRIBUTE_MIN)
-        )
-        if len(probed) >= dist_min:
-            kept = self._bloom_probe_distributed(cfg, probed, hcache, glob)
-        else:
-            # few sidecars: a Spark job costs more than the reads
-            kept = set()
-            for p, m in probed.items():
-                h = glob if glob is not None else hcache.get(
-                    m.get("partition", "")
-                )
-                if h is None or not len(h):
-                    kept.add(p)
-                    continue
-                bl = B.load(B.sidecar_path(cfg.path, m["path"]))
-                if bl is None or B.might_contain_any(bl, h[:, 0], h[:, 1]):
-                    kept.add(p)
-        return {
-            p: m for p, m in candidates.items() if p not in probed or p in kept
-        }
-
-    def _bloom_probe_distributed(
-        self,
-        cfg: TableConfig,
-        probed: dict[str, dict],
-        hcache: dict,
-        glob,
-    ) -> set:
-        """Fan the sidecar reads out to executors (mirror of the write
-        tail's executor-side sidecar build, `_scan_files`): candidate
-        relpaths parallelize into tasks, the batch's key-hash arrays
-        ride a broadcast (≤1.6 MB at the 100k lookup cap), each task
-        loads ITS sidecars from the shared filesystem and acks a tiny
-        (relpath, keep) row. The driver never
-        opens a sidecar — at 100 TB a point upsert whose uuid keys defeat
-        range pruning probes thousands of sidecars in parallel instead of
-        serially (JavaClientHive2Hudi.java:167-180's tagging pass is
-        likewise a distributed job in Hudi)."""
-        root = str(cfg.path)
-        bc = self.spark.sparkContext.broadcast(
-            {"by_part": hcache, "glob": glob}
-        )
-        rows = [(p, m.get("partition", "") or "") for p, m in probed.items()]
-        n_slices = min(
-            len(rows), max(self.spark.sparkContext.defaultParallelism, 1)
-        )
-        cand = _rows_df(self.spark, 
-            rows, "__p string, __pp string"
-        ).repartition(n_slices)
-
-        def _probe(it):
+        def _hash_pairs(it):
+            # uint64 rides the wire as two's-complement int64
+            # (reinterpret) — Arrow longs are signed
             import pandas as pd
 
             from hudi_demo_spark.engine import bloom as BB
 
-            d = bc.value
             for pdf in it:
-                keeps = []
-                for rel, pp in zip(pdf["__p"], pdf["__pp"]):
-                    h = d["glob"] if d["glob"] is not None else d[
-                        "by_part"
-                    ].get(pp)
-                    if h is None or not len(h):
-                        keeps.append(True)
-                        continue
-                    bl = BB.load(BB.sidecar_path(root, rel))
-                    keeps.append(
-                        bl is None
-                        or BB.might_contain_any(bl, h[:, 0], h[:, 1])
-                    )
-                yield pd.DataFrame({"__p": pdf["__p"], "__keep": keeps})
+                hs = [BB.key_hashes(k) for k in pdf["__k"]]
+                yield pd.DataFrame(
+                    {
+                        "__pp": pdf["__pp"],
+                        "__h1": np.array(
+                            [h[0] for h in hs], dtype=np.uint64
+                        ).view(np.int64),
+                        "__h2": np.array(
+                            [h[1] for h in hs], dtype=np.uint64
+                        ).view(np.int64),
+                    }
+                )
 
-        try:
-            acks = cand.mapInPandas(
-                _probe, "__p string, __keep boolean"
-            ).collect()
-        finally:
-            # a long-lived session upserts many times; leaked per-upsert
-            # broadcasts accumulate driver+executor memory
-            bc.unpersist()
-        return {r["__p"] for r in acks if r["__keep"]}
+        pairs_pdf = distinct_pairs.mapInPandas(
+            _hash_pairs, "__pp string, __h1 long, __h2 long"
+        ).toPandas()
+        return {
+            None if glob else pp: np.stack(
+                [
+                    g["__h1"].to_numpy().view(np.uint64),
+                    g["__h2"].to_numpy().view(np.uint64),
+                ],
+                axis=1,
+            )
+            for pp, g in pairs_pdf.groupby("__pp", sort=False)
+        }
 
     def _empty(self, cfg: TableConfig) -> DataFrame:
         schema = self._stored_schema(cfg) or T.StructType(
@@ -1186,9 +1201,10 @@ class Engine:
 
         All of them prune the file list in ONE ordered pass
         (`_prune_pass`) where every probe composes and none wins over
-        another: partition, record-key ranges / record index, secondary
-        index, col stats, functional index. Each pruner keeps the files
-        it knows nothing about, so pruning never changes the rows."""
+        another: partition, record keys (record index, key ranges,
+        blooms), secondary index, col stats, functional index. Each
+        pruner keeps the files it knows nothing about, so pruning never
+        changes the rows."""
         cfg = self._resolve(table)
         ranges = (
             range_filter if isinstance(range_filter, list)
@@ -1248,9 +1264,10 @@ class Engine:
 
         1. partition: `partition_filter` (evaluated over the distinct
            paths), then partition-segment probes;
-        2. point probes on `_hoodie_record_key`: the record-level index
-           on current-state reads of global tables, then per-file key
-           ranges (per-file facts, valid for time travel too);
+        2. point probes on `_hoodie_record_key`: the key-probe stage
+           (`_key_probe`), any partition — the record-level index on
+           current-state reads of global tables, then per-file key
+           ranges and blooms (per-file facts, valid for time travel too);
         3. secondary index on point and range probes, current-state
            reads only: the index may lack values that existed
            historically;
@@ -1272,17 +1289,14 @@ class Engine:
         for kind, col, *arg in probes:
             if kind == "part":
                 files = self._prune_segments(cfg, files, col, *arg)
-        ridx = self._record_index(cfg) if as_of is None else None
         for kind, col, *arg in probes:
-            if kind != "point" or col != RECORD_KEY_META:
-                continue
-            if ridx is not None and ridx.usable():
-                kdf = _rows_df(
-                    self.spark, [(str(v),) for v in arg[0]],
-                    f"{RECORD_KEY_META} string",
+            if kind == "point" and col == RECORD_KEY_META and (
+                ks := sorted({str(v) for v in arg[0] if v is not None})
+            ):
+                files = self._key_probe(
+                    cfg, files, {None: [(k, k) for k in ks]},
+                    len(ks), {None: ks}, current=as_of is None,
                 )
-                files = _in_partitions(files, ridx.lookup_partitions(kdf))
-            files = self._prune_by_key_ranges(files, arg[0])
         for kind, col, *arg in probes if as_of is None else []:
             if kind == "range":
                 files = self._secondary_range_prune(cfg, files, col, *arg)
@@ -1383,28 +1397,6 @@ class Engine:
                         continue
                 except TypeError:
                     pass
-            out[p] = m
-        return out
-
-    @staticmethod
-    def _prune_by_key_ranges(
-        files: dict[str, dict], keys: list
-    ) -> dict[str, dict]:
-        """Record-key-set file skipping: drop files whose [key_min,
-        key_max] cannot contain any probed key (sorted probe set +
-        bisect — O(files · log keys), not O(files · keys)). Files
-        without a recorded key range are kept: pruning is an
-        optimization, never a filter."""
-        import bisect
-
-        sv = sorted(str(k) for k in keys if k is not None)
-        out: dict[str, dict] = {}
-        for p, m in files.items():
-            kmin, kmax = m.get("key_min"), m.get("key_max")
-            if kmin is not None and kmax is not None and sv:
-                i = bisect.bisect_left(sv, kmin)
-                if i >= len(sv) or sv[i] > kmax:
-                    continue
             out[p] = m
         return out
 
@@ -1683,8 +1675,11 @@ class Engine:
         - ``("part", col, vals)``: ``col = lit`` / ``col IN (lits)`` on a
           partition column, a partition-segment probe;
         - ``("point", col, vals)``: the same shapes on any other column;
-          the pass decides between key ranges, secondary index and col
-          stats;
+          the pass decides between secondary index and col stats. On the
+          single record-key field the same values also probe
+          ``_hoodie_record_key`` as strings (`_key_probe`): the gate below
+          admits exactly the literals whose `str` is the key's
+          cast-to-string form (`keys.record_key_col`);
         - ``("range", col, lo, hi)``: ``col BETWEEN lo AND hi``, or a
           ``col >= lo`` and a ``col <= hi`` conjunct on one column.
 
@@ -1736,6 +1731,8 @@ class Engine:
                 continue
             if None in vals:
                 continue
+            if cfg.record_key_fields == [m[1]]:
+                probes.append(("point", RECORD_KEY_META, [str(v) for v in vals]))
             if m[1] not in cfg.partition_fields:
                 probes.append(("point", m[1], vals))
             elif not {"", DEFAULT_PARTITION} & set(vals):
@@ -2908,8 +2905,6 @@ class Engine:
         if (older_than is None) == (retain_hours is None):
             raise ValueError("pass exactly one of older_than / retain_hours")
         if older_than is None:
-            from datetime import datetime, timedelta, timezone
-
             cutoff = (
                 datetime.now(timezone.utc) - timedelta(hours=retain_hours)
             ).strftime("%Y%m%d%H%M%S%f")
@@ -3054,33 +3049,39 @@ class Engine:
             hit.add(str(rp.resolve()))
         return parts, hit
 
-    def _prune_to_matched_files(
-        self, cfg: TableConfig, affected: dict[str, dict], hit: set | None
+    def _dml_rewrite_set(
+        self, cfg: TableConfig, live: dict[str, dict], matched: DataFrame
     ) -> dict[str, dict]:
-        """Intersect a partition-granular rewrite candidate set with the
-        files the matched scan actually read; files without a matched row
-        carry forward live and un-rewritten in the commit. Safety net: if
-        the intersection empties a partition the scan matched rows in
-        (path-normalization mismatch — symlinked data dir, exotic URI
-        scheme), pruning is abandoned for the partition-granular set; a
-        silent empty prune here would commit a successful-looking no-op
-        DELETE/UPDATE and lose the DML."""
+        """The files a COW predicate DML rewrites ({} when nothing
+        matched): the `live` files of the partitions the matched scan
+        hit, narrowed to the files it read rows from; the others carry
+        forward live and un-rewritten in the commit. Without file
+        lineage, or past `write.dml.file_prune_cap` matched files, the
+        set stays partition-granular. Safety net: if the narrowing
+        empties a partition the scan matched rows in (path-normalization
+        mismatch — symlinked data dir, exotic URI scheme), it is
+        abandoned for the partition-granular set; a silent empty prune
+        here would commit a successful-looking no-op DELETE/UPDATE and
+        lose the DML."""
+        parts, hit = self._matched_scan_footprint(
+            matched, cap=self._file_prune_cap(cfg)
+        )
+        affected = {
+            p: m for p, m in live.items() if m.get("partition", "") in parts
+        }
         if hit is None:
             return affected
         data = Path(cfg.path) / DATA_DIR
-        out: dict[str, dict] = {}
-        kept_parts: set = set()
-        for p, m in affected.items():
-            ap = (
-                m.get("abs_path")
-                if m.get("kind") == "external"
-                else str(data / p)
-            )
-            if str(Path(ap).resolve()) in hit:
-                out[p] = m
-                kept_parts.add(m.get("partition", ""))
-        matched_parts = {m.get("partition", "") for m in affected.values()}
-        if matched_parts - kept_parts:
+        out = {
+            p: m
+            for p, m in affected.items()
+            if str(Path(
+                m.get("abs_path") if m.get("kind") == "external" else data / p
+            ).resolve()) in hit
+        }
+        if {m.get("partition", "") for m in affected.values()} - {
+            m.get("partition", "") for m in out.values()
+        }:
             return affected
         return out
 
@@ -3089,8 +3090,9 @@ class Engine:
         """Batch rows small enough to summarize with one collect:
         `index.bloom.hash.distribute_min` (default 20k). The prop first
         bounded the bloom probe's driver-side key hashing; it now also
-        picks `_tag_files`' key-range path on EVERY table, bloom or not,
-        and the secondary-index append shape (`_secondary_append`)."""
+        picks `_tag_files`' per-key (not per-partition) key intervals on
+        EVERY table, bloom or not, and the secondary-index append shape
+        (`_secondary_append`)."""
         return int(cfg.props.get("index.bloom.hash.distribute_min", 20_000))
 
     def _tag_files(
@@ -3101,120 +3103,40 @@ class Engine:
         (live files that may hold one of the batch's keys, batch rows).
 
         The batch is summarized by ONE bounded collect of its (partition,
-        key) rows, at most `_summary_bound` of them: the per-partition
-        key ranges, the row count and the bloom probe keys all come from
-        it, one Spark job where an aggregate plus a pair collect took
-        five. A batch past the bound falls back to the key-range
-        aggregate and executor-side bloom hashing; the discarded collect
-        then costs one job more than the aggregate alone. Then key-range
-        pruning (global: across partitions, plus the record index), then
-        the bloom probe."""
+        key) rows, at most `_summary_bound` of them: the point keys per
+        partition (any partition under the global index), the row count
+        and the bloom probe keys all come from it, one Spark job where an
+        aggregate plus a pair collect took five. A batch past the bound
+        falls back to one key interval per partition from an aggregate,
+        and executor-side bloom hashing; the discarded collect then costs
+        one job more than the aggregate alone. `_key_probe` then keeps
+        the live files that may hold a key."""
         bound = self._summary_bound(cfg)
         pairs = (
             batch.select(PARTITION_PATH_META, RECORD_KEY_META)
             .limit(bound + 1)
             .collect()
         )
+        glob = self._is_global(cfg)
         if len(pairs) <= bound:
-            ranges: dict[str, tuple[str, str]] = {}
+            keys: dict = {}
             for pp, k in pairs:
-                lo, hi = ranges.get(pp, (k, k))
-                ranges[pp] = (min(lo, k), max(hi, k))
+                keys.setdefault(None if glob else pp, set()).add(k)
+            intervals = {s: [(k, k) for k in ks] for s, ks in keys.items()}
             n_rows = len(pairs)
         else:
-            (ranges, n_rows), pairs = self._batch_key_ranges(batch), None
-        if self._is_global(cfg):
-            candidates = self._global_candidates(cfg, live, ranges, batch)
-        else:
-            candidates = self._affected_files(live, ranges)
-        return (
-            self._bloom_prune(cfg, candidates, batch, n_rows, pairs),
-            n_rows,
-        )
-
-    @staticmethod
-    def _batch_key_ranges(
-        df: DataFrame,
-    ) -> tuple[dict[str, tuple[str, str]], int]:
-        """({partition: (min_key, max_key)}, total_rows) of a batch too
-        big to collect — one aggregate, `_tag_files`' fallback."""
-        rows = (
-            df.groupBy(PARTITION_PATH_META)
-            .agg(F.min(RECORD_KEY_META), F.max(RECORD_KEY_META), F.count("*"))
-            .collect()
-        )
-        return {r[0]: (r[1], r[2]) for r in rows}, sum(r[3] for r in rows)
-
-    @staticmethod
-    def _affected_files(
-        live: dict[str, dict], ranges: dict[str, tuple[str, str]]
-    ) -> dict[str, dict]:
-        """Bloom/range-index pruning (M1): keep only live files in the
-        batch's partitions whose [key_min, key_max] can intersect the
-        batch's key range — others cannot contain colliding keys and stay
-        live untouched (file-group-scoped rewrite, not whole-partition)."""
-        out: dict[str, dict] = {}
-        for p, m in live.items():
-            pp = m.get("partition", "")
-            if pp not in ranges:
-                continue
-            kmin, kmax = m.get("key_min"), m.get("key_max")
-            bmin, bmax = ranges[pp]
-            if (
-                kmin is not None
-                and kmax is not None
-                and bmin is not None
-                and (kmax < bmin or kmin > bmax)
-            ):
-                continue
-            out[p] = m
-        return out
-
-    def _global_candidates(
-        self,
-        cfg: TableConfig,
-        live: dict[str, dict],
-        ranges: dict[str, tuple[str, str]],
-        batch: DataFrame,
-    ) -> dict[str, dict]:
-        """Global-index candidate files: key-range prune across all
-        partitions, then — when the record-level index is available —
-        scope to the partitions that actually hold the batch's keys.
-        With uuid-like keys the range prune alone keeps everything; the
-        index keeps ~#batch partitions (Hudi 0.14 RLI behavior)."""
-        out = self._affected_files_global(live, ranges)
-        idx = self._record_index(cfg)
-        if idx is not None and idx.usable():
-            parts = idx.lookup_partitions(batch)
-            out = {
-                p: m for p, m in out.items() if m.get("partition", "") in parts
-            }
-        return out
-
-    @staticmethod
-    def _affected_files_global(
-        live: dict[str, dict], ranges: dict[str, tuple[str, str]]
-    ) -> dict[str, dict]:
-        """Global-index lookup (Hudi GLOBAL_BLOOM analog): a key may live
-        in ANY partition, so candidate files are pruned by key range
-        alone, across all partitions. Base files whose [key_min, key_max]
-        cannot intersect the batch's global key range stay untouched —
-        the same footer-stats skipping as the partition-scoped path,
-        minus the partition scoping."""
-        mins = [lo for lo, _ in ranges.values() if lo is not None]
-        maxs = [hi for _, hi in ranges.values() if hi is not None]
-        if not mins:
-            return dict(live)
-        bmin, bmax = min(mins), max(maxs)
-        out: dict[str, dict] = {}
-        for p, m in live.items():
-            kmin, kmax = m.get("key_min"), m.get("key_max")
-            if kmin is not None and kmax is not None and (
-                kmax < bmin or kmin > bmax
-            ):
-                continue
-            out[p] = m
-        return out
+            rows = (
+                batch.groupBy(PARTITION_PATH_META)
+                .agg(F.min(RECORD_KEY_META), F.max(RECORD_KEY_META), F.count("*"))
+                .collect()
+            )
+            intervals, keys = {}, None
+            for pp, lo, hi, _ in rows:
+                intervals.setdefault(None if glob else pp, []).append((lo, hi))
+            n_rows = sum(r[3] for r in rows)
+        return self._key_probe(
+            cfg, live, intervals, n_rows, keys, batch
+        ), n_rows
 
     def upsert(
         self, df: DataFrame, table: str | TableConfig, batch_id: int | None = None
@@ -3379,17 +3301,10 @@ class Engine:
         # from the InMemory columnar cache, where input_file_name()
         # returns '' and the file-group prune degrades to
         # whole-partition; matched is consumed exactly once below.
-        parts, hit = self._matched_scan_footprint(
-            matched, cap=self._file_prune_cap(cfg)
-        )
-        if not parts:
+        affected = self._dml_rewrite_set(cfg, tl.live_files(), matched)
+        if not affected:
             return tl.commit(instant, tlmod.COMMIT, "delete", [], [],
                              {"rows_deleted": 0})
-        live = tl.live_files()
-        affected = {
-            p: m for p, m in live.items() if m.get("partition", "") in parts
-        }
-        affected = self._prune_to_matched_files(cfg, affected, hit)
         # SQL DELETE removes rows where cond is TRUE; rows where it is
         # NULL must survive — a bare ~cond would drop them (NULL).
         keep = self._read_files(cfg, affected).filter(
@@ -3465,12 +3380,14 @@ class Engine:
         """UPDATE ... SET ... WHERE (W3) — SparkSQLDemo.scala:69-71.
         Assignments are evaluated against the pre-update row (single
         projection). Partition columns cannot be reassigned (non-global
-        key semantics, as in the reference demos). `partition_filter`
+        key semantics, as in the reference demos), nor can record-key
+        fields (`_check_key_assigns`). `partition_filter`
         prunes the file list before the scan, as in `delete`."""
         cfg = self._resolve(table)
         for k in set:
             if k in cfg.partition_fields:
                 raise ValueError(f"cannot update partition column {k}")
+        _check_key_assigns(cfg, set)
         cond = _as_cond(where)
         instant = new_instant()
         tl = Timeline(cfg.path)
@@ -3491,17 +3408,10 @@ class Engine:
             self._secondary_append_updated(cfg, updated, set, written)
             self._maybe_compact(cfg)
             return meta
-        affected_parts, hit = self._matched_scan_footprint(
-            matched, cap=self._file_prune_cap(cfg)
-        )
-        if not affected_parts:
+        affected = self._dml_rewrite_set(cfg, tl.live_files(), matched)
+        if not affected:
             return tl.commit(instant, tlmod.COMMIT, "update", [], [],
                              {"rows_updated": 0})
-        live = tl.live_files()
-        affected = {
-            p: m for p, m in live.items() if m.get("partition", "") in affected_parts
-        }
-        affected = self._prune_to_matched_files(cfg, affected, hit)
         base = self._read_files(cfg, affected)
         out = base
         newcols = {
@@ -3563,6 +3473,19 @@ class Engine:
         set to every live file; without them the merge stays
         file-group-scoped."""
         cfg = self._resolve(table)
+        # a matched row's source and target keys are equal; an insert
+        # takes the source's key; a by-source row has only the target's
+        for same, amaps in (
+            (("s", "t"), [a for _, a in matched_clauses]
+             if matched_clauses is not None else [matched_update_set]),
+            (("s",), [v for _, v in not_matched_clauses]
+             if not_matched_clauses is not None
+             else [not_matched_insert_values]),
+            (("t",), [not_matched_by_source_update_set]),
+        ):
+            for amap in amaps:
+                if isinstance(amap, dict):
+                    _check_key_assigns(cfg, amap, same)
         instant = new_instant()
         tl = Timeline(cfg.path)
         src = self._prepare(source, cfg, instant)
@@ -4073,13 +3996,13 @@ class Engine:
             if m.get("partition", "") in delta_parts
         }
         if self._is_global(cfg):
-            dranges = {
-                p: (m.get("key_min"), m.get("key_max"))
-                for p, m in live.items()
+            dranges = [
+                (m.get("key_min"), m.get("key_max"))
+                for m in live.values()
                 if m.get("kind") == "delta"
                 and m.get("partition", "") in delta_parts
-            }
-            affected.update(self._affected_files_global(live, dranges))
+            ]
+            affected.update(self._key_probe(cfg, live, {None: dranges}))
         return affected
 
     def _requested_path(self, cfg: TableConfig, instant: str) -> Path:
@@ -4684,8 +4607,6 @@ class Engine:
         if policy == "KEEP_LATEST_COMMITS":
             keep_instants = instants[-retain_commits:] if instants else []
         elif policy == "KEEP_LATEST_BY_HOURS":
-            from datetime import datetime, timedelta
-
             def _ts(i: str) -> "datetime":
                 return datetime.strptime(i[:14], "%Y%m%d%H%M%S")
 

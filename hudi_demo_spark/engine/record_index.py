@@ -2,8 +2,8 @@
 
 Why it exists: for GLOBAL-index tables (`index.global`, see
 `Engine._is_global`) the upsert lookup must find the partition currently
-holding each incoming key. Footer key-range pruning
-(`Engine._affected_files_global`) works when keys correlate with files,
+holding each incoming key. Footer key-range pruning (the interval step
+of `Engine._key_probe`) works when keys correlate with files,
 but with uniformly distributed keys (uuids, hashes) every file's
 [key_min, key_max] spans the whole key space and the "pruned" set
 degenerates to the full table. The record index stores an explicit

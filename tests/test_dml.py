@@ -705,14 +705,25 @@ def test_ttl_partitions_by_last_touch(engine, spark):
         engine.ttl_partitions("tt")
 
 
-def test_inline_ttl_trigger(engine, spark):
+def test_inline_ttl_trigger(engine, spark, monkeypatch):
     """ttl.inline + ttl.retain_hours: every write sweeps cold
     partitions automatically (the writer-embedded table service).
     Writes with nothing expired add NO empty replacecommits."""
+    from datetime import datetime, timedelta, timezone
+
+    from hudi_demo_spark.engine import engine as E
     from hudi_demo_spark.engine.timeline import Timeline
 
-    import time as _time
+    # the clock the TTL cutoff reads, pinned: the cutoff is "now" minus
+    # the 1-second retention, whatever the inserts' own durations
+    clock = [datetime.now(timezone.utc)]
 
+    class _Pinned(datetime):
+        @classmethod
+        def now(cls, tz=None):
+            return clock[0]
+
+    monkeypatch.setattr(E, "datetime", _Pinned)
     # 1-second retention: a partition untouched for >1s is cold
     engine.create_table(
         "it", record_key="id", precombine="ts", partition_by="dt",
@@ -720,7 +731,13 @@ def test_inline_ttl_trigger(engine, spark):
                "ttl.retain_hours": str(1.0 / 3600)},
     )
     engine.insert(_mkdf(spark, [(1, "a", 1.0, 1, "2022-09-05")]), "it")
-    _time.sleep(2.0)
+    # cutoff = first instant + 1 µs: strictly between the two inserts'
+    # instants (instants are strictly increasing microsecond stamps and
+    # the second insert draws its own after the first one's commit)
+    first = Timeline(engine._resolve("it").path).last_instant()
+    clock[0] = datetime.strptime(first, "%Y%m%d%H%M%S%f").replace(
+        tzinfo=timezone.utc
+    ) + timedelta(seconds=1, microseconds=1)
     # the write itself is inside the retention window; 09-05 is not
     engine.insert(_mkdf(spark, [(2, "b", 2.0, 1, "2022-09-06")]), "it")
     assert sorted(r[4] for r in _state(engine, "it")) == ["2022-09-06"]

@@ -574,7 +574,7 @@ _where_atom = st.sampled_from([
     "p = 'a'", "p = ''", "p = 'default'", "p in ('a', 'b')", "c = 3",
     "c = '3'", "c in (1, 03)", "s = 7", "s = '07'", "f = 1.5",
     "v between 10 and 30", "v >= 5", "v <= 60",
-    "_hoodie_record_key = '7'",
+    "_hoodie_record_key = '7'", "id = 8", "id in (1, 040)",
 ])
 _where_conj = st.lists(_where_atom, min_size=1, max_size=3).map(" and ".join)
 _where_dnf = st.lists(_where_conj, min_size=1, max_size=2).map(" or ".join)

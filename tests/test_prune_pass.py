@@ -196,6 +196,9 @@ PREDICATES = [
     "p = 'b' and (c = 1 or c = 2)",
     "_hoodie_record_key = '7' and c = 3",
     "v >= 30",
+    "id = 7",
+    "id in (1, 8, 40)",
+    "id = 008 and c = 1",
 ]
 
 

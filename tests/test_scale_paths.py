@@ -119,7 +119,8 @@ def test_bloom_probe_distributed_no_driver_sidecar_reads(engine, spark,
 
 def test_bloom_probe_small_candidate_driver_path(engine, spark):
     """Under the distribute threshold the driver loop still prunes
-    correctly (hashes now arrive pre-computed from the executor pass)."""
+    correctly (the one-key batch is hashed on the driver, from the
+    tagging's batch summary)."""
     engine.create_table(
         "t", record_key="id", precombine="ts", partition_by="dt",
         props={"index.bloom.enabled": "true", "write.parallelism": "4"},
@@ -405,7 +406,9 @@ def test_dml_file_prune_cap_falls_back_partition_granular(engine, spark):
     assert got == list(range(200, 206))
 
 
-def test_prune_to_matched_files_falls_back_when_partition_emptied(engine):
+def test_dml_rewrite_set_falls_back_when_partition_emptied(
+    engine, monkeypatch
+):
     """A path-normalization mismatch (symlinked data dir, exotic URI
     scheme) must abandon pruning, not silently no-op the DML."""
     engine.create_table("pfb", record_key="id")
@@ -414,7 +417,12 @@ def test_prune_to_matched_files_falls_back_when_partition_emptied(engine):
         "f1.parquet": {"partition": ""},
         "f2.parquet": {"partition": ""},
     }
-    out = engine._prune_to_matched_files(cfg, affected, {"/no/such/file"})
+    # the matched scan hit partition "" through a path no file resolves to
+    monkeypatch.setattr(
+        engine, "_matched_scan_footprint",
+        lambda matched, cap: ({""}, {"/no/such/file"}),
+    )
+    out = engine._dml_rewrite_set(cfg, affected, None)
     assert out == affected
 
 

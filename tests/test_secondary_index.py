@@ -169,7 +169,11 @@ def test_auto_point_filter_gate(engine, spark):
     assert engine._where_probes(cfg, "price = 10") == []  # double col
     assert engine._where_probes(cfg, "price = 10.0") == []
     assert engine._where_probes(cfg, "name = 'x'") == []  # no such column
-    assert engine._where_probes(cfg, "id = 1") == [("point", "id", [1])]
+    # the single record-key field also probes the record key, as the
+    # string `record_key_col` stores
+    assert engine._where_probes(cfg, "id = 1") == [
+        ("point", "_hoodie_record_key", ["1"]), ("point", "id", [1])
+    ]
     assert engine._where_probes(cfg, "city = 'a' or id = 1") == []
 
 

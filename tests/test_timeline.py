@@ -2432,7 +2432,8 @@ def test_commit_stats_count_rows_written(engine, spark):
 
     engine.create_table("c", record_key="id", precombine="ts",
                         partition_by="dt")
-    ins = engine.insert(spark.createDataFrame(ROWS, SCHEMA), "c")
+    # one file per partition: ids 1 and 2 share a file group
+    ins = engine.insert(spark.createDataFrame(ROWS, SCHEMA).coalesce(1), "c")
     assert ins["stats"]["rows_written"] == 5 == counted("c", ins)
     up = engine.upsert(
         spark.createDataFrame(
@@ -2441,7 +2442,8 @@ def test_commit_stats_count_rows_written(engine, spark):
         ),
         "c",
     )
-    # partition 2022-11-25 is rewritten whole: ids 1, 2 and the new 6
+    # the file group holding id 1 is rewritten whole: ids 1, 2 and the
+    # new 6
     assert up["stats"]["rows_written"] == 3 == counted("c", up)
     engine.create_table("m", record_key="id", precombine="ts",
                         partition_by="dt", table_type=MOR)
