@@ -98,20 +98,62 @@ def _window_since(engine, source: str, begin: str | None):
     return end, [m for m in instants if begin is None or m["instant"] > begin]
 
 
-def _refresh_window(engine, name: str, cfg, source: str):
+def _refresh_window(
+    engine, name: str, cfg, source: str, appends: bool = False
+):
     """A single-source view's pending window on `source`: (begin, end,
-    mutated) — `mutated` when the window holds DML beyond inserts — or
-    None when there is nothing to fold. A window of table services only
-    (no row changed) advances the view's offset here."""
+    mutated, folded) — `mutated` when the window holds DML beyond
+    inserts — or None when there is nothing to fold. A window of table
+    services only (no row changed) advances the view's offset here.
+
+    `appends` marks a kind that folds insert-only windows by
+    `_append_fold`. An append that committed but died before its offset
+    was saved left its window's end on the view's timeline as a batch
+    id: the window is cut back to exactly that end and `folded` is True,
+    so the fold writes nothing and commits the source took since are
+    folded next time, not appended twice. Other kinds never carry batch
+    ids and skip that timeline parse (`folded` is False)."""
     begin = cfg.props.get(_OFFSET_PROP)
     end, window = _window_since(engine, source, begin)
     if end is None:
         return None
+    folded = False
+    if appends:
+        done = Timeline(cfg.path).committed_batch_ids()
+        hits = [i for i, m in enumerate(window) if int(m["instant"]) in done]
+        if hits:
+            window = window[: hits[-1] + 1]
+            end, folded = window[-1]["instant"], True
     data_win = _data_ops(window)
     if not data_win:
         _save_props(engine, name, {_OFFSET_PROP: end})
         return None
-    return begin, end, any(m["operation"] not in _ALLOWED for m in data_win)
+    mutated = any(m["operation"] not in _ALLOWED for m in data_win)
+    return begin, end, mutated, folded
+
+
+def _append_fold(
+    engine, name: str, df: DataFrame, end: str, folded: bool
+) -> dict | None:
+    """Fold an insert-only window that only adds new ids: a plain append
+    (Hudi's INSERT op, no key join, no file rewritten) committed under
+    batch id `int(end)`. `folded` (from `_refresh_window(appends=True)`)
+    says that append already committed — the idempotent-sink check of
+    `streaming/write.py` — so a refresh that died between this commit
+    and its offset save never appends twice. Returns the commit meta,
+    or None on a replay. File growth is bounded by the inline
+    clustering the appending kinds turn on at create time
+    (`_append_cluster`)."""
+    if folded:
+        return None
+    return engine.insert(df, name, batch_id=int(end))
+
+
+def _append_cluster(sort_cols: list[str]) -> dict:
+    """Create-time props of a kind that folds by `_append_fold`: inline
+    clustering on `sort_cols` every `cluster.inline.max_commits`
+    (default 4) commits, so appended files per partition stay bounded."""
+    return {"cluster.inline": "true", "cluster.sort_cols": ",".join(sort_cols)}
 
 
 def _view_has_data(engine, name: str) -> bool:
@@ -369,7 +411,7 @@ def refresh_rollup(engine, name: str) -> dict | None:
     win = _refresh_window(engine, name, cfg, source)
     if win is None:
         return None
-    begin, end, mutated = win
+    begin, end, mutated, _ = win
     if mutated:
         # updates/deletes in the window: additive folding would need
         # retractions — switch to PARTIAL RECOMPUTE maintenance instead
@@ -954,7 +996,7 @@ def create_filter_view(
     as documents arrive, re-score, or get deleted. Keyed by the
     source's record key; `columns` optionally projects (must include
     the key fields). Refresh with `refresh_filter_view`: insert-only
-    windows append the delta's matching rows; windows with DML
+    windows upsert the delta's matching rows; windows with DML
     re-derive exactly the CHANGED identities — a row edited out of the
     predicate leaves the view, one edited in arrives."""
     src_cfg = engine._resolve(source)
@@ -1000,7 +1042,7 @@ def refresh_filter_view(engine, name: str) -> dict | None:
     win = _refresh_window(engine, name, cfg, source)
     if win is None:
         return None
-    begin, end, mutated = win
+    begin, end, mutated, _ = win
     if not mutated:
         delta = engine.read_incremental(source, begin=begin, end=end)
         fresh = delta.drop(*meta_cols).filter(pred)

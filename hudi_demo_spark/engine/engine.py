@@ -2671,9 +2671,10 @@ class Engine:
         """Inline clustering (Hudi `hoodie.clustering.inline` +
         `...inline.max.commits`): after N write commits since the last
         clustering, rewrite into `cluster.sort_cols` order — the
-        continuous-ingest small-file + locality service. Opt-in via
-        `cluster.inline`; strategy from `cluster.strategy`
-        (linear|zorder)."""
+        continuous-ingest small-file + locality service. Runs after
+        every insert and upsert, as the reference runs its services
+        inside the write. Opt-in via `cluster.inline`; strategy from
+        `cluster.strategy` (linear|zorder)."""
         if not self._truthy(cfg.props.get("cluster.inline")):
             return
         cols = [
@@ -3171,6 +3172,7 @@ class Engine:
             )
             self._index_append(cfg, batch, written)
             self._maybe_compact(cfg)
+            self._maybe_cluster(cfg)
             self._maybe_ttl(cfg)
             return meta
         batch = batch.persist()
@@ -3256,6 +3258,7 @@ class Engine:
                 {"rows_written": written}, batch_id=batch_id,
             )
             self._index_append(cfg, batch, batch_rows if live else written)
+            self._maybe_cluster(cfg)
             self._maybe_ttl(cfg)
             return meta
         finally:

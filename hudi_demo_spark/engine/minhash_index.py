@@ -15,7 +15,12 @@ rollups/filter views/vector indexes:
   is replayable bit-for-bit by a DuckDB oracle (portable 60-bit shingle
   hash, seeded affine-mix coefficients);
 - insert-only source windows fold by signing JUST the delta (one
-  shingle explode + one groupBy over new docs — never the corpus);
+  shingle explode + one groupBy over new docs — never the corpus) and
+  APPEND its rows (`derived._append_fold`: no existing file is
+  rewritten); inline clustering on `bucket` every 4 commits keeps the
+  appended files per band partition bounded. An index created before
+  appends carries no `cluster.inline` prop and grows one file per band
+  per refresh until `cluster_index` runs;
 - source DML routes through the CDC read: changed ids re-sign from a
   key-pruned snapshot and upsert over their (id, band) keys; deleted
   ids leave the index via a keyed delete;
@@ -44,6 +49,8 @@ from hudi_demo_spark.engine.config import (
 )
 from hudi_demo_spark.engine.derived import (
     _OFFSET_PROP,
+    _append_cluster,
+    _append_fold,
     _bounded_vals,
     _pruned_read,
     _refresh_window,
@@ -136,6 +143,7 @@ def create_minhash_index(
             "mhindex.text_col": text_col,
             "mhindex.num_hashes": str(num_hashes),
             "mhindex.bands": str(bands),
+            **_append_cluster([_BUCKET_COL]),
         },
     )
 
@@ -151,25 +159,31 @@ def _params(cfg) -> tuple[str, str, int, int]:
 
 def refresh_minhash_index(engine, name: str) -> dict | None:
     """Fold source commits since the last refresh into the index.
-    Insert-only windows sign just the delta; windows with DML re-sign
-    exactly the changed ids (key-pruned snapshot read) and delete the
-    (id, band) rows of ids that left the source. Returns the last
-    commit meta, or None when the source has no new data commits."""
+    Insert-only windows sign just the delta and append it; windows with
+    DML re-sign exactly the changed ids (key-pruned snapshot read) and
+    delete the (id, band) rows of ids that left the source. Returns the
+    last commit meta, or None when the source has no new data commits
+    (or the window's append already committed)."""
     cfg = engine._resolve(name)
     source = cfg.props["mhindex.source"]
     id_col, text_col, num_hashes, bands = _params(cfg)
     meta_cols = [RECORD_KEY_META, PARTITION_PATH_META, COMMIT_TIME_META]
-    win = _refresh_window(engine, name, cfg, source)
+    win = _refresh_window(engine, name, cfg, source, appends=True)
     if win is None:
         return None
-    begin, end, mutated = win
+    begin, end, mutated, folded = win
     if not mutated:
+        # lsh_band_rows groups by id, so an id repeated in the window
+        # still appends exactly `bands` rows
         delta = engine.read_incremental(source, begin=begin, end=end)
-        out = engine.upsert(
+        out = _append_fold(
+            engine,
+            name,
             lsh_band_rows(
                 delta.drop(*meta_cols), id_col, text_col, num_hashes, bands
             ),
-            name,
+            end,
+            folded,
         )
         _save_props(engine, name, {_OFFSET_PROP: end})
         return out

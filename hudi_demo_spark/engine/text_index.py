@@ -20,7 +20,13 @@ maintained by the same incremental machinery as the other indexes:
   window's delta, the Lucene-segment-metadata analog — so no query
   ever scans a doc-length table to learn `avgdl`;
 - insert-only source windows tokenize JUST the delta (one map-side
-  explode + one (term, id) count — never the corpus);
+  explode + one (term, id) count — never the corpus) and APPEND its
+  postings (`derived._append_fold`: no existing file is rewritten);
+  inline clustering on `term` every 4 commits keeps the appended files
+  per bucket bounded and restores the term col-stats search prunes
+  by. An index created before appends carries no `cluster.inline`
+  prop and grows one file per touched bucket per refresh until
+  `cluster_text_index` runs;
 - windows with DML route through ``read_cdc(images="both")``: fresh
   postings re-tokenize the after-images, STALE postings are the
   before−after term difference per changed doc (soft-delete
@@ -57,6 +63,8 @@ from hudi_demo_spark.engine.config import (
 )
 from hudi_demo_spark.engine.derived import (
     _OFFSET_PROP,
+    _append_cluster,
+    _append_fold,
     _refresh_window,
     _save_props,
 )
@@ -150,6 +158,7 @@ def create_text_index(
             "textindex.buckets": str(buckets),
             "textindex.n_docs": "0",
             "textindex.sum_dl": "0",
+            **_append_cluster(["term"]),
         },
     )
 
@@ -189,20 +198,22 @@ def _bump_stats(engine, name: str, dn: int, ds: int, end: str) -> None:
 
 def refresh_text_index(engine, name: str) -> dict | None:
     """Fold source commits since the last refresh into the index.
-    Insert-only windows tokenize just the delta; windows with DML
-    re-derive exactly the changed docs from their CDC images and
-    tombstone vanished (term, doc) postings in the same upsert.
-    Returns the commit meta, or None when the source has no new data
-    commits (or the window's DML nets out to no image rows)."""
+    Insert-only windows tokenize just the delta and append its
+    postings; windows with DML re-derive exactly the changed docs from
+    their CDC images and tombstone vanished (term, doc) postings in the
+    same upsert. Returns the commit meta, or None when the source has
+    no new data commits (or the window's DML nets out to no image rows,
+    or the window's append already committed — its stats are folded
+    then, since they are saved with the offset the replay advances)."""
     cfg = engine._resolve(name)
     source = cfg.props["textindex.source"]
     id_col, text_col, buckets = _params(cfg)
-    win = _refresh_window(engine, name, cfg, source)
+    win = _refresh_window(engine, name, cfg, source, appends=True)
     if win is None:
         return None
-    begin, end, mutated = win
+    begin, end, mutated, folded = win
     if not mutated:
-        # persisted: feeds the postings upsert AND the scalar fold —
+        # persisted: feeds the postings append AND the scalar fold —
         # uncached, the incremental read would run twice
         delta = (
             engine.read_incremental(source, begin=begin, end=end)
@@ -210,15 +221,15 @@ def refresh_text_index(engine, name: str) -> dict | None:
             .persist()
         )
         # stats aggregate FIRST (it also populates the persist cache
-        # the upsert then reuses): engine.insert is a plain append with
-        # NO key dedup (Hudi's INSERT op semantics), so a duplicate-id
-        # insert would collide (term, id) postings AND permanently skew
-        # the folded scalars — postings self-heal on the next overwrite
-        # of the key; the table-prop stats never do. The indexed-source
-        # contract is unique ids (create_text_index already pins the
-        # key shape); enforce the in-window half of it in the SAME
-        # aggregate that folds the stats — zero extra jobs — and abort
-        # BEFORE anything is committed to the index.
+        # the append then reuses). The source's engine.insert is a
+        # plain append with NO key dedup (Hudi's INSERT op semantics),
+        # and so is the fold: a duplicate-id window would land twin
+        # (term, id) postings AND permanently skew the folded scalars.
+        # The indexed-source contract is unique ids (create_text_index
+        # already pins the key shape); enforce the in-window half of it
+        # in the SAME aggregate that folds the stats — zero extra jobs
+        # — and abort BEFORE anything is committed to the index. A
+        # replayed window runs this too: its stats were not saved.
         row = delta.agg(
             F.count("*").alias("n"),
             F.count_distinct(F.col(id_col)).alias("d"),
@@ -234,7 +245,13 @@ def refresh_text_index(engine, name: str) -> dict | None:
                 "insert, for re-ingested docs); the refresh was "
                 "aborted before any posting or stat was written"
             )
-        out = engine.upsert(postings(delta, id_col, text_col, buckets), name)
+        out = _append_fold(
+            engine,
+            name,
+            postings(delta, id_col, text_col, buckets),
+            end,
+            folded,
+        )
         delta.unpersist()
         _bump_stats(engine, name, int(row["n"]), int(row["s"]), end)
         return out

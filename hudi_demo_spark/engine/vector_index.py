@@ -236,7 +236,7 @@ def refresh_vector_index(engine, name: str) -> dict | None:
     win = _refresh_window(engine, name, cfg, source)
     if win is None:
         return None
-    begin, end, mutated = win
+    begin, end, mutated, _ = win
     if not mutated:
         delta = engine.read_incremental(source, begin=begin, end=end)
         out = engine.upsert(_assign_cells(delta.drop(*meta_cols), cfg), name)

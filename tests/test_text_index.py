@@ -333,6 +333,168 @@ def test_insert_duplicate_id_aborts_fold(engine, spark):
     assert engine.read("tix").count() == before_rows
 
 
+def _postings(engine, name="tix"):
+    return sorted(
+        tuple(r)
+        for r in engine.read(name).select("term", "doc_id", "tf", "dl").collect()
+    )
+
+
+def test_insert_only_refresh_appends(engine, spark):
+    """An insert-only window is a plain append: no existing posting file
+    is rewritten, and the index still matches the batch operator."""
+    engine.create_table("docs", record_key="doc_id")
+    engine.insert(_mk(spark, DOCS[:3]), "docs")
+    create_text_index(engine, "docs", "tix", "doc_id", "text", buckets=4)
+    first = refresh_text_index(engine, "tix")
+    engine.insert(_mk(spark, DOCS[3:]), "docs")
+    second = refresh_text_index(engine, "tix")
+    assert [first["operation"], second["operation"]] == ["insert", "insert"]
+    assert first["files_removed"] == [] and second["files_removed"] == []
+    assert _index_topk(engine, ["data", "hash"]) == _batch_topk(
+        engine, ["data", "hash"]
+    )
+
+
+@pytest.mark.parametrize("later_insert", [False, True])
+def test_crash_replay_appends_once(engine, spark, monkeypatch, later_insert):
+    """A refresh that dies after its append commits but before the
+    offset and stats are saved is replayed by the next refresh: the
+    append is not repeated and the stats are folded exactly once — also
+    when the source took more commits before the replay (the replay
+    settles just the crashed window; the next refresh folds the rest).
+    Postings and stats equal those of one clean refresh."""
+    import hudi_demo_spark.engine.text_index as tix
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    engine.create_table("docs", record_key="doc_id")
+    engine.insert(_mk(spark, DOCS[:2]), "docs")
+    create_text_index(engine, "docs", "tix", "doc_id", "text", buckets=4)
+    create_text_index(engine, "docs", "ref", "doc_id", "text", buckets=4)
+    refresh_text_index(engine, "tix")
+    engine.insert(_mk(spark, DOCS[2:4]), "docs")
+    real, crashed = tix._save_props, []
+
+    def crash_once(*a, **k):
+        if not crashed:
+            crashed.append(True)
+            raise RuntimeError("died after the index commit")
+        return real(*a, **k)
+
+    monkeypatch.setattr(tix, "_save_props", crash_once)
+    with pytest.raises(RuntimeError, match="died"):
+        refresh_text_index(engine, "tix")
+    monkeypatch.undo()
+    commits = len(Timeline(engine._resolve("tix").path).instants())
+    assert commits == 2  # the crashed window's append did commit
+    if later_insert:
+        engine.insert(_mk(spark, DOCS[4:]), "docs")
+    assert refresh_text_index(engine, "tix") is None  # the replay
+    assert len(Timeline(engine._resolve("tix").path).instants()) == commits
+    if later_insert:
+        assert refresh_text_index(engine, "tix")["files_removed"] == []
+    assert refresh_text_index(engine, "tix") is None
+    refresh_text_index(engine, "ref")
+    assert _postings(engine) == _postings(engine, "ref")
+    assert tix._stats(engine._resolve("tix")) == tix._stats(
+        engine._resolve("ref")
+    )
+
+
+def test_append_rounds_stay_bounded_by_inline_clustering(engine, spark):
+    """Eight insert + refresh rounds on a 16-bucket index: appends add
+    a file per touched bucket per round, and the inline clustering the
+    index turns on at create time (every 4 commits, on `term`) keeps
+    the files per bucket at 5 or fewer. Search equals the batch
+    operator every round, across the cluster boundaries."""
+    import random
+    from collections import Counter
+
+    from hudi_demo_spark.engine.timeline import Timeline
+    from hudi_demo_spark.operators.text import bm25_topk
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(60)]
+
+    def docs(lo, hi):
+        return _mk(
+            spark,
+            [(i, " ".join(rng.choices(vocab, k=8))) for i in range(lo, hi)],
+        )
+
+    engine.create_table("docs", record_key="doc_id")
+    engine.insert(docs(0, 200), "docs")
+    create_text_index(engine, "docs", "tix", "doc_id", "text", buckets=16)
+    refresh_text_index(engine, "tix")
+    tl = Timeline(engine._resolve("tix").path)
+    for rnd in range(8):
+        lo = 200 + 40 * rnd
+        engine.insert(docs(lo, lo + 40), "docs")
+        assert refresh_text_index(engine, "tix")["files_removed"] == []
+        per_bucket = Counter(m["partition"] for m in tl.live_files().values())
+        assert max(per_bucket.values()) <= 5, (rnd, per_bucket)
+        terms = rng.sample(vocab, 3)
+        queries = spark.createDataFrame(
+            [(0, terms)], "query_id int, terms array<string>"
+        )
+        want = sorted(
+            (r["doc_id"], r["bm25"], r["rank"])
+            for r in bm25_topk(
+                engine.read("docs").select("doc_id", "text"), queries,
+                "doc_id", "text", "query_id", "terms", k=10,
+            ).collect()
+        )
+        got = sorted(
+            tuple(r) for r in text_index_search(engine, "tix", terms).collect()
+        )
+        assert got == want, (rnd, terms)
+    ops = [m["operation"] for m in tl.instants()]
+    assert ops.count("cluster") == 2 and ops[-1] == "insert"
+
+
+def test_insert_only_refresh_job_budget(engine, spark):
+    """One insert-only refresh of a 40-doc window runs at most 3 Spark
+    jobs for the MinHash index and 6 for the text index (a 16-bucket
+    index over 200 docs, below the inline-clustering cadence). The
+    upsert fold they replaced took 6 and 9: it tagged and rewrote every
+    touched bucket file."""
+    from hudi_demo_spark.engine.minhash_index import (
+        create_minhash_index,
+        refresh_minhash_index,
+    )
+
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta",
+             "theta", "iota", "kappa"]
+
+    def docs(ids):
+        return _mk(spark, [
+            (i, " ".join(words[(i * k) % 10] for k in range(1, 9)) + f" d{i}")
+            for i in ids
+        ])
+
+    engine.create_table("docs", record_key="doc_id")
+    engine.insert(docs(range(200)), "docs")
+    create_minhash_index(engine, "docs", "mh", "doc_id", "text")
+    create_text_index(engine, "docs", "tix", "doc_id", "text")
+    refresh_minhash_index(engine, "mh")
+    refresh_text_index(engine, "tix")
+    engine.insert(docs(range(200, 240)), "docs")
+    sc = spark.sparkContext
+    for name, refresh, budget in (
+        ("mh", refresh_minhash_index, 3),
+        ("tix", refresh_text_index, 6),
+    ):
+        group = f"test_text_index:refresh_{name}"
+        sc.setJobGroup(group, "insert-only refresh")
+        try:
+            meta = refresh(engine, name)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= budget, (name, len(jobs))
+        assert meta["files_removed"] == []
+
+
 def test_xxhash64_py_matches_spark(spark):
     """The driver-side bucket twin must be bit-equal to F.xxhash64 for
     any term — search pruning reads exactly the partitions the producer

@@ -937,6 +937,33 @@ def test_inline_clustering_trigger(engine, spark):
     assert ops.count("cluster") == 1
 
 
+def test_inline_clustering_trigger_on_upserts(engine, spark):
+    """Inline clustering runs after upserts too: an upsert-only COW
+    table with `cluster.inline.max_commits=3` clusters exactly once
+    after three upserts."""
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    engine.create_table(
+        "ucl", record_key="k",
+        props={"cluster.inline": "true", "cluster.sort_cols": "v",
+               "cluster.inline.max_commits": "3"},
+    )
+
+    def b(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), F.rand(seed=int(lo)).alias("v")
+        )
+
+    tl = Timeline(engine._resolve("ucl").path)
+    for lo in (0, 50):
+        engine.upsert(b(lo, lo + 100), "ucl")
+    assert "cluster" not in [m["operation"] for m in tl.instants()]
+    engine.upsert(b(100, 200), "ucl")  # 3rd commit -> trigger
+    ops = [m["operation"] for m in tl.instants()]
+    assert ops == ["upsert"] * 3 + ["cluster"]
+    assert engine.read("ucl").count() == 200
+
+
 def test_show_partition_stats(engine, spark):
     from pyspark.sql import functions as F
 
@@ -2293,6 +2320,109 @@ def test_minhash_index_lifecycle(engine, spark):
     with pytest.raises(ValueError, match="divisible"):
         create_minhash_index(engine, "mhd", "mhbad", "doc_id", "text",
                              num_hashes=64, bands=15)
+
+
+def _minhash_ix(engine, name):
+    """(module, refresher) of a fresh minhash index `name` over the
+    source `src` (created on first use) — besides the text index, the
+    kind whose insert-only windows fold by `_append_fold`."""
+    from hudi_demo_spark.engine import minhash_index as mh
+
+    if "src" not in engine.list_tables():
+        engine.create_table("src", record_key="doc_id")
+    mh.create_minhash_index(
+        engine, "src", name, "doc_id", "text", num_hashes=8, bands=4
+    )
+    return mh, mh.refresh_minhash_index
+
+
+def _src_rows(spark, ids):
+    return spark.createDataFrame(
+        [(i, f"doc {i} says w{i % 7} w{i % 5} and w{i % 3}") for i in ids],
+        "doc_id int, text string",
+    )
+
+
+def _view_rows(engine, name):
+    df = engine.read(name)
+    cols = [c for c in df.columns if not c.startswith("_hoodie")]
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_minhash_insert_only_refresh_appends(engine, spark):
+    """An insert-only window folds as a plain append (an `insert`
+    commit that removes no file), and the index equals one built from
+    scratch over the same source."""
+    _, refresh = _minhash_ix(engine, "ix")
+    engine.insert(_src_rows(spark, range(0, 12)), "src")
+    first = refresh(engine, "ix")
+    engine.insert(_src_rows(spark, range(12, 20)), "src")
+    second = refresh(engine, "ix")
+    for meta in (first, second):
+        assert meta["operation"] == "insert"
+        assert meta["files_removed"] == []
+    _minhash_ix(engine, "ref")
+    refresh(engine, "ref")
+    assert _view_rows(engine, "ix") == _view_rows(engine, "ref")
+
+
+@pytest.mark.parametrize("later_insert", [False, True])
+def test_minhash_crash_replay_appends_once(
+    engine, spark, monkeypatch, later_insert
+):
+    """A refresh that dies after its append commits but before its
+    offset is saved is replayed by the next refresh without appending
+    again — also when the source took more commits before the replay —
+    and the view equals one clean refresh."""
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    mod, refresh = _minhash_ix(engine, "ix")
+    _minhash_ix(engine, "ref")
+    engine.insert(_src_rows(spark, range(0, 10)), "src")
+    refresh(engine, "ix")
+    engine.insert(_src_rows(spark, range(10, 16)), "src")
+    real, crashed = mod._save_props, []
+
+    def crash_once(*a, **k):
+        if not crashed:
+            crashed.append(True)
+            raise RuntimeError("died after the index commit")
+        return real(*a, **k)
+
+    monkeypatch.setattr(mod, "_save_props", crash_once)
+    with pytest.raises(RuntimeError, match="died"):
+        refresh(engine, "ix")
+    monkeypatch.undo()
+    tl = Timeline(engine._resolve("ix").path)
+    assert len(tl.instants()) == 2  # the crashed window's append did commit
+    if later_insert:
+        engine.insert(_src_rows(spark, range(16, 20)), "src")
+    assert refresh(engine, "ix") is None  # the replay: nothing appended
+    assert len(tl.instants()) == 2
+    if later_insert:
+        assert refresh(engine, "ix")["files_removed"] == []
+    assert refresh(engine, "ix") is None
+    refresh(engine, "ref")
+    assert _view_rows(engine, "ix") == _view_rows(engine, "ref")
+
+
+def test_minhash_in_window_duplicate_id_appends_bands_rows(engine, spark):
+    """A plain INSERT may repeat an id inside one window; the append
+    still lands exactly `bands` rows for it, because the banding groups
+    by id before it explodes bands."""
+    from hudi_demo_spark.engine.minhash_index import (
+        create_minhash_index,
+        refresh_minhash_index,
+    )
+
+    engine.create_table("src", record_key="doc_id")
+    create_minhash_index(
+        engine, "src", "ix", "doc_id", "text", num_hashes=8, bands=4
+    )
+    engine.insert(_src_rows(spark, [1, 2, 3, 3]), "src")
+    assert refresh_minhash_index(engine, "ix")["operation"] == "insert"
+    ids = [r["doc_id"] for r in engine.read("ix").select("doc_id").collect()]
+    assert sorted(ids) == sorted([1, 2, 3] * 4)
 
 
 def test_minhash_admission_guard(engine, spark):
