@@ -29,7 +29,11 @@ rollups/filter views/vector indexes:
   (range-layout on (band, bucket)), the probe read point-prunes by
   bucket through per-file col-stats — candidate generation reads the
   files that could hold colliding buckets, not the index, and never
-  the raw text.
+  the raw text. When the batch is signed on the driver and those files
+  are a few small base files (`Engine._read_small`), the probe reads
+  them with pyarrow and matches buckets on the driver: no Spark job
+  reads the index, and admission filters the batch by the rejected ids
+  instead of joining it.
 
 Reference parity note: this composes the engine's derived-table
 maintenance (engine/derived.py) with the MinHash family
@@ -40,6 +44,7 @@ maintenance (engine/derived.py) with the MinHash family
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
 
 from hudi_demo_spark.engine.config import (
     COMMIT_TIME_META,
@@ -57,6 +62,7 @@ from hudi_demo_spark.engine.derived import (
     _save_props,
 )
 from hudi_demo_spark.engine.timeline import Timeline
+from hudi_demo_spark.operators.util import local_relation
 from hudi_demo_spark.operators.util import rows_df as _rows_df
 from hudi_demo_spark.operators.dedup import (
     minhash_band_rows_py,
@@ -250,12 +256,23 @@ def minhash_admit(engine, name: str, batch: DataFrame) -> DataFrame:
     SAME batch never block each other (they are not indexed yet), so
     admission is deterministic given batch order. Costs one probe
     (map-side batch signatures + the col-stats-pruned index join) and
-    one broadcast-able anti-join back onto the batch."""
+    one broadcast-able anti-join back onto the batch; a probe served
+    on the driver (`minhash_probe`) names the rejected ids there, and
+    admission is a plain row filter with no join."""
     cfg = engine._resolve(name)
     id_col = cfg.props["mhindex.id_col"]
-    hits = minhash_probe(engine, name, batch).select("query_id").distinct()
-    return batch.join(
-        hits, batch[id_col] == hits["query_id"], "left_anti"
+    hits = _probe(engine, cfg, batch, prune=True)
+    if isinstance(hits, DataFrame):
+        hits = hits.select("query_id").distinct()
+        return batch.join(
+            hits, batch[id_col] == hits["query_id"], "left_anti"
+        )
+    rejected = sorted({qid for qid, _ in hits})
+    if not rejected:
+        return batch
+    # a null id matches nothing in the anti-join, so it is admitted
+    return batch.filter(
+        F.col(id_col).isNull() | ~F.col(id_col).isin(rejected)
     )
 
 
@@ -280,8 +297,36 @@ def minhash_probe(
     cluster_index). Self-id matches are excluded so a batch containing
     already-indexed docs reports only genuine cross-candidates. An
     EMPTY index (created, never refreshed) yields no candidates without
-    signing the batch — the admission guard's very first batch."""
+    signing the batch — the admission guard's very first batch.
+
+    A small batch whose pruned index read is small too
+    (`Engine._read_small`) is matched on the driver: the distinct pairs
+    come back as a LocalRelation, and no Spark job reads the index."""
     cfg = engine._resolve(name)
+    hits = _probe(engine, cfg, batch, prune)
+    if isinstance(hits, DataFrame):
+        return hits
+    id_col = _params(cfg)[0]
+    return local_relation(
+        engine.spark,
+        sorted(hits),
+        T.StructType([
+            T.StructField(
+                "query_id", batch.schema[id_col].dataType,
+                batch.schema[id_col].nullable,
+            ),
+            T.StructField(
+                "match_id", engine._stored_schema(cfg)[id_col].dataType
+            ),
+        ]),
+    )
+
+
+def _probe(engine, cfg, batch: DataFrame, prune: bool):
+    """`minhash_probe`'s candidates: its Spark plan, or — when the
+    batch was signed on the driver and `Engine._read_small` serves the
+    pruned index rows — the set of distinct (query_id, match_id)
+    pairs, matched here."""
     id_col, text_col, num_hashes, bands = _params(cfg)
     if Timeline(cfg.path).last_instant() is None:
         return batch.select(
@@ -336,20 +381,19 @@ def minhash_probe(
             ):
                 head = batch.select(id_col, text_col).take(int(stat["n"]))
                 rows = minhash_band_rows_py(head, num_hashes, bands)
-                # a few-slice Python-RDD relation (rows_df), deliberately
-                # NOT a VALUES-backed LocalRelation: the probe head is
-                # hundreds of long bucket strings, and a literal tree
-                # that size re-pays constant folding in every action's
-                # optimizer pass — interleaved A/B measured it ~1-2 s
-                # WORSE across the probe gates than the tiny RDD scan
+                if not rows:  # no doc has a shingle: nothing can match
+                    return set()
+                point = (_BUCKET_COL, sorted({r[2] for r in rows}))
+                small = engine._read_small(
+                    cfg, [("point", *point)], [id_col, _BAND_COL, _BUCKET_COL]
+                )
+                if small is not None:
+                    return _match_local(rows, small)
                 q = _rows_df(engine.spark, rows, q.schema)
-                vals = sorted({r[2] for r in rows}) or None
-                if vals is not None:
-                    point = (_BUCKET_COL, vals)
         finally:
             if ours:
                 batch.unpersist()
-    idx = engine.read(name, point_prune=point) if point else engine.read(name)
+    idx = engine.read(cfg, point_prune=point)
     return (
         idx.select(
             F.col(id_col).alias("match_id"), _BAND_COL, _BUCKET_COL
@@ -359,3 +403,23 @@ def minhash_probe(
         .select("query_id", "match_id")
         .distinct()
     )
+
+
+def _match_local(rows: list[tuple], index) -> set[tuple]:
+    """The distinct (query_id, match_id) pairs of the driver-signed
+    band `rows` and the pyarrow `index` rows (id, band, bucket) that
+    share a (band, bucket) — `_probe`'s join on the driver. A null id
+    on either side pairs with nothing, as `query_id != match_id` is
+    null there in the Spark plan."""
+    by_bucket: dict[tuple, list] = {}
+    for qid, band, bucket in rows:
+        if qid is not None:
+            by_bucket.setdefault((band, bucket), []).append(qid)
+    ids, bands, buckets = (c.to_pylist() for c in index.columns)
+    return {
+        (qid, mid)
+        for mid, band, bucket in zip(ids, bands, buckets)
+        if mid is not None
+        for qid in by_bucket.get((band, bucket), ())
+        if qid != mid
+    }

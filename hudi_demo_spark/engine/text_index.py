@@ -42,7 +42,9 @@ maintained by the same incremental machinery as the other indexes:
   ``Σ idf(df, N) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl))``
   per doc — the exact Lucene-idf formula and rounding of
   `operators/text.bm25_score`, so the same DuckDB oracle family
-  replays it bit-for-bit.
+  replays it bit-for-bit. When the pruned postings are a few small
+  base files (`Engine._read_small`), the search reads them with
+  pyarrow and scores on the driver: no Spark job, same results.
 
 Reference parity note: composes the engine's derived-table machinery
 (engine/derived.py) with the BM25 family (operators/text.py:288) —
@@ -52,8 +54,13 @@ minhash_index.py is for `dedup_minhash_lsh`.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hudi_demo_spark.engine.config import (
     COMMIT_TIME_META,
@@ -70,6 +77,7 @@ from hudi_demo_spark.engine.derived import (
 )
 from hudi_demo_spark.functions.hashfn import xxhash64_py
 from hudi_demo_spark.functions.textfn import tokens
+from hudi_demo_spark.operators.util import local_relation
 from hudi_demo_spark.operators.util import rows_df as _rows_df
 
 _TB_COL = "tb"
@@ -82,6 +90,9 @@ _META = [RECORD_KEY_META, PARTITION_PATH_META, COMMIT_TIME_META]
 # distinct terms approach the vocabulary would keep most buckets anyway,
 # and a driver collect/broadcast of it is the actual scale hazard.
 _TOPK_COLLECT_CAP = 50_000
+# the driver search route's (df, tf, dl) score inputs, typed as the
+# Spark route's columns (count(*) is a long; tf and dl are stored long)
+_SCORE_IN = "__df long, tf long, dl long"
 
 
 def _bucket(term_col, buckets: int):
@@ -360,7 +371,13 @@ def text_index_search(
     postings; N and avgdl come from the maintained scalars — the query
     never touches the corpus, a doc-length table, or non-colliding
     postings. Scores round to `round_to` BEFORE ranking (ties then
-    break on id ascending), exactly like `operators/text.bm25_topk`."""
+    break on id ascending), exactly like `operators/text.bm25_topk`.
+
+    A small pruned read (`Engine._read_small`) is served on the
+    driver: the postings come back as a pyarrow table, scoring and the
+    top-k run in-process (`_search_local`), and the result is a
+    LocalRelation — no Spark job. Otherwise the same scoring runs as a
+    Spark plan over the pruned files."""
     cfg = engine._resolve(name)
     id_col, _, buckets = _params(cfg)
     q = sorted(set(query_terms))
@@ -373,24 +390,20 @@ def text_index_search(
     # of the index's bucket expr (no Spark job for a pure function of
     # a few query literals)
     tbs = _buckets_of(q, buckets)
-    idx = engine.read(
-        name,
-        where=f"{_TB_COL} IN ({','.join(str(t) for t in tbs)})",
-        point_filter=("term", q),
+    where = f"{_TB_COL} IN ({','.join(str(t) for t in tbs)})"
+    score = _bm25(n_docs, sum_dl, k1, b)
+    small = engine._read_small(
+        cfg,
+        engine._where_probes(cfg, where) + [("point", "term", q)],
+        ["term", id_col, "tf", "dl"],
     )
+    if small is not None:
+        return _search_local(engine, cfg, small, score, k, round_to)
+    idx = engine.read(name, where=where, point_filter=("term", q))
     dfreq = idx.groupBy("term").agg(F.count("*").alias("__df"))
-    avgdl = float(sum_dl) / float(n_docs)
-    idf = F.log(
-        (F.lit(float(n_docs)) - F.col("__df") + F.lit(0.5))
-        / (F.col("__df") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    denom = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl)
-    )
     scored = (
         idx.join(F.broadcast(dfreq), "term")
-        .withColumn("__s", idf * F.col("tf") * F.lit(k1 + 1.0) / denom)
+        .withColumn("__s", score)
         .groupBy(id_col)
         .agg(F.round(F.sum("__s"), round_to).alias("bm25"))
     )
@@ -402,6 +415,99 @@ def text_index_search(
     return (
         top.withColumn("rank", F.row_number().over(w))
         .select(id_col, "bm25", "rank")
+    )
+
+
+def _bm25(n_docs: int, sum_dl: int, k1: float, b: float):
+    """One posting's BM25 term score over its (__df, tf, dl) columns:
+    ``idf(df, N) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl))`` with the
+    Lucene idf of `operators/text.bm25_score`. Both search routes and
+    `text_index_topk` evaluate this one expression."""
+    avgdl = float(sum_dl) / float(n_docs)
+    idf = F.log(
+        (F.lit(float(n_docs)) - F.col("__df") + F.lit(0.5))
+        / (F.col("__df") + F.lit(0.5))
+        + F.lit(1.0)
+    )
+    denom = F.col("tf") + F.lit(k1) * (
+        F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl)
+    )
+    return idf * F.col("tf") * F.lit(k1 + 1.0) / denom
+
+
+def _round_half_up(x: float, digits: int) -> float:
+    """Driver twin of Spark's ``round(x, digits)`` on a double, which
+    rounds the decimal ``Double.toString(x)`` prints HALF_UP. `repr`
+    prints the shortest decimal that round-trips, so an exact ``…5``
+    tie rounds up here too. Java's string may be longer before JDK 19,
+    so the twin is pinned against F.round on 150k doubles, 50k exact
+    ties among them, in the tests. Decimal's default 28 digits hold
+    any score below 1e20 at 4 places."""
+    return float(
+        Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits), ROUND_HALF_UP)
+    )
+
+
+def _search_local(engine, cfg, postings, score, k, round_to):
+    """`text_index_search` on the driver over the pyarrow `postings`
+    (term, id, tf, dl) of the pruned files, as a LocalRelation of the
+    Spark route's schema. df(term) is counted here, and the score
+    expression is evaluated over a LocalRelation of the distinct
+    (df, tf, dl) triples: a projection over a LocalRelation is folded
+    at plan time, so it runs no job and computes the idf `log` exactly
+    as the Spark route does (Python's `math.log` differs from Java's
+    StrictMath in the last bit on some inputs). Per-doc sums, rounding
+    (`_round_half_up`) and the (bm25 desc, id asc) top-k follow."""
+    id_col = _params(cfg)[0]
+    keys = ["__df", "tf", "dl"]
+    dfreq = postings.group_by("term").aggregate([("term", "count")])
+    rows = postings.join(
+        pa.table({"term": dfreq["term"], "__df": dfreq["term_count"]}),
+        "term",
+    )
+    triples = rows.group_by(keys).aggregate([]).select(keys)
+    scored = (
+        local_relation(engine.spark, triples, _SCORE_IN)
+        .select(*keys, score.alias("__s"))
+        .collect()
+    )
+    scored = pa.Table.from_pylist(
+        [r.asDict() for r in scored],
+        triples.schema.append(pa.field("__s", pa.float64())),
+    )
+    # one thread: each doc's terms then sum in the same order every run
+    docs = rows.join(scored, keys, use_threads=False).group_by(
+        id_col, use_threads=False
+    ).aggregate([("__s", "sum")])
+    docs = docs.take(
+        pc.sort_indices(docs, sort_keys=[("__s_sum", "descending")])
+    )
+    if docs.num_rows > k:
+        # rounding is monotone: a doc whose sum lies a full rounding
+        # unit below the k-th largest cannot round up to its score
+        kth = _round_half_up(docs["__s_sum"][k - 1].as_py(), round_to)
+        docs = docs.filter(
+            pc.greater_equal(docs["__s_sum"], kth - 10.0 ** -round_to)
+        )
+    top = sorted(
+        (
+            (_round_half_up(s, round_to), i)
+            for s, i in zip(
+                docs["__s_sum"].to_pylist(), docs[id_col].to_pylist()
+            )
+        ),
+        key=lambda r: (-r[0], r[1]),
+    )[:k]
+    return local_relation(
+        engine.spark,
+        [(i, s, n) for n, (s, i) in enumerate(top, 1)],
+        T.StructType([
+            T.StructField(
+                id_col, engine._stored_schema(cfg)[id_col].dataType
+            ),
+            T.StructField("bm25", T.DoubleType()),
+            T.StructField("rank", T.IntegerType(), False),
+        ]),
     )
 
 
@@ -455,10 +561,8 @@ def text_index_topk(
         # for the broadcast join, so a derived query table's lineage
         # never re-executes inside the join
         head = qterms.collect()
-        # few-slice RDD relation (rows_df), deliberately NOT a VALUES
-        # LocalRelation — same A/B finding as minhash_probe:
-        # string-heavy literal trees cost more in per-action constant
-        # folding than the tiny RDD scan
+        # few-slice RDD relation (rows_df); its broadcast build is a
+        # job either way
         qterms = _rows_df(engine.spark, head, qterms.schema)
         terms = sorted(
             {r["term"] for r in head if r["term"] is not None}
@@ -488,19 +592,10 @@ def text_index_topk(
         qside = qterms
         dfreq = idx.groupBy("term").agg(F.count("*").alias("__df"))
         dfside = dfreq
-    avgdl = float(sum_dl) / float(n_docs)
-    idf = F.log(
-        (F.lit(float(n_docs)) - F.col("__df") + F.lit(0.5))
-        / (F.col("__df") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    denom = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl)
-    )
     scored = (
         idx.join(dfside, "term")
         .join(qside, "term")
-        .withColumn("__s", idf * F.col("tf") * F.lit(k1 + 1.0) / denom)
+        .withColumn("__s", _bm25(n_docs, sum_dl, k1, b))
         .groupBy("__qid", id_col)
         .agg(F.round(F.sum("__s"), round_to).alias("bm25"))
     )

@@ -85,10 +85,8 @@ def rows_df(spark, rows, schema, rows_per_slice: int = 10_000):
     same applySchemaToPythonRDD path, only the slice count differs.
 
     Use for driver-resident probe/status/metadata row sets on hot query
-    paths. For scalar-typed rows a VALUES ``local_relation`` (below) is
-    cheaper still (no job at all) UNLESS the relation is consulted by
-    many actions with long literal strings — see the constant-folding
-    note at minhash_index.minhash_probe."""
+    paths. Under ``local_relation``'s `max_rows`, that LocalRelation
+    (below) is cheaper still: no job at all."""
     sc = spark.sparkContext
     n = max(1, min(sc.defaultParallelism, len(rows) // rows_per_slice + 1))
     return spark.createDataFrame(sc.parallelize(rows, n), schema)
@@ -96,71 +94,34 @@ def rows_df(spark, rows, schema, rows_per_slice: int = 10_000):
 
 def local_relation(spark, rows, schema, max_rows: int = 10_000):
     """A driver-side LocalRelation for a SMALL row set — the cheap twin
-    of ``spark.createDataFrame`` for probe/offset tables on hot query
-    paths. PySpark's createDataFrame builds a Python-RDD-backed plan
-    whose every action schedules a defaultParallelism-wide scan job
-    through a Python worker (measured ~0.9 s per action for 50 rows on
-    local[32]); a parsed ``VALUES`` list is a pure JVM LocalRelation —
-    actions on it (and broadcast builds from it) run driver-local with
-    NO Spark job (~30 ms). String cells ride as ``unhex('..')`` so no
-    SQL escaping rules apply to any content; all cells are cast to the
-    target schema's exact types. Supported cell types: the scalar
-    string/integral/float/bool/date-less set probes use — anything
-    else (or a row set past `max_rows`) falls back to createDataFrame.
+    of ``spark.createDataFrame`` for probe/offset/result tables on hot
+    query paths. PySpark's createDataFrame over Python rows builds a
+    Python-RDD-backed plan whose every action schedules a scan job
+    through a Python worker; ``createDataFrame(pyarrow.Table, schema)``
+    is a pure JVM LocalRelation: actions on it run driver-local with NO
+    Spark job, and a projection over it is evaluated at plan time
+    (ConvertToLocalRelation). Unlike a SQL ``VALUES`` list it carries no
+    literal tree, so a relation of long strings costs nothing in each
+    action's optimizer pass.
 
-    `rows` may be Row objects or tuples, ordered as `schema.fields`.
-    """
+    `rows` is a pyarrow Table, or Row objects / tuples ordered as
+    `schema.fields`. A row set past `max_rows` falls back to `rows_df`,
+    which slices it into an RDD instead of carrying it in the plan."""
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
-    supported = (
-        T.StringType, T.IntegerType, T.LongType, T.ShortType,
-        T.ByteType, T.DoubleType, T.FloatType, T.BooleanType,
-    )
-
-    def ok(dt):
-        return isinstance(dt, supported) or (
-            isinstance(dt, T.ArrayType)
-            and isinstance(dt.elementType, supported)
-        )
-
-    if len(rows) > max_rows or not rows or not all(
-        ok(f.dataType) for f in schema.fields
-    ):
+    if len(rows) > max_rows:
+        if isinstance(rows, pa.Table):
+            rows = list(zip(*(c.to_pylist() for c in rows.columns)))
         return rows_df(spark, rows, schema)
-
-    def cell(v, dt):
-        if v is None:
-            return "NULL"
-        if isinstance(dt, T.ArrayType):
-            inner = ",".join(cell(x, dt.elementType) for x in v)
-            return f"array({inner})" if inner else "array()"
-        if isinstance(dt, T.StringType):
-            return f"unhex('{v.encode('utf-8').hex()}')"
-        if isinstance(dt, T.BooleanType):
-            return "true" if v else "false"
-        if isinstance(dt, (T.DoubleType, T.FloatType)):
-            return f"'{v!r}'"  # shortest-roundtrip repr, cast below
-        return str(int(v))
-
-    dts = [f.dataType for f in schema.fields]
-    values = ",".join(
-        "(" + ",".join(cell(v, dt) for v, dt in zip(r, dts)) + ")"
-        for r in rows
-    )
-    def col_expr(i, f):
-        c = f"CAST(col{i + 1} AS {f.dataType.simpleString()})"
-        if f.nullable:
-            # nullif(x, NULL) is x with nullable=true — VALUES infers
-            # tighter non-null flags than the caller's schema declares
-            c = f"nullif({c}, NULL)"
-        return f"{c} AS `{f.name}`"
-
-    # Names, order, types and values match createDataFrame(rows, schema)
-    # exactly; the one divergence is that a NON-nullable target field
-    # comes back nullable (CAST output is nullable and Spark SQL has no
-    # assert-not-null surface) — irrelevant to the join/aggregate
-    # consumers this helper exists for.
-    casts = ",".join(col_expr(i, f) for i, f in enumerate(schema.fields))
-    return spark.sql(f"SELECT {casts} FROM VALUES {values}")
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) or [[] for _ in arrow]
+        rows = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow,
+        )
+    return spark.createDataFrame(rows, schema)

@@ -60,3 +60,33 @@ def engine(spark, tmp_path):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def read_routes(monkeypatch):
+    """`run(engine, fn)` -> (driver result, Spark result) of `fn()`: the
+    first with `Engine._read_small` serving, the second with its cut at
+    zero files, so every read falls back to the Spark plan. Asserts
+    which route served each call."""
+    import hudi_demo_spark.engine.engine as E
+
+    def run(engine, fn):
+        served = []
+        orig = engine._read_small
+
+        def spy(*a, **k):
+            out = orig(*a, **k)
+            served.append(out is not None)
+            return out
+
+        with monkeypatch.context() as m:
+            m.setattr(engine, "_read_small", spy)
+            driver = fn()
+            assert served and all(served), "driver route did not serve"
+            served.clear()
+            m.setattr(E, "_SMALL_READ_CUT", (0, 0))
+            spark_side = fn()
+            assert served and not any(served), "served past the cut"
+        return driver, spark_side
+
+    return run

@@ -1454,6 +1454,43 @@ def test_local_relation_matches_createdataframe(spark):
     assert [list(r["a"]) for r in arr.collect()] == [[1, 2]]
 
 
+def test_local_relation_collects_without_a_job(spark):
+    """local_relation is createDataFrame(pyarrow.Table): a LocalRelation
+    whose collect, and a projection over it (folded at plan time), run
+    no Spark job. A pyarrow Table goes in as is; a row set past
+    `max_rows` falls back to the RDD-backed `rows_df`."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from hudi_demo_spark.operators.util import local_relation
+
+    sc = spark.sparkContext
+    schema = "k int, s string, xs array<string>"
+    rows = [(i, "x" * 300 + str(i), [str(i), "y"]) for i in range(500)]
+    table = pa.table({
+        "k": pa.array([1, 2], pa.int32()), "s": ["a", None],
+        "xs": [["p"], []],
+    })
+    group = "local-relation-jobs"
+    sc.setJobGroup(group, "local_relation collects")
+    try:
+        a = local_relation(spark, rows, schema)
+        got = a.select("k", F.length("s").alias("n"), "xs").collect()
+        b = local_relation(spark, table, schema).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert [tuple(r) for r in got] == [
+        (i, 300 + len(str(i)), [str(i), "y"]) for i in range(500)
+    ]
+    assert [tuple(r) for r in b] == [(1, "a", ["p"]), (2, None, [])]
+    big = local_relation(spark, rows, schema, max_rows=100)
+    assert "LocalRelation" not in (
+        big._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert sorted(map(tuple, big.collect())) == sorted(rows)
+
+
 def test_minhash_band_rows_py_matches_distributed(spark):
     """The driver-side portable-MinHash twin must be bit-equal to
     collecting `lsh_band_rows(portable plan)` — probe pruning reads

@@ -587,3 +587,111 @@ def test_minhash_probe_small_and_large_batch_paths(engine, spark, monkeypatch):
         tuple(r) for r in MH.minhash_probe(engine, "mh", batch).collect()
     )
     assert large == small
+
+
+# ---------------------------------------------------------------------------
+# Engine._read_small: the driver read route and each condition it declines
+# ---------------------------------------------------------------------------
+
+def _small(engine, table, col, vals, cols):
+    return engine._read_small(
+        engine._resolve(table), [("point", col, vals)], cols
+    )
+
+
+def _rows(tab):
+    return sorted(zip(*(c.to_pylist() for c in tab.columns)))
+
+
+def test_read_small_declines_a_delta(engine, spark):
+    """A pruned set holding a MOR delta needs the merge: the route
+    declines it and the snapshot read serves the merged row. After
+    compaction the same probe is served, with the same rows."""
+    engine.create_table("m", record_key="k", precombine="ts",
+                        table_type="mor")
+    engine.insert(spark.createDataFrame(
+        [(k, k * 10, 1) for k in range(10)], "k int, v int, ts int"
+    ), "m")
+    engine.upsert(spark.createDataFrame([(3, 99, 2)], "k int, v int, ts int"),
+                  "m")
+    assert _small(engine, "m", "k", [3, 4], ["k", "v"]) is None
+    want = sorted(
+        tuple(r) for r in engine.read("m", point_filter=("k", [3, 4]))
+        .select("k", "v").collect()
+    )
+    assert want == [(3, 99), (4, 40)]
+    engine.compact("m")
+    assert _rows(_small(engine, "m", "k", [3, 4], ["k", "v"])) == want
+
+
+def test_read_small_declines_an_external_file(engine, spark, tmp_path):
+    """Metadata-bootstrapped files compute their meta columns at read
+    time: the route declines them and the snapshot read serves."""
+    src = tmp_path / "boot_src"
+    spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string") \
+        .write.mode("overwrite").parquet(str(src))
+    engine.bootstrap(src, "bt", record_key="id", mode="metadata")
+    assert _small(engine, "bt", "id", [2], ["id", "s"]) is None
+    assert [tuple(r) for r in engine.read("bt", point_filter=("id", [2]))
+            .select("id", "s").collect()] == [(2, "b")]
+
+
+def test_read_small_declines_schema_history(engine, spark):
+    """After an ALTER, files of an older schema epoch need projecting:
+    the route declines, and a text index search answers with the rows
+    it served from the driver before the ALTER."""
+    from hudi_demo_spark.engine.text_index import (
+        create_text_index, refresh_text_index, text_index_search,
+    )
+
+    engine.create_table("docs", record_key="doc_id")
+    engine.insert(spark.createDataFrame(
+        [(1, "spark streams data"), (2, "hash data data"),
+         (3, "vector spark")], "doc_id int, text string"), "docs")
+    create_text_index(engine, "docs", "tix", "doc_id", "text", buckets=4)
+    refresh_text_index(engine, "tix")
+    before = text_index_search(engine, "tix", ["data", "spark"]).collect()
+    assert _small(engine, "tix", "term", ["data"], ["term"]) is not None
+    engine.alter_table("tix", add={"note": "string"})
+    assert engine._resolve("tix").schema_history
+    assert _small(engine, "tix", "term", ["data"], ["term"]) is None
+    after = text_index_search(engine, "tix", ["data", "spark"])
+    assert after.inputFiles()  # the Spark route scanned the index
+    assert after.collect() == before and before
+
+
+def test_read_small_declines_past_the_cut(engine, spark, monkeypatch):
+    """The cut is the pruned set's file count and byte total, both from
+    commit metadata: one file or one byte past either declines, and
+    the caller's Spark plan returns the driver route's rows."""
+    import hudi_demo_spark.engine.engine as E
+    from hudi_demo_spark.engine import minhash_index as mh
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    engine.create_table("docs", record_key="i")
+    rows = [(i, f"w{i} common tokens here {'x' * (i % 4)}") for i in range(40)]
+    engine.insert(spark.createDataFrame(rows, "i int, text string"), "docs")
+    mh.create_minhash_index(engine, "docs", "mh", "i", "text",
+                            num_hashes=16, bands=4)
+    mh.refresh_minhash_index(engine, "mh")
+    batch = spark.createDataFrame(
+        [(100 + i, t) for i, t in rows[::2]], "i int, text string"
+    )
+    live = Timeline(engine._resolve("mh").path).live_files()
+    n, size = len(live), sum(m["bytes"] for m in live.values())
+    cols = ["i", "band", "bucket"]
+    # every bucket value: the probe prunes no file
+    vals = sorted({r[0] for r in engine.read("mh").select("bucket").collect()})
+    served = _rows(_small(engine, "mh", "bucket", vals, cols))
+    assert len(served) == 40 * 4
+    want = sorted(tuple(r) for r in mh.minhash_probe(engine, "mh", batch)
+                  .collect())
+    assert want
+    for cut in ((n - 1, size), (n, size - 1)):
+        monkeypatch.setattr(E, "_SMALL_READ_CUT", cut)
+        assert _small(engine, "mh", "bucket", vals, cols) is None, cut
+        probe = mh.minhash_probe(engine, "mh", batch)
+        assert probe.inputFiles(), cut  # the Spark plan read the index
+        assert sorted(tuple(r) for r in probe.collect()) == want, cut
+    monkeypatch.setattr(E, "_SMALL_READ_CUT", (n, size))
+    assert _rows(_small(engine, "mh", "bucket", vals, cols)) == served

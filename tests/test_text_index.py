@@ -543,3 +543,174 @@ def test_buckets_of_matches_bucket_expr(spark):
         }
     )
     assert _buckets_of(terms, 7) == want
+
+
+# ---------------------------------------------------------------------------
+# driver-served search (Engine._read_small): same rows as the Spark route
+# ---------------------------------------------------------------------------
+
+def _dml_window(engine, spark):
+    """A DML refresh window on top of `_setup`: changed docs re-derive
+    and vanished (term, doc) postings are tombstoned in one upsert."""
+    _setup(engine, spark)
+    engine.update(
+        "docs", set={"text": F.lit("join engines win")}, where="doc_id = 2"
+    )
+    engine.delete("docs", "doc_id = 6")
+    engine.insert(_mk(spark, [(7, "hash data streams")]), "docs")
+    assert refresh_text_index(engine, "tix") is not None
+
+
+@pytest.mark.parametrize("state", ["appended", "clustered", "dml_window"])
+def test_driver_search_matches_spark_route(engine, spark, read_routes,
+                                           state):
+    """The driver route returns the Spark route's rows, bit for bit,
+    and its schema, on a never-clustered index, a clustered one and
+    one after a DML window with tombstones."""
+    if state == "dml_window":
+        _dml_window(engine, spark)
+    else:
+        _setup(engine, spark)
+    if state == "clustered":
+        cluster_text_index(engine, "tix")
+    for terms, k in ((["data", "hash"], 10), (["spark"], 2),
+                     (["vector", "streams", "join", "nope"], 3),
+                     (["nope"], 10)):
+        d, s = read_routes(
+            engine, lambda: text_index_search(engine, "tix", terms, k=k)
+        )
+        assert d.schema == s.schema, terms
+        assert [tuple(r) for r in d.collect()] == [
+            tuple(r) for r in s.orderBy("rank").collect()
+        ], terms
+
+
+def test_driver_search_reads_the_pruned_files(engine, spark, monkeypatch):
+    """The driver route opens exactly the files the Spark route scans
+    (its `inputFiles()`), read from the same prune pass: 3 of the 6
+    live files for this query on the appended 4-bucket index."""
+    import pyarrow.parquet as pq
+
+    from hudi_demo_spark.engine.text_index import _buckets_of
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    _setup(engine, spark)
+    terms = ["data", "hash", "spark"]
+    opened = []
+    orig = pq.read_table
+    monkeypatch.setattr(
+        pq, "read_table", lambda src, **k: opened.extend(src) or orig(src, **k)
+    )
+    res = text_index_search(engine, "tix", terms)
+    assert res.inputFiles() == []  # a LocalRelation scans no file
+    tbs = _buckets_of(terms, 4)
+    scanned = engine.read(
+        "tix", where=f"{_TB_COL} IN ({','.join(map(str, tbs))})",
+        point_filter=("term", terms),
+    ).inputFiles()
+    names = sorted(p.rsplit("/", 1)[-1] for p in opened)
+    assert names == sorted(p.rsplit("/", 1)[-1] for p in scanned)
+    live = Timeline(engine._resolve("tix").path).live_files()
+    assert (len(names), len(live)) == (3, 6)
+
+
+def test_driver_search_runs_no_job(engine, spark):
+    """A driver-served search, collect included, runs no Spark job
+    (the Spark route runs 4)."""
+    _setup(engine, spark)
+    text_index_search(engine, "tix", ["data"]).collect()  # warm
+    sc = spark.sparkContext
+    group = "driver-search-jobs"
+    sc.setJobGroup(group, "driver search")
+    try:
+        got = text_index_search(engine, "tix", ["data", "hash"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_driver_search_equals_bm25_topk_on_random_queries(engine, spark,
+                                                          monkeypatch):
+    """60 seeded queries of 1-4 terms (some unknown to the corpus) over
+    an appended and partly clustered index: every driver-served result
+    equals operators/text.bm25_topk over the snapshot, ranks included."""
+    import random
+
+    from hudi_demo_spark.operators.text import bm25_topk
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(50)]
+
+    def docs(lo, hi):
+        return _mk(spark, [
+            (i, " ".join(rng.choices(vocab, k=rng.randrange(1, 12))))
+            for i in range(lo, hi)
+        ])
+
+    engine.create_table("docs", record_key="doc_id")
+    engine.insert(docs(0, 120), "docs")
+    create_text_index(engine, "docs", "tix", "doc_id", "text", buckets=8)
+    refresh_text_index(engine, "tix")
+    cluster_text_index(engine, "tix")
+    for lo in (120, 150):
+        engine.insert(docs(lo, lo + 30), "docs")
+        refresh_text_index(engine, "tix")
+    queries = [
+        rng.sample(vocab + ["zz1", "zz2"], rng.randrange(1, 5))
+        for _ in range(60)
+    ]
+    want: dict = {}
+    for r in bm25_topk(
+        engine.read("docs").select("doc_id", "text"),
+        spark.createDataFrame(list(enumerate(queries)),
+                              "query_id int, terms array<string>"),
+        "doc_id", "text", "query_id", "terms", k=10,
+    ).collect():
+        want.setdefault(r["query_id"], []).append(
+            (r["doc_id"], r["bm25"], r["rank"])
+        )
+    served = []
+    orig = engine._read_small
+    monkeypatch.setattr(
+        engine, "_read_small",
+        lambda *a, **k: served.append(orig(*a, **k)) or served[-1],
+    )
+    for qid, terms in enumerate(queries):
+        got = sorted(
+            tuple(r) for r in text_index_search(engine, "tix", terms).collect()
+        )
+        assert got == sorted(want.get(qid, [])), terms
+    assert len(served) == 60 and all(t is not None for t in served)
+
+
+def test_round_half_up_matches_spark_round(spark):
+    """The driver route's rounding twin equals F.round(x, 4) bit for bit
+    on 150k doubles: 50k exact decimal ties (`…5` in the fifth
+    place), 50k random scores in the BM25 range and 50k of random
+    magnitude, through Spark's generated code."""
+    import random
+    import struct
+
+    from hudi_demo_spark.engine.text_index import _round_half_up
+    from hudi_demo_spark.operators.util import rows_df
+
+    rng = random.Random(5)
+    xs = [float(f"{rng.randrange(40)}.{rng.randrange(10_000):04d}5")
+          for _ in range(50_000)]
+    xs += [rng.uniform(0.0, 40.0) for _ in range(50_000)]
+    xs += [rng.random() * 10.0 ** rng.randrange(-8, 15)
+           for _ in range(50_000)]
+    df = rows_df(spark, [(i, x) for i, x in enumerate(xs)],
+                 "i int, x double")
+    got = {
+        r["i"]: r["r"]
+        for r in df.select("i", F.round("x", 4).alias("r")).collect()
+    }
+
+    def bits(v):
+        return struct.pack(">d", v)
+
+    bad = [x for i, x in enumerate(xs)
+           if bits(_round_half_up(x, 4)) != bits(got[i])]
+    assert not bad, bad[:5]

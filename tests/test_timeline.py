@@ -964,6 +964,45 @@ def test_inline_clustering_trigger_on_upserts(engine, spark):
     assert engine.read("ucl").count() == 200
 
 
+@pytest.mark.parametrize("dml", ["update", "delete", "delete_keys", "merge"])
+def test_inline_clustering_trigger_on_dml(engine, spark, dml):
+    """Inline clustering runs after DML too: a COW table with
+    `cluster.inline.max_commits=3`, clustered after its insert, is
+    written by three DML commits and clusters exactly once, after the
+    third."""
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    engine.create_table(
+        "dcl", record_key="k",
+        props={"cluster.inline": "true", "cluster.sort_cols": "v",
+               "cluster.inline.max_commits": "3"},
+    )
+    engine.insert(spark.range(0, 60).select(
+        F.col("id").alias("k"), F.rand(seed=1).alias("v")
+    ), "dcl")
+    engine.cluster("dcl", ["v"])
+    tl = Timeline(engine._resolve("dcl").path)
+    for i in range(3):
+        assert "cluster" not in [m["operation"] for m in tl.instants()[2:]]
+        if dml == "update":
+            engine.update("dcl", set={"v": F.lit(float(i))},
+                          where=f"k = {i}")
+        elif dml == "delete":
+            engine.delete("dcl", f"k = {i}")
+        elif dml == "delete_keys":
+            engine.delete_keys("dcl", spark.range(i, i + 1).select(
+                F.col("id").alias("k")))
+        else:
+            engine.merge("dcl", spark.range(i, i + 1).select(
+                F.col("id").alias("k"), F.lit(-1.0).alias("v")))
+    ops = [m["operation"] for m in tl.instants()]
+    assert ops == ["insert", "cluster"] + [dml.split("_")[0]] * 3 + [
+        "cluster"
+    ]
+    want = 57 if dml.startswith("delete") else 60
+    assert engine.read("dcl").count() == want
+
+
 def test_show_partition_stats(engine, spark):
     from pyspark.sql import functions as F
 
@@ -2462,6 +2501,95 @@ def test_minhash_admission_guard(engine, spark):
         r.doc_id for r in minhash_admit(engine, "admx", batch).collect()
     )
     assert got == [11, 12, 13]
+
+
+def _probe_fixture(engine, spark, state):
+    """A 16-hash/4-band minhash index over 30 docs in one of three
+    states, and a probe batch: clones of indexed docs under new ids, an
+    indexed doc under its own id (its self-match is excluded), novel
+    docs and a doc too short to shingle."""
+    from hudi_demo_spark.engine import minhash_index as mh
+
+    def text(i):
+        return f"doc {i} talks about w{i % 7} w{i % 5} w{i % 3} and w{i}"
+
+    engine.create_table("src", record_key="doc_id")
+    engine.insert(spark.createDataFrame(
+        [(i, text(i)) for i in range(20)], "doc_id int, text string"
+    ), "src")
+    mh.create_minhash_index(engine, "src", "mh", "doc_id", "text",
+                            num_hashes=16, bands=4)
+    mh.refresh_minhash_index(engine, "mh")
+    engine.insert(spark.createDataFrame(
+        [(i, text(i)) for i in range(20, 30)], "doc_id int, text string"
+    ), "src")
+    mh.refresh_minhash_index(engine, "mh")
+    if state == "clustered":
+        mh.cluster_index(engine, "mh")
+    if state == "dml_window":
+        engine.update("src", set={"text": F.lit("entirely new text body "
+                                                "for doc three now")},
+                      where="doc_id = 3")
+        engine.delete("src", "doc_id IN (4, 25)")
+        assert mh.refresh_minhash_index(engine, "mh") is not None
+    return spark.createDataFrame(
+        [(100 + i, text(i)) for i in (1, 3, 4, 22, 25)]
+        + [(7, text(7)), (200, "novel words " * 6), (201, "too short")],
+        "doc_id int, text string",
+    )
+
+
+@pytest.mark.parametrize("state", ["appended", "clustered", "dml_window"])
+def test_minhash_driver_probe_matches_spark_route(engine, spark, read_routes,
+                                                  state):
+    """The driver-served probe and admission return the Spark route's
+    rows and schema on a never-clustered index, a clustered one and one
+    after a DML window that tombstoned and re-signed ids."""
+    from hudi_demo_spark.engine import minhash_index as mh
+
+    batch = _probe_fixture(engine, spark, state)
+    for fn in (mh.minhash_probe, mh.minhash_admit):
+        d, s = read_routes(engine, lambda: fn(engine, "mh", batch))
+        assert d.schema == s.schema, fn.__name__
+        got = sorted(tuple(r) for r in d.collect())
+        assert got == sorted(tuple(r) for r in s.collect()), fn.__name__
+        assert got, fn.__name__
+    pairs = {tuple(r) for r in mh.minhash_probe(engine, "mh", batch).collect()}
+    assert (107, 7) not in pairs and (7, 7) not in pairs
+    assert {q for q, _ in pairs} >= {101, 122}
+    assert (104 in {q for q, _ in pairs}) == (state != "dml_window")
+
+
+def test_minhash_driver_admission_job_budget(engine, spark, monkeypatch):
+    """A driver-served admission of a one-slice batch, collect
+    included, runs 5 Spark jobs: 3 for the size aggregate over the
+    persisted batch, 1 to take it for driver signing and 1 for the
+    filtered batch. The Spark route (the cut at zero, the plan every
+    admission ran before the driver route) runs 9: it also scans the
+    index, joins it and broadcasts the hits for the anti-join."""
+    import hudi_demo_spark.engine.engine as E
+    from hudi_demo_spark.engine import minhash_index as mh
+    from hudi_demo_spark.operators.util import rows_df
+
+    batch = _probe_fixture(engine, spark, "appended")
+    batch = rows_df(spark, batch.collect(), batch.schema)
+    sc = spark.sparkContext
+
+    def jobs(tag):
+        sc.setJobGroup(tag, "admission")
+        try:
+            got = sorted(r[0] for r in mh.minhash_admit(
+                engine, "mh", batch).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return got, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    jobs("warm-admission")
+    driver, n_driver = jobs("driver-admission")
+    monkeypatch.setattr(E, "_SMALL_READ_CUT", (0, 0))
+    spark_side, n_spark = jobs("spark-admission")
+    assert driver == spark_side
+    assert n_driver <= 5 < n_spark, (n_driver, n_spark)
 
 
 @pytest.mark.slow
