@@ -27,6 +27,7 @@ import json
 import re
 import shutil
 import urllib.parse
+from collections.abc import Callable, Iterable
 from contextlib import contextmanager
 from datetime import datetime, timedelta, timezone
 from functools import reduce
@@ -1245,10 +1246,9 @@ class Engine:
         df = self._read_files(cfg, files)
         if cfg.table_type == MOR and query_type == "snapshot" and has_delta:
             df = self._merge_view(df, cfg)
+        df = self._drop_tombstones(df)
         if DELETED_META in df.columns:
-            df = df.filter(~F.coalesce(F.col(DELETED_META), F.lit(False))).drop(
-                DELETED_META
-            )
+            df = df.drop(DELETED_META)
         for col, lo, hi in ranges:
             df = df.filter(F.col(col).between(lo, hi))
         if point_filter is not None:
@@ -1550,9 +1550,7 @@ class Engine:
             m.get("kind") == "delta" for m in cand.values()
         ):
             df = self._merge_view(df, cfg)
-        if DELETED_META in df.columns:
-            df = df.filter(~F.coalesce(F.col(DELETED_META), F.lit(False)))
-        df.createOrReplaceTempView("__candidate")
+        self._drop_tombstones(df).createOrReplaceTempView("__candidate")
         bad = self.spark.sql(sql)
         sample = bad.limit(3).collect()
         if sample:
@@ -1569,7 +1567,8 @@ class Engine:
             )
 
     def _index_append(
-        self, cfg: TableConfig, stamped: DataFrame, rows: int
+        self, cfg: TableConfig, stamped: DataFrame, rows: int,
+        rebuild: bool = False,
     ) -> None:
         """Maintain the record index and any secondary indexes after a
         committed write: append the batch's pairs (`rows`: the batch's
@@ -1577,7 +1576,10 @@ class Engine:
         secondary-index append shape). First write on an
         index-less table builds from the live snapshot instead, so
         completeness is guaranteed even when the prop is enabled on an
-        existing table. Soft-delete tombstone rows are dropped first —
+        existing table. A whole-table replace (`rebuild`) makes every
+        prior entry stale: the record index is rebuilt from the batch
+        and the secondary indexes are truncated, then rebuilt from the
+        snapshot. Soft-delete tombstone rows are dropped first —
         the commit just evicted those keys, so indexing them would only
         grow the index with permanently-dead entries (and hand
         secondary indexes (null, partition) rows from the tombstones'
@@ -1586,12 +1588,16 @@ class Engine:
         stamped = self._drop_tombstones(stamped)
         idx = self._record_index(cfg)
         if idx is not None:
-            if not idx.usable():
+            if rebuild:
+                idx.build(stamped.select(RECORD_KEY_META, PARTITION_PATH_META))
+            elif not idx.usable():
                 idx.build(
                     self.read(cfg).select(RECORD_KEY_META, PARTITION_PATH_META)
                 )
             else:
                 idx.append(stamped)
+        if rebuild:
+            self._secondary_truncate(cfg)
         self._secondary_append(cfg, stamped, rows)
 
     def _secondary_index(self, cfg: TableConfig, col: str):
@@ -1603,14 +1609,13 @@ class Engine:
             return None
         return si.SecondaryIndex(self.spark, cfg, col)
 
-    def _drop_tombstones(self, stamped: DataFrame) -> DataFrame:
-        """Rows carrying `_hoodie_is_deleted = true` evict their key —
-        never index them."""
-        if DELETED_META in stamped.columns:
-            stamped = stamped.filter(
-                ~F.coalesce(F.col(DELETED_META), F.lit(False))
-            )
-        return stamped
+    def _drop_tombstones(self, df: DataFrame) -> DataFrame:
+        """`df` without its tombstones: rows carrying `_hoodie_is_deleted
+        = true` evict their key, so no read, candidate snapshot, rewrite
+        or index append keeps them. The marker column stays."""
+        if DELETED_META in df.columns:
+            df = df.filter(~F.coalesce(F.col(DELETED_META), F.lit(False)))
+        return df
 
     def _secondary_append(
         self, cfg: TableConfig, stamped: DataFrame, rows: int
@@ -2276,6 +2281,32 @@ class Engine:
             F.col("commit_time").desc()
         )
 
+    def _cleaned_gate(
+        self, cfg: TableConfig, files: dict[str, dict], allow_cleaned: bool,
+        what: str,
+    ) -> dict[str, dict]:
+        """The cleaned-file gate of the incremental reads (`read_incremental`,
+        `read_cdc`, `changed_keys`): `files` minus those `clean()` already
+        deleted. A gone file makes the read silently incomplete, so it
+        raises `IncrementalRangeCleanedError` (`what` names the read and
+        its range) unless `allow_cleaned`; the skip count accumulates in
+        `self.last_incremental_stats["cleaned_files_skipped"]`."""
+        data = Path(cfg.path) / DATA_DIR
+        gone = {
+            p
+            for p, m in files.items()
+            if m.get("kind") != "external" and not (data / p).is_file()
+        }
+        if gone and not allow_cleaned:
+            raise IncrementalRangeCleanedError(
+                f"{what} needs {len(gone)} file(s) already removed by "
+                f"clean() — the result would be incomplete (first gone: "
+                f"{min(gone)}). Widen the clean retention or pass "
+                "allow_cleaned=True to accept a partial result."
+            )
+        self.last_incremental_stats["cleaned_files_skipped"] += len(gone)
+        return {p: m for p, m in files.items() if p not in gone}
+
     def read_incremental(
         self,
         table: str | TableConfig,
@@ -2323,48 +2354,28 @@ class Engine:
             files = {
                 p: m for p, m in files.items() if fnmatch.fnmatch("/" + p, g)
             }
-        data = Path(cfg.path) / DATA_DIR
-        gone = sorted(
-            p
-            for p, m in files.items()
-            if m.get("kind") != "external" and not (data / p).is_file()
+        self.last_incremental_stats = {"cleaned_files_skipped": 0}
+        kept = self._cleaned_gate(
+            cfg, files, allow_cleaned or fallback_full_scan,
+            f"incremental range ({begin}, {end}]",
         )
-        if gone:
-            if fallback_full_scan:
-                if path_glob:
-                    raise ValueError(
-                        "path_glob is not supported with "
-                        "fallback_full_scan (the fallback reads the "
-                        "whole snapshot)"
-                    )
-                # Hudi's fulltablescan fallback: the snapshot always
-                # holds every LIVE row, so filtering it on commit time
-                # recovers the changeset without the cleaned files
-                self.last_incremental_stats = {
-                    "cleaned_files_skipped": len(gone),
-                    "full_scan_fallback": True,
-                }
-                snap = self.read(cfg)
-                if begin is not None:
-                    snap = snap.filter(F.col(COMMIT_TIME_META) > begin)
-                if end is not None:
-                    snap = snap.filter(F.col(COMMIT_TIME_META) <= end)
-                return snap
-            if not allow_cleaned:
-                # don't leave a previous call's stats lying around for a
-                # caller that catches this and reads the counter
-                self.last_incremental_stats = {"cleaned_files_skipped": 0}
-                raise IncrementalRangeCleanedError(
-                    f"incremental range ({begin}, {end}] references "
-                    f"{len(gone)} file(s) already removed by clean() — the "
-                    "changeset would be incomplete (first gone: "
-                    f"{gone[0]}). Widen the clean retention or pass "
-                    "allow_cleaned=True to accept a partial changeset."
+        if fallback_full_scan and len(kept) < len(files):
+            if path_glob:
+                raise ValueError(
+                    "path_glob is not supported with fallback_full_scan "
+                    "(the fallback reads the whole snapshot)"
                 )
-            gone_set = set(gone)
-            files = {p: m for p, m in files.items() if p not in gone_set}
-        self.last_incremental_stats = {"cleaned_files_skipped": len(gone)}
-        df = self._read_files(cfg, files)
+            # Hudi's fulltablescan fallback: the snapshot always holds
+            # every LIVE row, so filtering it on commit time recovers
+            # the changeset without the cleaned files
+            self.last_incremental_stats["full_scan_fallback"] = True
+            snap = self.read(cfg)
+            if begin is not None:
+                snap = snap.filter(F.col(COMMIT_TIME_META) > begin)
+            if end is not None:
+                snap = snap.filter(F.col(COMMIT_TIME_META) <= end)
+            return snap
+        df = self._read_files(cfg, kept)
         if COMMIT_TIME_META in df.columns:
             if begin is not None:
                 df = df.filter(F.col(COMMIT_TIME_META) > begin)
@@ -2383,11 +2394,8 @@ class Engine:
         )
         if not insert_only:
             df = self._merge_view(df, cfg)
-        if DELETED_META in df.columns:
-            df = df.filter(~F.coalesce(F.col(DELETED_META), F.lit(False))).drop(
-                DELETED_META
-            )
-        return df
+        df = self._drop_tombstones(df)
+        return df.drop(DELETED_META) if DELETED_META in df.columns else df
 
     def read_cdc(
         self,
@@ -2422,29 +2430,13 @@ class Engine:
             raise ValueError("read_cdc requires a table with a record key")
         tl = Timeline(cfg.path)
         end = end or tl.last_instant()
-        data = Path(cfg.path) / DATA_DIR
-        # both snapshot sides accumulate into the counter (the
-        # IncrementalRangeCleanedError contract promises the skip count
-        # lands here under allow_cleaned=True, same as read_incremental)
+        # both snapshot sides accumulate into the counter
         self.last_incremental_stats = {"cleaned_files_skipped": 0}
 
         def _on_disk(files: dict[str, dict]) -> dict[str, dict]:
-            gone = sorted(
-                p
-                for p, m in files.items()
-                if m.get("kind") != "external" and not (data / p).is_file()
+            return self._cleaned_gate(
+                cfg, files, allow_cleaned, f"CDC range ({begin}, {end}]"
             )
-            if gone and not allow_cleaned:
-                raise IncrementalRangeCleanedError(
-                    f"CDC range ({begin}, {end}] needs {len(gone)} file(s) "
-                    "already removed by clean() — the change set would be "
-                    f"incomplete (first gone: {gone[0]}). Widen the clean "
-                    "retention or pass allow_cleaned=True to accept a "
-                    "partial diff."
-                )
-            self.last_incremental_stats["cleaned_files_skipped"] += len(gone)
-            gone_set = set(gone)
-            return {p: m for p, m in files.items() if p not in gone_set}
 
         if cfg.table_type == COW:
             b_files = _on_disk(tl.live_files(as_of=begin)) if begin else {}
@@ -2469,15 +2461,8 @@ class Engine:
             before = after.limit(0)
         elif not (set(after.columns) - meta) and (set(before.columns) - meta):
             after = before.limit(0)
-        for side_deleted in (DELETED_META,):
-            if side_deleted in before.columns:
-                before = before.filter(
-                    ~F.coalesce(F.col(side_deleted), F.lit(False))
-                )
-            if side_deleted in after.columns:
-                after = after.filter(
-                    ~F.coalesce(F.col(side_deleted), F.lit(False))
-                )
+        before = self._drop_tombstones(before)
+        after = self._drop_tombstones(after)
         data_cols = [c for c in after.columns if c not in meta]
         b = before.select(
             F.col(RECORD_KEY_META), F.struct(*data_cols).alias("__before")
@@ -2554,26 +2539,13 @@ class Engine:
             raise ValueError("changed_keys requires a table with a record key")
         tl = Timeline(cfg.path)
         end = end or tl.last_instant()
-        data = Path(cfg.path) / DATA_DIR
         self.last_incremental_stats = {"cleaned_files_skipped": 0}
 
         def _on_disk(files: dict[str, dict]) -> dict[str, dict]:
-            gone = sorted(
-                p
-                for p, m in files.items()
-                if m.get("kind") != "external" and not (data / p).is_file()
+            return self._cleaned_gate(
+                cfg, files, allow_cleaned,
+                f"changed_keys range ({begin}, {end}]",
             )
-            if gone and not allow_cleaned:
-                raise IncrementalRangeCleanedError(
-                    f"changed_keys range ({begin}, {end}] needs "
-                    f"{len(gone)} file(s) already removed by clean() — "
-                    f"the key set would be incomplete (first gone: "
-                    f"{gone[0]}). Widen the clean retention or pass "
-                    "allow_cleaned=True to accept a partial set."
-                )
-            self.last_incremental_stats["cleaned_files_skipped"] += len(gone)
-            gone_set = set(gone)
-            return {p: m for p, m in files.items() if p not in gone_set}
 
         if cfg.table_type == COW:
             b_files = _on_disk(tl.live_files(as_of=begin)) if begin else {}
@@ -2594,14 +2566,9 @@ class Engine:
             # both sides still prune to (key, commit_time) post-merge
             before = self.read(cfg, as_of=begin) if begin else None
             after = self.read(cfg, as_of=end)
-        sides = []
-        for side in (before, after):
-            if side is not None and DELETED_META in side.columns:
-                side = side.filter(
-                    ~F.coalesce(F.col(DELETED_META), F.lit(False))
-                )
-            sides.append(side)
-        before, after = sides
+        after = self._drop_tombstones(after)
+        if before is not None:
+            before = self._drop_tombstones(before)
         # identity for the diff is always the composed meta key (exact,
         # collision-free); the OUTPUT columns are either that string or
         # the typed key fields carried alongside through the same scan
@@ -2632,6 +2599,85 @@ class Engine:
     # ------------------------------------------------------------------
     # write path  (W1-W14)
     # ------------------------------------------------------------------
+
+    def _commit_write(
+        self,
+        cfg: TableConfig,
+        instant: str,
+        operation: str,
+        df: DataFrame | None,
+        kind: str = "base",
+        replaces: dict[str, dict] | str | Callable | None = None,
+        *,
+        index: DataFrame | None = None,
+        index_rows: int | None = None,
+        assigned: tuple[DataFrame, Iterable[str]] | None = None,
+        batch_id: int | None = None,
+        empty_noop: bool = False,
+    ) -> dict:
+        """The commit protocol of every data write, Hudi's write-client
+        commit (HoodieJavaWriteClientExample.java): insert, upsert,
+        delete, delete_keys, update, merge, overwrite and
+        insert_overwrite each end in one call. In order:
+
+        1. `_materialize` the stamped `df` as `kind` files. `replaces`
+           is what the write replaces: nothing (None), the live files it
+           rewrites (a {path: meta} dict, whose bytes size the write),
+           the whole table ("*"), or a function from the added files to
+           the replaced paths (insert_overwrite's written partitions);
+        2. `_precommit_validate` the candidate snapshot;
+        3. `Timeline.commit`: a replacecommit when the write replaces
+           "*" or whole partitions, else a commit for base files and a
+           deltacommit for delta files, with `rows_written`;
+        4. index maintenance: append the batch `index` (`index_rows`,
+           default the rows written, is its row bound and picks the
+           secondary-index append shape), rebuilt instead when the write
+           replaces "*"; then the values an UPDATE / MERGE map wrote,
+           `assigned` = (rows, assigned columns);
+        5. the inline table services: compaction, clustering, TTL.
+
+        `df` None, or an `empty_noop` write that added no file, is a
+        DML statement that matched nothing: it records a no-op commit
+        with `rows_written` 0 and skips steps 2, 4 and 5."""
+        tl = Timeline(cfg.path)
+        added, written = [], 0
+        if df is not None:
+            approx = None
+            if isinstance(replaces, dict):
+                approx = sum(m.get("bytes") or 0 for m in replaces.values())
+            added, written = self._materialize(
+                df, cfg, instant, kind, approx_bytes=approx
+            )
+        if df is None or (empty_noop and not added):
+            return tl.commit(
+                instant, tlmod.COMMIT, operation, [], [], {"rows_written": 0}
+            )
+        if callable(replaces):
+            removed = replaces(added)
+        elif isinstance(replaces, dict):
+            removed = sorted(replaces)
+        else:
+            removed = replaces or []
+        self._precommit_validate(cfg, instant, added, removed)
+        action = (
+            tlmod.REPLACECOMMIT if removed == "*" or callable(replaces)
+            else tlmod.COMMIT if kind == "base" else tlmod.DELTACOMMIT
+        )
+        meta = tl.commit(
+            instant, action, operation, added, removed,
+            {"rows_written": written}, batch_id=batch_id,
+        )
+        if index is not None:
+            self._index_append(
+                cfg, index, written if index_rows is None else index_rows,
+                rebuild=removed == "*",
+            )
+        if assigned is not None:
+            self._secondary_append_updated(cfg, *assigned, written)
+        self._maybe_compact(cfg)
+        self._maybe_cluster(cfg)
+        self._maybe_ttl(cfg)
+        return meta
 
     def insert(
         self,
@@ -2667,7 +2713,7 @@ class Engine:
             # row. Route deletions through upsert (tombstones) or
             # delete/delete_keys. (Filtered on the raw input — the
             # marker column is untouched by stamping.)
-            df = df.filter(~F.coalesce(F.col(DELETED_META), F.lit(False)))
+            df = self._drop_tombstones(df)
         out = self._prepare(df, cfg, instant)
         if drop_duplicates:
             out = self._dedup_batch(out, cfg)
@@ -2683,24 +2729,12 @@ class Engine:
                     # respect delete markers: a key whose latest version is
                     # a delete is NOT live and must not block the insert
                     existing = self._merge_view(existing, cfg)
-                if DELETED_META in existing.columns:
-                    existing = existing.filter(
-                        ~F.coalesce(F.col(DELETED_META), F.lit(False))
-                    )
+                existing = self._drop_tombstones(existing)
                 out = out.join(existing.select(*on), on, "left_anti")
         kind = "base" if cfg.table_type == COW else "delta"
-        added, written = self._materialize(out, cfg, instant, kind)
-        self._precommit_validate(cfg, instant, added, [])
-        action = tlmod.COMMIT if cfg.table_type == COW else tlmod.DELTACOMMIT
-        meta = Timeline(cfg.path).commit(
-            instant, action, operation, added, [], {"rows_written": written},
-            batch_id=batch_id,
+        return self._commit_write(
+            cfg, instant, operation, out, kind, index=out, batch_id=batch_id
         )
-        self._index_append(cfg, out, written)
-        self._maybe_compact(cfg)
-        self._maybe_cluster(cfg)
-        self._maybe_ttl(cfg)
-        return meta
 
     def _maybe_ttl(self, cfg: TableConfig) -> None:
         """Inline partition TTL (the Hudi partition-TTL table-service
@@ -2727,8 +2761,8 @@ class Engine:
         """Inline clustering (Hudi `hoodie.clustering.inline` +
         `...inline.max.commits`): after N write commits since the last
         clustering, rewrite into `cluster.sort_cols` order — the
-        continuous-ingest small-file + locality service. Runs after
-        every insert, upsert, delete, update and merge, as the
+        continuous-ingest small-file + locality service. Runs in the
+        commit tail of every data write (`_commit_write`), as the
         reference runs its services inside the write. Opt-in via
         `cluster.inline`; strategy from `cluster.strategy`
         (linear|zorder)."""
@@ -2786,24 +2820,9 @@ class Engine:
         cfg = self._resolve(table)
         instant = new_instant()
         out = self._prepare(df, cfg, instant)
-        added, written = self._materialize(out, cfg, instant, "base")
-        meta = Timeline(cfg.path).commit(
-            instant,
-            tlmod.REPLACECOMMIT,
-            "insert_overwrite_table",
-            added,
-            "*",
-            {"rows_written": written},
+        return self._commit_write(
+            cfg, instant, "insert_overwrite_table", out, "base", "*", index=out
         )
-        idx = self._record_index(cfg)
-        if idx is not None:
-            # whole-table replace: prior index entries are all stale —
-            # rebuild from the new content instead of appending
-            idx.build(out.select(RECORD_KEY_META, PARTITION_PATH_META))
-        self._secondary_truncate(cfg)
-        # unusable → rebuilds from snapshot
-        self._secondary_append(cfg, out, written)
-        return meta
 
     def insert_overwrite(self, df: DataFrame, table: str | TableConfig) -> dict:
         """Partition-scoped INSERT OVERWRITE (Hudi
@@ -2819,27 +2838,20 @@ class Engine:
             return self.overwrite(df, table)
         instant = new_instant()
         out = self._prepare(df, cfg, instant)
-        tl = Timeline(cfg.path)
-        live = tl.live_files()
-        added, written = self._materialize(out, cfg, instant, "base")
-        # partitions actually written (empty input slices are dropped by
-        # _materialize, matching Hudi: only partitions receiving data are
-        # replaced)
-        parts = {f["partition"] for f in added}
-        removed = [
-            rp for rp, m in live.items() if m.get("partition", "") in parts
-        ]
-        self._precommit_validate(cfg, instant, added, removed)
-        meta = tl.commit(
-            instant,
-            tlmod.REPLACECOMMIT,
-            "insert_overwrite",
-            added,
-            removed,
-            {"rows_written": written},
+        live = Timeline(cfg.path).live_files()
+
+        def replaced(added: list[dict]) -> list[str]:
+            # partitions actually written (empty input slices are dropped
+            # by _materialize, matching Hudi: only partitions receiving
+            # data are replaced)
+            parts = {f["partition"] for f in added}
+            return [
+                rp for rp, m in live.items() if m.get("partition", "") in parts
+            ]
+
+        return self._commit_write(
+            cfg, instant, "insert_overwrite", out, "base", replaced, index=out
         )
-        self._index_append(cfg, out, written)
-        return meta
 
     def delete_partition(
         self, table: str | TableConfig, partitions: str | list[str]
@@ -3218,23 +3230,15 @@ class Engine:
         cfg = self._resolve(table)
         instant = new_instant()
         batch = self._prepare(df, cfg, instant, keep_deleted=True)
-        tl = Timeline(cfg.path)
         if cfg.table_type == MOR:
             batch = self._dedup_batch(batch, cfg)
-            added, written = self._materialize(batch, cfg, instant, "delta")
-            self._precommit_validate(cfg, instant, added, [])
-            meta = tl.commit(
-                instant, tlmod.DELTACOMMIT, "upsert", added, [],
-                {"rows_written": written}, batch_id=batch_id,
+            return self._commit_write(
+                cfg, instant, "upsert", batch, "delta", index=batch,
+                batch_id=batch_id,
             )
-            self._index_append(cfg, batch, written)
-            self._maybe_compact(cfg)
-            self._maybe_cluster(cfg)
-            self._maybe_ttl(cfg)
-            return meta
         batch = batch.persist()
         try:
-            live = tl.live_files()
+            live = Timeline(cfg.path).live_files()
             if live:
                 affected, batch_rows = self._tag_files(cfg, live, batch)
             else:
@@ -3297,27 +3301,17 @@ class Engine:
                 # (precombine/commit) over base ∪ batch in ONE keyed
                 # shuffle; intra-batch winners fall out of the same window.
                 winner = self._merge_view(combined, cfg)
+            winner = self._drop_tombstones(winner)
             if DELETED_META in winner.columns:
-                winner = winner.filter(
-                    ~F.coalesce(F.col(DELETED_META), F.lit(False))
-                )
                 stored = self._stored_schema(cfg)
                 if stored is None or DELETED_META not in stored.names:
                     # reserved marker, applied above — never persisted
                     # into COW base files
                     winner = winner.drop(DELETED_META)
-            added, written = self._materialize(
-                winner, cfg, instant, "base", approx_bytes=affected_bytes
+            return self._commit_write(
+                cfg, instant, "upsert", winner, "base", affected, index=batch,
+                index_rows=batch_rows if live else None, batch_id=batch_id,
             )
-            self._precommit_validate(cfg, instant, added, sorted(affected))
-            meta = tl.commit(
-                instant, tlmod.COMMIT, "upsert", added, sorted(affected),
-                {"rows_written": written}, batch_id=batch_id,
-            )
-            self._index_append(cfg, batch, batch_rows if live else written)
-            self._maybe_cluster(cfg)
-            self._maybe_ttl(cfg)
-            return meta
         finally:
             batch.unpersist()
 
@@ -3335,7 +3329,6 @@ class Engine:
         cfg = self._resolve(table)
         cond = _as_cond(condition)
         instant = new_instant()
-        tl = Timeline(cfg.path)
         matched = self.read(
             cfg, partition_filter=partition_filter, where=condition
         )
@@ -3343,43 +3336,31 @@ class Engine:
             # MOR writes delete MARKERS — no base rewrite, so the file
             # footprint is useless here; one scan materializes the
             # markers directly (an empty result writes no files and
-            # commits rows_deleted=0)
+            # records a no-op commit)
             markers = matched.withColumn(
                 DELETED_META, F.lit(True)
             ).withColumn(COMMIT_TIME_META, F.lit(instant))
             markers = self._conform(markers, cfg)
-            added, written = self._materialize(markers, cfg, instant, "delta")
-            if not added:
-                return tl.commit(instant, tlmod.COMMIT, "delete", [], [],
-                                 {"rows_deleted": 0})
-            self._precommit_validate(cfg, instant, added, [])
-            meta = tl.commit(instant, tlmod.DELTACOMMIT, "delete", added, [],
-                             {"rows_written": written})
-            self._maybe_compact(cfg)
-            self._maybe_cluster(cfg)
-            return meta
+            return self._commit_write(
+                cfg, instant, "delete", markers, "delta", empty_noop=True
+            )
         # COW: NOT persisted — caching would serve the footprint scan
         # from the InMemory columnar cache, where input_file_name()
         # returns '' and the file-group prune degrades to
         # whole-partition; matched is consumed exactly once below.
-        affected = self._dml_rewrite_set(cfg, tl.live_files(), matched)
+        affected = self._dml_rewrite_set(
+            cfg, Timeline(cfg.path).live_files(), matched
+        )
         if not affected:
-            return tl.commit(instant, tlmod.COMMIT, "delete", [], [],
-                             {"rows_deleted": 0})
+            return self._commit_write(cfg, instant, "delete", None)
         # SQL DELETE removes rows where cond is TRUE; rows where it is
         # NULL must survive — a bare ~cond would drop them (NULL).
         keep = self._read_files(cfg, affected).filter(
             ~F.coalesce(cond, F.lit(False))
         )
-        added, written = self._materialize(
-            keep, cfg, instant, "base",
-            approx_bytes=sum(m.get("bytes") or 0 for m in affected.values()),
+        return self._commit_write(
+            cfg, instant, "delete", keep, "base", affected
         )
-        self._precommit_validate(cfg, instant, added, sorted(affected))
-        meta = tl.commit(instant, tlmod.COMMIT, "delete", added,
-                         sorted(affected), {"rows_written": written})
-        self._maybe_cluster(cfg)
-        return meta
 
     def delete_keys(self, table: str | TableConfig, keys_df: DataFrame) -> dict:
         """DELETE by key list (W8) — client.delete(List<HoodieKey>)
@@ -3404,7 +3385,6 @@ class Engine:
                 partition_path_col(cfg.partition_fields, cfg.hive_style),
             )
         keyed = keyed.select(PARTITION_PATH_META, RECORD_KEY_META).distinct().persist()
-        tl = Timeline(cfg.path)
         try:
             if cfg.table_type == MOR:
                 snap = self.read(cfg)
@@ -3414,25 +3394,18 @@ class Engine:
                     .withColumn(COMMIT_TIME_META, F.lit(instant))
                 )
                 markers = self._conform(markers, cfg)
-                added, written = self._materialize(markers, cfg, instant, "delta")
-                self._precommit_validate(cfg, instant, added, [])
-                meta = tl.commit(instant, tlmod.DELTACOMMIT, "delete", added,
-                                 [], {"rows_written": written})
-                self._maybe_compact(cfg)
-                self._maybe_cluster(cfg)
-                return meta
-            affected, _ = self._tag_files(cfg, tl.live_files(), keyed)
-            base = self._read_files(cfg, affected)
-            keep = base.join(keyed.select(*on), on, "left_anti")
-            added, written = self._materialize(
-                keep, cfg, instant, "base",
-                approx_bytes=sum(m.get("bytes") or 0 for m in affected.values()),
+                return self._commit_write(
+                    cfg, instant, "delete", markers, "delta"
+                )
+            affected, _ = self._tag_files(
+                cfg, Timeline(cfg.path).live_files(), keyed
             )
-            self._precommit_validate(cfg, instant, added, sorted(affected))
-            meta = tl.commit(instant, tlmod.COMMIT, "delete", added,
-                             sorted(affected), {"rows_written": written})
-            self._maybe_cluster(cfg)
-            return meta
+            keep = self._read_files(cfg, affected).join(
+                keyed.select(*on), on, "left_anti"
+            )
+            return self._commit_write(
+                cfg, instant, "delete", keep, "base", affected
+            )
         finally:
             keyed.unpersist()
 
@@ -3456,7 +3429,6 @@ class Engine:
         _check_key_assigns(cfg, set)
         cond = _as_cond(where)
         instant = new_instant()
-        tl = Timeline(cfg.path)
         assigns = {k: _as_cond(v) for k, v in set.items()}
         matched = self.read(cfg, partition_filter=partition_filter, where=where)
         if cfg.table_type == MOR:
@@ -3467,40 +3439,28 @@ class Engine:
             updated = matched.withColumns(dict(assigns))
             updated = updated.withColumn(COMMIT_TIME_META, F.lit(instant))
             updated = self._conform(updated, cfg)
-            added, written = self._materialize(updated, cfg, instant, "delta")
-            self._precommit_validate(cfg, instant, added, [])
-            meta = tl.commit(instant, tlmod.DELTACOMMIT, "update", added, [],
-                             {"rows_written": written})
-            self._secondary_append_updated(cfg, updated, set, written)
-            self._maybe_compact(cfg)
-            self._maybe_cluster(cfg)
-            return meta
-        affected = self._dml_rewrite_set(cfg, tl.live_files(), matched)
+            return self._commit_write(
+                cfg, instant, "update", updated, "delta",
+                assigned=(updated, set),
+            )
+        affected = self._dml_rewrite_set(
+            cfg, Timeline(cfg.path).live_files(), matched
+        )
         if not affected:
-            return tl.commit(instant, tlmod.COMMIT, "update", [], [],
-                             {"rows_updated": 0})
-        base = self._read_files(cfg, affected)
-        out = base
+            return self._commit_write(cfg, instant, "update", None)
         newcols = {
             k: F.when(cond, v).otherwise(F.col(k)) for k, v in assigns.items()
         }
         newcols[COMMIT_TIME_META] = F.when(
             cond, F.lit(instant)
         ).otherwise(F.col(COMMIT_TIME_META))
-        out = out.withColumns(newcols)
-        added, written = self._materialize(
-            out, cfg, instant, "base",
-            approx_bytes=sum(m.get("bytes") or 0 for m in affected.values()),
-        )
-        self._precommit_validate(cfg, instant, added, sorted(affected))
-        meta = tl.commit(instant, tlmod.COMMIT, "update", added,
-                         sorted(affected), {"rows_written": written})
+        out = self._read_files(cfg, affected).withColumns(newcols)
         # simultaneous projection, matching the written data exactly —
         # sequential withColumn would index values the write never produced
-        idx_batch = matched.withColumns(dict(assigns))
-        self._secondary_append_updated(cfg, idx_batch, set, written)
-        self._maybe_cluster(cfg)
-        return meta
+        return self._commit_write(
+            cfg, instant, "update", out, "base", affected,
+            assigned=(matched.withColumns(dict(assigns)), set),
+        )
 
     def merge(
         self,
@@ -3555,12 +3515,11 @@ class Engine:
                 if isinstance(amap, dict):
                     _check_key_assigns(cfg, amap, same)
         instant = new_instant()
-        tl = Timeline(cfg.path)
         src = self._prepare(source, cfg, instant)
         src = self._dedup_batch(src, cfg).persist()
         flagged = None
         try:
-            live = tl.live_files()
+            live = Timeline(cfg.path).live_files()
             on = self._merge_key_cols(cfg)
             has_by_source = (
                 not_matched_by_source_delete_cond is not None
@@ -3581,11 +3540,7 @@ class Engine:
                 affected, src_rows = self._tag_files(cfg, live, src)
             base = self._read_files(cfg, affected)
             if cfg.table_type == MOR:
-                base = self._merge_view(base, cfg)
-                if DELETED_META in base.columns:
-                    base = base.filter(
-                        ~F.coalesce(F.col(DELETED_META), F.lit(False))
-                    )
+                base = self._drop_tombstones(self._merge_view(base, cfg))
             t, s = base.alias("t"), src.alias("s")
             j = t.join(s, on, "full_outer")
             t_here = F.col(f"t.{COMMIT_TIME_META}").isNotNull()
@@ -3789,27 +3744,14 @@ class Engine:
                 out = flagged.drop("__touched")
             else:
                 out = j.filter(keep).select(*sel)
-            rewritten, written = self._materialize(
-                out, cfg, instant, "base",
-                approx_bytes=sum(m.get("bytes") or 0 for m in affected.values()),
+            return self._commit_write(
+                cfg, instant, "merge", out, "base", affected, index=src,
+                index_rows=src_rows,
+                assigned=None if flagged is None else (
+                    flagged.filter(F.col("__touched")).drop("__touched"),
+                    explicit_cols,
+                ),
             )
-            self._precommit_validate(
-                cfg, instant, rewritten, sorted(affected)
-            )
-            meta = tl.commit(
-                instant, tlmod.COMMIT, "merge", rewritten, sorted(affected),
-                {"rows_written": written},
-            )
-            self._index_append(cfg, src, src_rows)
-            if flagged is not None:
-                touched = flagged.filter(F.col("__touched")).drop("__touched")
-                self._secondary_append_updated(
-                    cfg, touched, explicit_cols, written
-                )
-            self._maybe_compact(cfg)
-            self._maybe_cluster(cfg)
-            self._maybe_ttl(cfg)
-            return meta
         finally:
             src.unpersist()
             if flagged is not None:
@@ -4121,9 +4063,7 @@ class Engine:
         affected: dict[str, dict],
     ) -> dict:
         df = self._read_files(cfg, affected)
-        merged = self._merge_view(df, cfg)
-        if DELETED_META in merged.columns:
-            merged = merged.filter(~F.coalesce(F.col(DELETED_META), F.lit(False)))
+        merged = self._drop_tombstones(self._merge_view(df, cfg))
         added, written = self._materialize(merged, cfg, instant, "base")
         return tl.commit(
             instant, tlmod.COMPACTION, "compact", added, sorted(affected),
@@ -4397,8 +4337,7 @@ class Engine:
             m.get("kind") == "delta" for m in live.values()
         ):
             df = self._merge_view(df, cfg)
-        if DELETED_META in df.columns:
-            df = df.filter(~F.coalesce(F.col(DELETED_META), F.lit(False)))
+        df = self._drop_tombstones(df)
         range_keys = [F.col(PARTITION_PATH_META)] if cfg.partition_fields else []
         drop_helpers: list[str] = []
         if strategy == "zorder":
@@ -4594,8 +4533,7 @@ class Engine:
             m.get("kind") == "delta" for m in live.values()
         ):
             df = self._merge_view(df, cfg)
-        if DELETED_META in df.columns:
-            df = df.filter(~F.coalesce(F.col(DELETED_META), F.lit(False)))
+        df = self._drop_tombstones(df)
         added, written = self._materialize(df, cfg, instant, "base")
         return tl.commit(
             instant,

@@ -756,6 +756,67 @@ def test_inline_ttl_trigger(engine, spark, monkeypatch):
     assert len(_state(engine, "it2")) == 2
 
 
+@pytest.mark.parametrize("dml", ["delete", "update"])
+def test_inline_ttl_trigger_on_dml(engine, spark, monkeypatch, dml):
+    """DML runs the inline TTL too: a delete or an update of a warm
+    partition expires the cold one in the same write."""
+    from datetime import datetime, timedelta, timezone
+
+    from hudi_demo_spark.engine import engine as E
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    # pinned as in test_inline_ttl_trigger: nothing is cold until the
+    # clock moves past the first insert
+    clock = [datetime.now(timezone.utc)]
+
+    class _Pinned(datetime):
+        @classmethod
+        def now(cls, tz=None):
+            return clock[0]
+
+    monkeypatch.setattr(E, "datetime", _Pinned)
+    engine.create_table(
+        "itd", record_key="id", precombine="ts", partition_by="dt",
+        props={"ttl.inline": "true",
+               "ttl.retain_hours": str(1.0 / 3600)},
+    )
+    engine.insert(_mkdf(spark, [(1, "a", 1.0, 1, "2022-09-05")]), "itd")
+    tl = Timeline(engine._resolve("itd").path)
+    first = tl.last_instant()
+    engine.insert(_mkdf(spark, [(2, "b", 2.0, 1, "2022-09-06"),
+                                (3, "c", 3.0, 1, "2022-09-06")]), "itd")
+    assert len(_state(engine, "itd")) == 3
+    # cutoff = first instant + 1 µs: 09-05 is cold, 09-06 is not
+    clock[0] = datetime.strptime(first, "%Y%m%d%H%M%S%f").replace(
+        tzinfo=timezone.utc
+    ) + timedelta(seconds=1, microseconds=1)
+    if dml == "delete":
+        engine.delete("itd", "id = 2")
+        want = [(3, "c", 3.0, 1, "2022-09-06")]
+    else:
+        engine.update("itd", set={"price": "price + 1"}, where="id = 2")
+        want = [(2, "b", 3.0, 1, "2022-09-06"), (3, "c", 3.0, 1, "2022-09-06")]
+    assert _state(engine, "itd") == want
+    ops = [m["operation"] for m in tl.instants()]
+    assert ops == ["insert", "insert", dml, "delete_partition"]
+
+
+@pytest.mark.parametrize("table_type", ["cow", "mor"])
+def test_noop_dml_shows_zero_records(engine, spark, table_type):
+    """A DELETE or an UPDATE that matches nothing records a commit with
+    `rows_written` 0, so `show_commits` reports 0 records for it, not
+    the -1 of a commit that records no count."""
+    t = _setup(engine, spark, table_type)
+    before = _state(engine, t)
+    engine.delete(t, "id = 99")
+    engine.update(t, set={"price": "price + 1"}, where="id = 99")
+    assert _state(engine, t) == before
+    newest = engine.show_commits(t).collect()[:2]
+    assert [(r["operation"], r["total_records"]) for r in newest] == [
+        ("update", 0), ("delete", 0)
+    ]
+
+
 def test_call_run_ttl(engine, spark):
     """CALL run_ttl routes both strategies: older_than instant and a
     partition-path condition; returns the expired partition list."""

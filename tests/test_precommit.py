@@ -122,3 +122,14 @@ def test_validator_gates_partition_scoped_writes(engine, spark):
     engine.insert_overwrite(spark.createDataFrame(
         [(3, 30.0, 1, "a")], sch), t)
     assert sorted(r["id"] for r in engine.read(t).collect()) == [2, 3]
+    # a whole-table overwrite's candidate is its batch alone: one row
+    # breaks the floor and publishes nothing; two rows pass
+    with pytest.raises(PreCommitValidationError):
+        engine.overwrite(spark.createDataFrame([(4, 40.0, 1, "a")], sch), t)
+    assert sorted(r["id"] for r in engine.read(t).collect()) == [2, 3]
+    assert [m["operation"] for m in engine.show_commits(t).collect()][0] == (
+        "insert_overwrite"
+    )
+    engine.overwrite(spark.createDataFrame(
+        [(4, 40.0, 1, "a"), (5, 50.0, 1, "b")], sch), t)
+    assert sorted(r["id"] for r in engine.read(t).collect()) == [4, 5]

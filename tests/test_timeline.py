@@ -964,16 +964,22 @@ def test_inline_clustering_trigger_on_upserts(engine, spark):
     assert engine.read("ucl").count() == 200
 
 
-@pytest.mark.parametrize("dml", ["update", "delete", "delete_keys", "merge"])
-def test_inline_clustering_trigger_on_dml(engine, spark, dml):
-    """Inline clustering runs after DML too: a COW table with
+@pytest.mark.parametrize("dml,table_type", [
+    pytest.param(
+        dml, table_type, id=dml if table_type == "cow" else f"{dml}-mor"
+    )
+    for table_type in ("cow", "mor")
+    for dml in ("update", "delete", "delete_keys", "merge")
+])
+def test_inline_clustering_trigger_on_dml(engine, spark, dml, table_type):
+    """Inline clustering runs after DML too: a table with
     `cluster.inline.max_commits=3`, clustered after its insert, is
     written by three DML commits and clusters exactly once, after the
     third."""
     from hudi_demo_spark.engine.timeline import Timeline
 
     engine.create_table(
-        "dcl", record_key="k",
+        "dcl", record_key="k", table_type=table_type,
         props={"cluster.inline": "true", "cluster.sort_cols": "v",
                "cluster.inline.max_commits": "3"},
     )
