@@ -149,6 +149,27 @@ def _append_fold(
     return engine.insert(df, name, batch_id=int(end))
 
 
+def _window_rows(
+    engine, source: str, begin: str | None, end: str, columns: list[str],
+    max_rows: int | None = None,
+):
+    """`columns` of an insert-only window of `source` read on the driver
+    as a pyarrow Table, or None and the caller folds `read_incremental`.
+    The window's files are `read_incremental`'s (`Engine._incr_window`)
+    and the read is `Engine._read_small`'s. Served only for a window
+    `read_incremental` reads without the key-dedup merge, whose commits
+    record at most `max_rows` rows written when that is given."""
+    cfg = engine._resolve(source)
+    sel, files, insert_only = engine._incr_window(cfg, begin, end)
+    if not insert_only:
+        return None
+    if max_rows is not None:
+        written = [m.get("stats", {}).get("rows_written") for m in sel]
+        if any(n is None or n < 0 for n in written) or sum(written) > max_rows:
+            return None
+    return engine._read_small(cfg, [], columns, files=files)
+
+
 def _append_cluster(sort_cols: list[str]) -> dict:
     """Create-time props of a kind that folds by `_append_fold`: inline
     clustering on `sort_cols` every `cluster.inline.max_commits`

@@ -1264,7 +1264,8 @@ class Engine:
         return df
 
     def _read_small(
-        self, cfg: TableConfig, probes: list[tuple], columns: list[str]
+        self, cfg: TableConfig, probes: list[tuple], columns: list[str],
+        files: dict[str, dict] | None = None,
     ):
         """The driver read route: `columns` of the current snapshot's
         rows matching every probe, as a pyarrow Table read without a
@@ -1272,6 +1273,8 @@ class Engine:
         `probes` are ``("part" | "point", col, vals)`` tuples: they
         prune the live files through `_prune_pass`, as in `read`, and
         filter the rows as ``col IN vals`` inside the parquet scan.
+        `files`, when given, is the set read instead of the pruned live
+        files: an insert-only incremental window (`_incr_window`).
 
         Served only when the pruned set is plain native base files (no
         MOR delta to merge, no external bootstrap file, no schema
@@ -1283,9 +1286,11 @@ class Engine:
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        files = self._prune_pass(
-            cfg, Timeline(cfg.path).live_files(), probes, None, None, None
-        )
+        if files is None:
+            files = self._prune_pass(
+                cfg, Timeline(cfg.path).live_files(), probes, None, None,
+                None,
+            )
         max_files, max_bytes = _SMALL_READ_CUT
         if (
             cfg.schema_history
@@ -2307,6 +2312,50 @@ class Engine:
         self.last_incremental_stats["cleaned_files_skipped"] += len(gone)
         return {p: m for p, m in files.items() if p not in gone}
 
+    def _incr_window(
+        self, cfg: TableConfig, begin: str | None, end: str | None,
+        allow_cleaned: bool = False, path_glob: str | None = None,
+    ) -> tuple[list[dict], dict[str, dict], bool]:
+        """An incremental window's file selection, shared by
+        `read_incremental` and the driver route of the index folds: the
+        data instants in `(begin, end]`, the files they added (matching
+        `path_glob`) past `_cleaned_gate`, and whether the window is
+        insert-shaped. Only an insert-shaped window skips the key-dedup
+        merge: a pure-insert range cannot hold two versions of a key
+        (and Hudi's INSERT op deliberately keeps duplicate keys).
+        Replacecommits are excluded: an insert_overwrite in range can
+        shadow a key written by an earlier in-range commit, so the range
+        is not duplicate-free even though each commit is insert-shaped."""
+        import fnmatch
+
+        sel = [
+            m
+            for m in Timeline(cfg.path).instants(include_archived=True)
+            if m["action"]
+            in (tlmod.COMMIT, tlmod.DELTACOMMIT, tlmod.REPLACECOMMIT)
+            and (begin is None or m["instant"] > begin)
+            and (end is None or m["instant"] <= end)
+        ]
+        files: dict[str, dict] = {}
+        for m in sel:
+            for f in m["files_added"]:
+                files[f["path"]] = {**f, "commit": m["instant"]}
+        if path_glob:
+            g = path_glob if path_glob.startswith("/") else "/" + path_glob
+            files = {
+                p: m for p, m in files.items() if fnmatch.fnmatch("/" + p, g)
+            }
+        self.last_incremental_stats = {"cleaned_files_skipped": 0}
+        kept = self._cleaned_gate(
+            cfg, files, allow_cleaned, f"incremental range ({begin}, {end}]"
+        )
+        insert_only = all(
+            m["operation"] in ("insert", "bootstrap")
+            and m["action"] != tlmod.REPLACECOMMIT
+            for m in sel
+        )
+        return sel, kept, insert_only
+
     def read_incremental(
         self,
         table: str | TableConfig,
@@ -2333,33 +2382,12 @@ class Engine:
         — complete for every row still live (a row whose change was
         cleaned AND later overwritten reports its surviving version),
         at full-scan cost instead of commit-pruned IO."""
-        import fnmatch
-
         cfg = self._resolve(table)
-        tl = Timeline(cfg.path)
-        sel = [
-            m
-            for m in tl.instants(include_archived=True)
-            if m["action"]
-            in (tlmod.COMMIT, tlmod.DELTACOMMIT, tlmod.REPLACECOMMIT)
-            and (begin is None or m["instant"] > begin)
-            and (end is None or m["instant"] <= end)
-        ]
-        files: dict[str, dict] = {}
-        for m in sel:
-            for f in m["files_added"]:
-                files[f["path"]] = {**f, "commit": m["instant"]}
-        if path_glob:
-            g = path_glob if path_glob.startswith("/") else "/" + path_glob
-            files = {
-                p: m for p, m in files.items() if fnmatch.fnmatch("/" + p, g)
-            }
-        self.last_incremental_stats = {"cleaned_files_skipped": 0}
-        kept = self._cleaned_gate(
-            cfg, files, allow_cleaned or fallback_full_scan,
-            f"incremental range ({begin}, {end}]",
+        _, kept, insert_only = self._incr_window(
+            cfg, begin, end, allow_cleaned or fallback_full_scan, path_glob
         )
-        if fallback_full_scan and len(kept) < len(files):
+        skipped = self.last_incremental_stats["cleaned_files_skipped"]
+        if fallback_full_scan and skipped:
             if path_glob:
                 raise ValueError(
                     "path_glob is not supported with fallback_full_scan "
@@ -2381,17 +2409,6 @@ class Engine:
                 df = df.filter(F.col(COMMIT_TIME_META) > begin)
             if end is not None:
                 df = df.filter(F.col(COMMIT_TIME_META) <= end)
-        # the key-dedup window is only needed when the range can contain two
-        # versions of a key; a pure-insert range cannot (and Hudi's INSERT op
-        # deliberately preserves duplicate keys), so skip the shuffle then.
-        # replacecommits are excluded: an insert_overwrite in range can
-        # shadow a key written by an earlier in-range commit, so the range
-        # is not duplicate-free even though each commit is insert-shaped.
-        insert_only = all(
-            m["operation"] in ("insert", "bootstrap")
-            and m["action"] != tlmod.REPLACECOMMIT
-            for m in sel
-        )
         if not insert_only:
             df = self._merge_view(df, cfg)
         df = self._drop_tombstones(df)
@@ -3395,7 +3412,7 @@ class Engine:
                 )
                 markers = self._conform(markers, cfg)
                 return self._commit_write(
-                    cfg, instant, "delete", markers, "delta"
+                    cfg, instant, "delete", markers, "delta", empty_noop=True
                 )
             affected, _ = self._tag_files(
                 cfg, Timeline(cfg.path).live_files(), keyed
@@ -3441,7 +3458,7 @@ class Engine:
             updated = self._conform(updated, cfg)
             return self._commit_write(
                 cfg, instant, "update", updated, "delta",
-                assigned=(updated, set),
+                assigned=(updated, set), empty_noop=True,
             )
         affected = self._dml_rewrite_set(
             cfg, Timeline(cfg.path).live_files(), matched

@@ -14,18 +14,23 @@ rollups/filter views/vector indexes:
   signature — bucket equality IS band-slice equality, and every value
   is replayable bit-for-bit by a DuckDB oracle (portable 60-bit shingle
   hash, seeded affine-mix coefficients);
-- insert-only source windows fold by signing JUST the delta (one
-  shingle explode + one groupBy over new docs — never the corpus) and
-  APPEND its rows (`derived._append_fold`: no existing file is
-  rewritten); inline clustering on `bucket` every 4 commits keeps the
-  appended files per band partition bounded. An index created before
-  appends carries no `cluster.inline` prop and grows one file per band
-  per refresh until `cluster_index` runs;
+- insert-only source windows fold by signing JUST the delta — never
+  the corpus — and APPEND its rows (`derived._append_fold`: no existing
+  file is rewritten). A window of a few small base files whose commits
+  wrote at most `_PROBE_COLLECT_CAP` band rows is read and signed on
+  the driver (`derived._window_rows` + `minhash_band_rows_py`), so the
+  append's write is the fold's one Spark job; past that cut the window
+  signs with one shingle explode + one groupBy over the new docs.
+  Inline clustering on `bucket` every 4 commits keeps the appended
+  files per band partition bounded. An index created before appends
+  carries no `cluster.inline` prop and grows one file per band per
+  refresh until `cluster_index` runs;
 - source DML routes through the CDC read: changed ids re-sign from a
   key-pruned snapshot and upsert over their (id, band) keys; deleted
   ids leave the index via a keyed delete;
-- probing an incoming batch computes its band rows map-side and joins
-  them against the index on (band, bucket). After `cluster_index`
+- probing an incoming batch signs it map-side in the one job that
+  collects its band rows (never its text) and joins them against the
+  index on (band, bucket). After `cluster_index`
   (range-layout on (band, bucket)), the probe read point-prunes by
   bucket through per-file col-stats — candidate generation reads the
   files that could hold colliding buckets, not the index, and never
@@ -60,6 +65,7 @@ from hudi_demo_spark.engine.derived import (
     _pruned_read,
     _refresh_window,
     _save_props,
+    _window_rows,
 )
 from hudi_demo_spark.engine.timeline import Timeline
 from hudi_demo_spark.operators.util import local_relation
@@ -75,10 +81,6 @@ _BUCKET_COL = "bucket"
 # the batch into a local relation — same order as derived._PRUNE_VAL_CAP,
 # a few MB of (id, band, bucket) tuples at worst
 _PROBE_COLLECT_CAP = 50_000
-# max total TEXT bytes the driver-side signing twin will pull with the
-# batch head: past this, documents are big enough that distributed
-# signing (and an unpruned index read) beats dragging them to the driver
-_PROBE_TEXT_BYTES_CAP = 32 << 20
 
 
 def lsh_band_rows(
@@ -179,18 +181,12 @@ def refresh_minhash_index(engine, name: str) -> dict | None:
         return None
     begin, end, mutated, folded = win
     if not mutated:
-        # lsh_band_rows groups by id, so an id repeated in the window
-        # still appends exactly `bands` rows
-        delta = engine.read_incremental(source, begin=begin, end=end)
-        out = _append_fold(
-            engine,
-            name,
-            lsh_band_rows(
-                delta.drop(*meta_cols), id_col, text_col, num_hashes, bands
-            ),
-            end,
-            folded,
-        )
+        out = None
+        if not folded:
+            out = _append_fold(
+                engine, name, _window_bands(engine, cfg, begin, end), end,
+                False,
+            )
         _save_props(engine, name, {_OFFSET_PROP: end})
         return out
     # changed_keys, not read_cdc: the refresh needs only WHICH ids moved
@@ -246,6 +242,43 @@ def refresh_minhash_index(engine, name: str) -> dict | None:
     return out
 
 
+def _window_bands(engine, cfg, begin: str, end: str) -> DataFrame:
+    """The band rows of an insert-only source window. A window whose
+    commits wrote at most `_PROBE_COLLECT_CAP` band rows is read on the
+    driver (`derived._window_rows`) and signed there by the bit-equal
+    twin `minhash_band_rows_py`, as one slice: the append writes one
+    file per band and its only job. Otherwise `lsh_band_rows` signs
+    the incremental read: one shingle explode + one groupBy(id)
+    shuffle. Both group by id, so an id repeated in the window still
+    appends exactly `bands` rows."""
+    source = cfg.props["mhindex.source"]
+    id_col, text_col, num_hashes, bands = _params(cfg)
+    win = _window_rows(
+        engine, source, begin, end, [id_col, text_col],
+        max_rows=_PROBE_COLLECT_CAP // bands,
+    )
+    if win is None:
+        delta = engine.read_incremental(source, begin=begin, end=end)
+        return lsh_band_rows(
+            delta.select(id_col, text_col), id_col, text_col, num_hashes,
+            bands,
+        )
+    rows = minhash_band_rows_py(
+        zip(*(c.to_pylist() for c in win.columns)), num_hashes, bands
+    )
+    id_type = engine._stored_schema(engine._resolve(source))[id_col].dataType
+    return _rows_df(
+        engine.spark,
+        rows,
+        T.StructType([
+            T.StructField(id_col, id_type),
+            T.StructField(_BAND_COL, T.IntegerType(), False),
+            T.StructField(_BUCKET_COL, T.StringType(), False),
+        ]),
+        rows_per_slice=len(rows) + 1,
+    )
+
+
 def minhash_admit(engine, name: str, batch: DataFrame) -> DataFrame:
     """ADMISSION CONTROL at ingest: the rows of `batch` that are NOT
     near-duplicates of anything already indexed — the dedup-on-ingest
@@ -291,10 +324,13 @@ def minhash_probe(
 ) -> DataFrame:
     """Near-dup candidates of an INCOMING batch against the indexed
     corpus: (query_id, match_id) pairs sharing ≥1 LSH band bucket.
-    The batch signs map-side (one shuffle over batch shingles — never
-    the corpus); with `prune` (default) the index read point-prunes by
-    the batch's distinct bucket values through per-file col-stats (see
-    cluster_index). Self-id matches are excluded so a batch containing
+    The batch signs map-side, never the corpus: with `prune` (default)
+    a Python map over its slices signs it in the job that collects its
+    band rows, and the index read point-prunes by their distinct bucket
+    values through per-file col-stats (see cluster_index); past
+    `_PROBE_COLLECT_CAP` band rows, or without `prune`, it signs in the
+    join (one shuffle over batch shingles) and the index read is
+    unpruned. Self-id matches are excluded so a batch containing
     already-indexed docs reports only genuine cross-candidates. An
     EMPTY index (created, never refreshed) yields no candidates without
     signing the batch — the admission guard's very first batch.
@@ -324,9 +360,9 @@ def minhash_probe(
 
 def _probe(engine, cfg, batch: DataFrame, prune: bool):
     """`minhash_probe`'s candidates: its Spark plan, or — when the
-    batch was signed on the driver and `Engine._read_small` serves the
-    pruned index rows — the set of distinct (query_id, match_id)
-    pairs, matched here."""
+    batch's band rows came back within the cap and `Engine._read_small`
+    serves the pruned index rows — the set of distinct (query_id,
+    match_id) pairs, matched here."""
     id_col, text_col, num_hashes, bands = _params(cfg)
     if Timeline(cfg.path).last_instant() is None:
         return batch.select(
@@ -338,61 +374,33 @@ def _probe(engine, cfg, batch: DataFrame, prune: bool):
     )
     point = None
     if prune:
-        # A small batch's band rows are a pure function of its (id,
-        # text) rows — computed DRIVER-SIDE via the bit-equal portable
-        # MinHash twin (guide §5, the text_index._buckets_of shape),
-        # giving both the bucket prune-set and a broadcast-able local
-        # relation for the join WITHOUT the per-probe shingle-explode +
-        # groupBy shuffle the old signing collect paid. The cap
-        # decision itself must not sign or pull text (a blind take()
-        # could drag GBs of documents to the driver before learning the
-        # batch is big): ONE tiny agg job reads count + text bytes,
-        # then under both caps the rows come back via take() — exactly
-        # as many as counted — and sign in-process (~µs/doc of md5).
-        # Past either cap the index read goes unpruned and the batch
-        # signs exactly once, distributed, in the join: a >50k-band-row
-        # batch's distinct buckets approach the index's bucket space
-        # anyway (pruning would keep most files), and at 100 TB batch
-        # sizes a signing pass just to learn that costs more than the
-        # unpruned scan saves.
-        # persist the batch across the two actions (agg, then take) —
-        # for admission pipelines whose batch is a derived DataFrame,
-        # an unpersisted agg would re-execute the batch's whole
-        # upstream lineage once per probe; released before returning
-        # (over the cap the join re-reads the batch exactly once in
-        # the caller's action, as before). A batch the CALLER already
-        # persisted is left alone — unpersisting it here would
-        # silently drop their cache.
-        ours = not batch.storageLevel.useMemory and not (
-            batch.storageLevel.useDisk
+        # Sign the batch in the one job that collects it: a Python map
+        # over its partitions runs the bit-equal twin, so only band
+        # rows, never document text, reach the driver, and at most one
+        # past the cap. Under the cap they give both the bucket
+        # prune-set and the join's local relation. Past it the index
+        # read goes unpruned and the batch signs again, distributed, in
+        # the join: a >50k-band-row batch's distinct buckets approach
+        # the index's bucket space anyway (pruning would keep most
+        # files).
+        rows = (
+            batch.select(id_col, text_col)
+            .rdd.mapPartitions(
+                lambda it: minhash_band_rows_py(it, num_hashes, bands)
+            )
+            .take(_PROBE_COLLECT_CAP + 1)
         )
-        if ours:
-            batch.persist()
-        try:
-            stat = batch.agg(
-                F.count("*").alias("n"),
-                F.coalesce(
-                    F.sum(F.octet_length(text_col)), F.lit(0)
-                ).alias("nbytes"),
-            ).collect()[0]
-            if (
-                int(stat["n"]) * bands <= _PROBE_COLLECT_CAP
-                and int(stat["nbytes"]) <= _PROBE_TEXT_BYTES_CAP
-            ):
-                head = batch.select(id_col, text_col).take(int(stat["n"]))
-                rows = minhash_band_rows_py(head, num_hashes, bands)
-                if not rows:  # no doc has a shingle: nothing can match
-                    return set()
-                point = (_BUCKET_COL, sorted({r[2] for r in rows}))
-                small = engine._read_small(
-                    cfg, [("point", *point)], [id_col, _BAND_COL, _BUCKET_COL]
-                )
-                if small is not None:
-                    return _match_local(rows, small)
-                q = _rows_df(engine.spark, rows, q.schema)
-        finally:
-            if ours:
-                batch.unpersist()
+        if len(rows) <= _PROBE_COLLECT_CAP:
+            rows = _merge_slices(rows)
+            if not rows:  # no doc has a shingle: nothing can match
+                return set()
+            point = (_BUCKET_COL, sorted({r[2] for r in rows}))
+            small = engine._read_small(
+                cfg, [("point", *point)], [id_col, _BAND_COL, _BUCKET_COL]
+            )
+            if small is not None:
+                return _match_local(rows, small)
+            q = _rows_df(engine.spark, rows, q.schema)
     idx = engine.read(cfg, point_prune=point)
     return (
         idx.select(
@@ -403,6 +411,21 @@ def _probe(engine, cfg, batch: DataFrame, prune: bool):
         .select("query_id", "match_id")
         .distinct()
     )
+
+
+def _merge_slices(rows: list[tuple]) -> list[tuple]:
+    """Band rows signed slice by slice, as `lsh_band_rows` signs the
+    whole batch: an id in two slices got one signature per slice, and
+    the signature of the union of its shingles is their elementwise
+    min, so its (id, band) buckets merge value by value."""
+    merged: dict[tuple, str] = {}
+    for rid, band, bucket in rows:
+        prev = merged.get((rid, band))
+        merged[rid, band] = bucket if prev is None else ":".join(
+            str(min(int(a), int(b)))
+            for a, b in zip(prev.split(":"), bucket.split(":"))
+        )
+    return [(rid, band, bucket) for (rid, band), bucket in merged.items()]
 
 
 def _match_local(rows: list[tuple], index) -> set[tuple]:

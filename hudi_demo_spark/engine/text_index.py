@@ -19,14 +19,17 @@ maintained by the same incremental machinery as the other indexes:
   index TABLE PROPS — two integers folded per refresh from the
   window's delta, the Lucene-segment-metadata analog — so no query
   ever scans a doc-length table to learn `avgdl`;
-- insert-only source windows tokenize JUST the delta (one map-side
-  explode + one (term, id) count — never the corpus) and APPEND its
-  postings (`derived._append_fold`: no existing file is rewritten);
-  inline clustering on `term` every 4 commits keeps the appended files
-  per bucket bounded and restores the term col-stats search prunes
-  by. An index created before appends carries no `cluster.inline`
-  prop and grows one file per touched bucket per refresh until
-  `cluster_text_index` runs;
+- insert-only source windows tokenize JUST the delta — never the
+  corpus — and APPEND its postings (`derived._append_fold`: no
+  existing file is rewritten). A window of a few small base files is
+  read and tokenized on the driver (`derived._window_rows` +
+  `_fold_local`), so the append's write is the fold's one Spark job;
+  past that cut the window takes one stats aggregate, one map-side
+  explode and one (term, id) count shuffle. Inline clustering on
+  `term` every 4 commits keeps the appended files per bucket bounded
+  and restores the term col-stats search prunes by. An index created
+  before appends carries no `cluster.inline` prop and grows one file
+  per touched bucket per refresh until `cluster_text_index` runs;
 - windows with DML route through ``read_cdc(images="both")``: fresh
   postings re-tokenize the after-images, STALE postings are the
   before−after term difference per changed doc (soft-delete
@@ -54,6 +57,7 @@ minhash_index.py is for `dedup_minhash_lsh`.
 
 from __future__ import annotations
 
+from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow as pa
@@ -74,9 +78,11 @@ from hudi_demo_spark.engine.derived import (
     _append_fold,
     _refresh_window,
     _save_props,
+    _window_rows,
 )
 from hudi_demo_spark.functions.hashfn import xxhash64_py
 from hudi_demo_spark.functions.textfn import tokens
+from hudi_demo_spark.operators.dedup import _JAVA_WS
 from hudi_demo_spark.operators.util import local_relation
 from hudi_demo_spark.operators.util import rows_df as _rows_df
 
@@ -133,6 +139,55 @@ def postings(
             F.col("dl").cast("long").alias("dl"),
         )
     )
+
+
+def _fold_local(engine, source: str, cfg, win) -> tuple:
+    """The insert-only fold of a window read on the driver (`win`, a
+    pyarrow (id, text) table): (rows, distinct non-null ids, Σ tokens,
+    postings frame), the Spark route's stats aggregate and `postings`
+    computed in-process. Tokens split on Java's `\\s` class
+    (`_JAVA_WS`, as `tokens` does), terms bucket by `xxhash64_py`, and
+    the postings are one slice, so the append writes one file per
+    touched bucket and its only job. A null text has no postings and
+    adds Spark's `size(null)` to the token sum: null (nothing) under
+    ANSI, -1 under the legacy rule."""
+    id_col, _, buckets = _params(cfg)
+    ids, texts = (c.to_pylist() for c in win.columns)
+    rows, total, tb = [], 0, {}
+    for i, text in zip(ids, texts):
+        if text is None:
+            total += _size_of_null(engine.spark)
+            continue
+        toks = [t for t in _JAVA_WS.split(text) if t]
+        total += len(toks)
+        for term, tf in Counter(toks).items():
+            if term not in tb:
+                tb[term] = xxhash64_py(term) % buckets
+            rows.append((term, i, tb[term], tf, len(toks)))
+    id_type = engine._stored_schema(engine._resolve(source))[id_col].dataType
+    payload = _rows_df(
+        engine.spark,
+        rows,
+        T.StructType([
+            T.StructField("term", T.StringType(), False),
+            T.StructField(id_col, id_type),
+            T.StructField(_TB_COL, T.IntegerType()),
+            T.StructField("tf", T.LongType(), False),
+            T.StructField("dl", T.LongType()),
+        ]),
+        rows_per_slice=len(rows) + 1,
+    )
+    distinct = len({i for i in ids if i is not None})
+    return len(ids), distinct, total, payload
+
+
+def _size_of_null(spark) -> int:
+    """What Spark's `size` returns for a null array, as a summand: -1
+    under `spark.sql.legacy.sizeOfNull` with ANSI off, else null (0)."""
+    conf = spark.conf  # no default argument: that would mask Spark's
+    legacy = conf.get("spark.sql.legacy.sizeOfNull") == "true"
+    ansi = conf.get("spark.sql.ansi.enabled") == "true"
+    return -1 if legacy and not ansi else 0
 
 
 def create_text_index(
@@ -224,47 +279,50 @@ def refresh_text_index(engine, name: str) -> dict | None:
         return None
     begin, end, mutated, folded = win
     if not mutated:
-        # persisted: feeds the postings append AND the scalar fold —
-        # uncached, the incremental read would run twice
-        delta = (
-            engine.read_incremental(source, begin=begin, end=end)
-            .select(id_col, text_col)
-            .persist()
-        )
-        # stats aggregate FIRST (it also populates the persist cache
-        # the append then reuses). The source's engine.insert is a
-        # plain append with NO key dedup (Hudi's INSERT op semantics),
-        # and so is the fold: a duplicate-id window would land twin
-        # (term, id) postings AND permanently skew the folded scalars.
-        # The indexed-source contract is unique ids (create_text_index
-        # already pins the key shape); enforce the in-window half of it
-        # in the SAME aggregate that folds the stats — zero extra jobs
-        # — and abort BEFORE anything is committed to the index. A
+        # The source's engine.insert is a plain append with NO key dedup
+        # (Hudi's INSERT op semantics), and so is the fold: a
+        # duplicate-id window would land twin (term, id) postings AND
+        # permanently skew the folded scalars. The indexed-source
+        # contract is unique ids (create_text_index already pins the key
+        # shape); enforce the in-window half of it with the stats fold
+        # and abort BEFORE anything is committed to the index. A
         # replayed window runs this too: its stats were not saved.
-        row = delta.agg(
-            F.count("*").alias("n"),
-            F.count_distinct(F.col(id_col)).alias("d"),
-            F.coalesce(F.sum(F.size(tokens(text_col))), F.lit(0)).alias("s"),
-        ).collect()[0]
-        if int(row["n"]) != int(row["d"]):
-            delta.unpersist()
+        delta = None
+        win = _window_rows(engine, source, begin, end, [id_col, text_col])
+        if win is not None:
+            n, d, s, payload = _fold_local(engine, source, cfg, win)
+        else:
+            # persisted: feeds the stats aggregate AND the postings
+            # append — uncached, the incremental read would run twice
+            delta = (
+                engine.read_incremental(source, begin=begin, end=end)
+                .select(id_col, text_col)
+                .persist()
+            )
+            row = delta.agg(
+                F.count("*").alias("n"),
+                F.count_distinct(F.col(id_col)).alias("d"),
+                F.coalesce(
+                    F.sum(F.size(tokens(text_col))), F.lit(0)
+                ).alias("s"),
+            ).collect()[0]
+            n, d, s = int(row["n"]), int(row["d"]), int(row["s"])
+            payload = postings(delta, id_col, text_col, buckets)
+        if n != d:
+            if delta is not None:
+                delta.unpersist()
             raise ValueError(
                 f"text index {name!r}: refresh window inserted "
-                f"{int(row['n']) - int(row['d'])} duplicate "
-                f"{id_col!r} value(s) into source {source!r} — indexed "
-                "sources must hold one row per id (use upsert, not "
-                "insert, for re-ingested docs); the refresh was "
-                "aborted before any posting or stat was written"
+                f"{n - d} duplicate {id_col!r} value(s) into source "
+                f"{source!r} — indexed sources must hold one row per id "
+                "(use upsert, not insert, for re-ingested docs); the "
+                "refresh was aborted before any posting or stat was "
+                "written"
             )
-        out = _append_fold(
-            engine,
-            name,
-            postings(delta, id_col, text_col, buckets),
-            end,
-            folded,
-        )
-        delta.unpersist()
-        _bump_stats(engine, name, int(row["n"]), int(row["s"]), end)
+        out = _append_fold(engine, name, payload, end, folded)
+        if delta is not None:
+            delta.unpersist()
+        _bump_stats(engine, name, n, s, end)
         return out
     # DML window: the before/after IMAGES of exactly the changed rows —
     # fresh postings, vanished-posting tombstones and the stats deltas

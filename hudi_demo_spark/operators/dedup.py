@@ -144,10 +144,16 @@ def minhash_band_rows_py(
     driver-resident strings; evaluating it through a Spark job costs a
     shingle-explode shuffle + a collect per probe (guide §5 — the same
     driver-twin shape as text_index._buckets_of)."""
+    import numpy as np
+
     from hudi_demo_spark.functions.hashfn import portable_hash60_py
 
     p = MINHASH_P
-    coeffs = minhash_coeffs(num_hashes, p)
+    # a·h + b < 2^62 + 2^31 (a, b, h < p = 2^31 − 1): exact in int64
+    a, b = (
+        np.array(c, dtype=np.int64)
+        for c in zip(*minhash_coeffs(num_hashes, p))
+    )
     rpb = num_hashes // bands
     shingles: dict = {}
     for rid, text in rows:
@@ -160,13 +166,15 @@ def minhash_band_rows_py(
     for rid, sh in shingles.items():
         if not sh:
             continue
-        hs = [portable_hash60_py(x) % p for x in sh]
-        sig = [min((h * a + b) % p for h in hs) for a, b in coeffs]
-        for b in range(bands):
+        hs = np.fromiter(
+            (portable_hash60_py(x) % p for x in sh), np.int64, len(sh)
+        )
+        sig = ((np.multiply.outer(a, hs) + b[:, None]) % p).min(1).tolist()
+        for band in range(bands):
             bucket = ":".join(
-                str(sig[b * rpb + r]) for r in range(rpb)
+                str(sig[band * rpb + r]) for r in range(rpb)
             )
-            out.append((rid, b, bucket))
+            out.append((rid, band, bucket))
     return out
 
 

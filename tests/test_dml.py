@@ -817,6 +817,32 @@ def test_noop_dml_shows_zero_records(engine, spark, table_type):
     ]
 
 
+def test_mor_noop_dml_does_not_count_toward_compaction(engine, spark):
+    """On MOR, an UPDATE and a `delete_keys` that match nothing record a
+    no-op `commit`, as DELETE does, not an empty `deltacommit`: with
+    `compact.max_delta_commits=2`, the one delta commit of the insert
+    must not be compacted because of them."""
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    engine.create_table(
+        "m", record_key="id", precombine="ts", partition_by="dt",
+        table_type="mor",
+        props={"compact.inline": "true", "compact.max_delta_commits": "2"},
+    )
+    engine.insert(_mkdf(spark, SEED_ROWS[:1]), "m")
+    before = _state(engine, "m")
+    engine.update("m", set={"price": "price + 1"}, where="id = 99")
+    engine.delete_keys("m", spark.createDataFrame(
+        [(99, "2022-09-05")], "id int, dt string"
+    ))
+    assert _state(engine, "m") == before
+    metas = Timeline(engine._resolve("m").path).instants()
+    assert [(m["action"], m["operation"]) for m in metas[1:]] == [
+        ("commit", "update"), ("commit", "delete")
+    ]
+    assert not any(m["action"] == "compaction" for m in metas)
+
+
 def test_call_run_ttl(engine, spark):
     """CALL run_ttl routes both strategies: older_than instant and a
     partition-path condition; returns the expired partition list."""

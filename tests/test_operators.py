@@ -1496,8 +1496,8 @@ def test_minhash_band_rows_py_matches_distributed(spark):
     collecting `lsh_band_rows(portable plan)` — probe pruning reads
     exactly the band/bucket rows the index producer wrote. Covers
     Java-vs-Python whitespace-class divergence (NBSP must NOT split),
-    <3-token and empty docs (no band rows), duplicate ids (shingle
-    sets merge), and multi-byte UTF-8."""
+    <3-token, empty and null docs (no band rows), duplicate ids
+    (shingle sets merge), and multi-byte UTF-8."""
     from hudi_demo_spark.engine.minhash_index import lsh_band_rows
     from hudi_demo_spark.operators.dedup import minhash_band_rows_py
 
@@ -1511,6 +1511,7 @@ def test_minhash_band_rows_py_matches_distributed(spark):
         (7, "dup id first half of the text body"),
         (7, "dup id second half entirely different words"),
         (8, "  leading and trailing whitespace   padded text  "),
+        (9, None),                       # null text: no shingles
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
     for num_hashes, bands in ((32, 8), (64, 16)):

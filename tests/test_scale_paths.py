@@ -695,3 +695,135 @@ def test_read_small_declines_past_the_cut(engine, spark, monkeypatch):
         assert sorted(tuple(r) for r in probe.collect()) == want, cut
     monkeypatch.setattr(E, "_SMALL_READ_CUT", (n, size))
     assert _rows(_small(engine, "mh", "bucket", vals, cols)) == served
+
+
+# ---------------------------------------------------------------------------
+# insert-only index folds: each window the driver route declines folds on
+# the Spark route, into the index the cut at zero builds
+# ---------------------------------------------------------------------------
+
+def _fold_docs(spark, ids):
+    return spark.createDataFrame(
+        [(i, f"doc {i} talks about w{i % 7} w{i % 5} and w{i}", 1)
+         for i in ids], "doc_id int, text string, ts int",
+    )
+
+
+def _fold_indexes(engine, spark, table_type="cow"):
+    """A `docs` source with a MinHash and a text index per route
+    (suffix `_d`: the default cut, `_s`: the cut at zero), folded over
+    20 docs."""
+    from hudi_demo_spark.engine import minhash_index as mh
+    from hudi_demo_spark.engine import text_index as tx
+
+    engine.create_table("docs", record_key="doc_id", precombine="ts",
+                        table_type=table_type)
+    engine.insert(_fold_docs(spark, range(20)), "docs")
+    for route in ("d", "s"):
+        mh.create_minhash_index(engine, "docs", f"mh_{route}", "doc_id",
+                                "text", num_hashes=16, bands=4)
+        tx.create_text_index(engine, "docs", f"tix_{route}", "doc_id",
+                             "text", buckets=4)
+        mh.refresh_minhash_index(engine, f"mh_{route}")
+        tx.refresh_text_index(engine, f"tix_{route}")
+
+
+def _fold_routes(engine, monkeypatch) -> dict:
+    """Refresh the `_d` indexes at the default cut and the `_s` ones
+    with the cut at zero; assert equal index rows and text stats, and
+    return, per index kind, whether `_window_rows` served the `_d`
+    fold on the driver."""
+    import hudi_demo_spark.engine.engine as E
+    from hudi_demo_spark.engine import minhash_index as mh
+    from hudi_demo_spark.engine import text_index as tx
+
+    served = {}
+    for mod, refresh, kind in ((mh, mh.refresh_minhash_index, "mh"),
+                               (tx, tx.refresh_text_index, "tix")):
+        orig = mod._window_rows
+
+        def spy(*a, _orig=orig, _kind=kind, **k):
+            out = _orig(*a, **k)
+            served[_kind] = out is not None
+            return out
+
+        with monkeypatch.context() as m:
+            m.setattr(mod, "_window_rows", spy)
+            assert refresh(engine, f"{kind}_d") is not None
+        with monkeypatch.context() as m:
+            m.setattr(E, "_SMALL_READ_CUT", (0, 0))
+            assert refresh(engine, f"{kind}_s") is not None
+        rows = [
+            sorted(tuple(r) for r in engine.read(f"{kind}_{route}")
+                   .drop(*tx._META).collect())
+            for route in "ds"
+        ]
+        assert rows[0] == rows[1] and rows[0], kind
+    assert tx._stats(engine._resolve("tix_d")) == tx._stats(
+        engine._resolve("tix_s")
+    )
+    return served
+
+
+def test_fold_declines_a_delta_window(engine, spark, monkeypatch):
+    """A MOR source's insert window is delta files: both folds decline
+    and read it through `read_incremental`."""
+    _fold_indexes(engine, spark, table_type="mor")
+    engine.insert(_fold_docs(spark, range(20, 30)), "docs")
+    assert _fold_routes(engine, monkeypatch) == {"mh": False, "tix": False}
+
+
+def test_fold_declines_a_replacecommit_window(engine, spark, monkeypatch):
+    """A window holding a clustering replacecommit is not insert-shaped
+    (`read_incremental` merges it by key), so both folds decline."""
+    _fold_indexes(engine, spark)
+    engine.cluster("docs", ["doc_id"])
+    engine.insert(_fold_docs(spark, range(20, 30)), "docs")
+    assert _fold_routes(engine, monkeypatch) == {"mh": False, "tix": False}
+
+
+def test_fold_declines_a_minhash_window_past_the_cap(
+    engine, spark, monkeypatch
+):
+    """A window whose commits wrote more band rows (rows_written ×
+    bands) than `_PROBE_COLLECT_CAP` signs on Spark; the text fold,
+    which has no such bound, is still served on the driver."""
+    from hudi_demo_spark.engine import minhash_index as mh
+
+    _fold_indexes(engine, spark)
+    engine.insert(_fold_docs(spark, range(20, 30)), "docs")
+    monkeypatch.setattr(mh, "_PROBE_COLLECT_CAP", 10 * 4 - 1)
+    assert _fold_routes(engine, monkeypatch) == {"mh": False, "tix": True}
+    monkeypatch.setattr(mh, "_PROBE_COLLECT_CAP", 10 * 4)
+    engine.insert(_fold_docs(spark, range(30, 40)), "docs")
+    assert _fold_routes(engine, monkeypatch) == {"mh": True, "tix": True}
+
+
+def test_admission_declines_a_batch_past_the_cap(engine, spark, monkeypatch):
+    """A batch signing to more band rows than `_PROBE_COLLECT_CAP`
+    probes the whole index on Spark, with no driver read, and admits
+    what the driver route admits."""
+    from hudi_demo_spark.engine import minhash_index as mh
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    _fold_indexes(engine, spark)
+    batch = spark.createDataFrame(
+        [(100 + i, f"doc {i} talks about w{i % 7} w{i % 5} and w{i}")
+         for i in range(0, 20, 2)]
+        + [(200 + i, f"fresh words number {i} here") for i in range(5)],
+        "doc_id int, text string",
+    )
+    want = sorted(r[0] for r in mh.minhash_admit(engine, "mh_d", batch)
+                  .collect())
+    assert want == list(range(200, 205))
+    calls = []
+    orig = engine._read_small
+    monkeypatch.setattr(engine, "_read_small",
+                        lambda *a, **k: calls.append(a) or orig(*a, **k))
+    monkeypatch.setattr(mh, "_PROBE_COLLECT_CAP", 15 * 4 - 1)
+    got = mh.minhash_admit(engine, "mh_d", batch)
+    assert sorted(r[0] for r in got.collect()) == want
+    probe = mh.minhash_probe(engine, "mh_d", batch)
+    live = Timeline(engine._resolve("mh_d").path).live_files()
+    assert len(probe.inputFiles()) == len(live)  # unpruned
+    assert calls == []

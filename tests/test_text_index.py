@@ -311,10 +311,12 @@ def test_batch_topk_over_cap_joins_unpruned(engine, spark, monkeypatch):
     assert "broadcast" not in over._jdf.queryExecution().logical().toString().lower()
 
 
-def test_insert_duplicate_id_aborts_fold(engine, spark):
+def test_insert_duplicate_id_aborts_fold(engine, spark, monkeypatch):
     """engine.insert appends without key dedup; a duplicate-id window
     must abort the refresh BEFORE postings or scalar stats are written
-    (the table-prop scalars would never self-heal)."""
+    (the table-prop scalars would never self-heal) — on the driver
+    route, and on the Spark route (the cut at zero)."""
+    import hudi_demo_spark.engine.engine as E
     from hudi_demo_spark.engine.derived import _OFFSET_PROP
     from hudi_demo_spark.engine.text_index import _stats
 
@@ -325,12 +327,24 @@ def test_insert_duplicate_id_aborts_fold(engine, spark):
     engine.insert(
         _mk(spark, [(7, "dup doc"), (7, "dup doc again")]), "docs"
     )
-    with pytest.raises(ValueError, match="duplicate"):
-        refresh_text_index(engine, "tix")
-    cfg = engine._resolve("tix")
-    assert _stats(cfg) == before_stats
-    assert cfg.props[_OFFSET_PROP] == before_offset
-    assert engine.read("tix").count() == before_rows
+    for cut in (E._SMALL_READ_CUT, (0, 0)):
+        monkeypatch.setattr(E, "_SMALL_READ_CUT", cut)
+        with pytest.raises(ValueError, match="1 duplicate"):
+            refresh_text_index(engine, "tix")
+        cfg = engine._resolve("tix")
+        assert _stats(cfg) == before_stats
+        assert cfg.props[_OFFSET_PROP] == before_offset
+        assert engine.read("tix").count() == before_rows
+
+
+def _index_rows(engine, name):
+    """An index's rows without the meta columns, sorted: two indexes
+    folded at different instants compare equal."""
+    from hudi_demo_spark.engine.text_index import _META
+
+    return sorted(
+        tuple(r) for r in engine.read(name).drop(*_META).collect()
+    )
 
 
 def _postings(engine, name="tix"):
@@ -452,12 +466,15 @@ def test_append_rounds_stay_bounded_by_inline_clustering(engine, spark):
     assert ops.count("cluster") == 2 and ops[-1] == "insert"
 
 
-def test_insert_only_refresh_job_budget(engine, spark):
-    """One insert-only refresh of a 40-doc window runs at most 3 Spark
-    jobs for the MinHash index and 6 for the text index (a 16-bucket
-    index over 200 docs, below the inline-clustering cadence). The
+def test_insert_only_refresh_job_budget(engine, spark, monkeypatch):
+    """One insert-only refresh of a 40-doc window (a 16-bucket index over
+    200 docs, below the inline-clustering cadence) runs 1 Spark job for
+    each index on the driver route: the append's write. The Spark route
+    (the cut at zero, the plan every fold ran before the driver route)
+    runs at most 3 for the MinHash index and 6 for the text index. The
     upsert fold they replaced took 6 and 9: it tagged and rewrote every
     touched bucket file."""
+    import hudi_demo_spark.engine.engine as E
     from hudi_demo_spark.engine.minhash_index import (
         create_minhash_index,
         refresh_minhash_index,
@@ -474,25 +491,34 @@ def test_insert_only_refresh_job_budget(engine, spark):
 
     engine.create_table("docs", record_key="doc_id")
     engine.insert(docs(range(200)), "docs")
-    create_minhash_index(engine, "docs", "mh", "doc_id", "text")
-    create_text_index(engine, "docs", "tix", "doc_id", "text")
-    refresh_minhash_index(engine, "mh")
-    refresh_text_index(engine, "tix")
+    for route in ("driver", "spark"):
+        create_minhash_index(engine, "docs", f"mh_{route}", "doc_id", "text")
+        create_text_index(engine, "docs", f"tix_{route}", "doc_id", "text")
+        refresh_minhash_index(engine, f"mh_{route}")
+        refresh_text_index(engine, f"tix_{route}")
     engine.insert(docs(range(200, 240)), "docs")
     sc = spark.sparkContext
-    for name, refresh, budget in (
-        ("mh", refresh_minhash_index, 3),
-        ("tix", refresh_text_index, 6),
-    ):
-        group = f"test_text_index:refresh_{name}"
-        sc.setJobGroup(group, "insert-only refresh")
-        try:
-            meta = refresh(engine, name)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert len(jobs) <= budget, (name, len(jobs))
-        assert meta["files_removed"] == []
+    for route, budgets in (("driver", (1, 1)), ("spark", (3, 6))):
+        if route == "spark":
+            monkeypatch.setattr(E, "_SMALL_READ_CUT", (0, 0))
+        for name, refresh, budget in zip(
+            (f"mh_{route}", f"tix_{route}"),
+            (refresh_minhash_index, refresh_text_index),
+            budgets,
+        ):
+            group = f"test_text_index:refresh_{name}"
+            sc.setJobGroup(group, "insert-only refresh")
+            try:
+                meta = refresh(engine, name)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert len(jobs) <= budget, (name, len(jobs))
+            assert meta["files_removed"] == []
+    for kind in ("mh", "tix"):
+        assert _index_rows(engine, f"{kind}_driver") == _index_rows(
+            engine, f"{kind}_spark"
+        )
 
 
 def test_xxhash64_py_matches_spark(spark):
@@ -714,3 +740,76 @@ def test_round_half_up_matches_spark_round(spark):
     bad = [x for i, x in enumerate(xs)
            if bits(_round_half_up(x, 4)) != bits(got[i])]
     assert not bad, bad[:5]
+
+
+# ---------------------------------------------------------------------------
+# driver-served insert-only folds (derived._window_rows): same index as the
+# Spark route
+# ---------------------------------------------------------------------------
+
+FOLD_DOCS = [
+    (1, None),                                   # null text: no postings
+    (2, ""),
+    (3, " \t\n\r\x0b\x0c "),                     # Java \s only
+    (4, "a\u00a0b c\u2003d e\x1cf g h"),    # NBSP, U+2003, \x1c: not Java \s
+    (5, "data data data hash data hash"),        # repeated terms
+    (6, "two words"),                            # <3 tokens: no shingles
+    (7, "naïve café ünïcödé 你好 мир naïve café"),  # multi-byte UTF-8
+    (8, "spark streams data and more data over spark"),
+    (9, "x"),
+]
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_driver_fold_matches_spark_route(engine, spark, read_routes, ansi):
+    """An insert-only fold served on the driver writes the Spark
+    route's index rows, bit for bit, with its schema, and folds the
+    same `textindex.n_docs` / `sum_dl`, for the bootstrap window and
+    an incremental one, over texts that split differently under
+    Java's and Python's whitespace classes. With ANSI off, Spark's
+    legacy `size(null)` is -1, and a null text subtracts one token."""
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        stats = _fold_differential(engine, spark, read_routes)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+    # 29 tokens in all (docs 4-9: 5 + 6 + 2 + 7 + 8 + 1)
+    assert stats == (len(FOLD_DOCS), 29 if ansi == "true" else 28)
+
+
+def _fold_differential(engine, spark, read_routes):
+    """Fold FOLD_DOCS in two windows into a driver-route and a
+    Spark-route pair of indexes, assert them equal, and return the
+    text index stats."""
+    from hudi_demo_spark.engine import minhash_index as mh
+    from hudi_demo_spark.engine.text_index import _stats
+
+    engine.create_table("docs", record_key="doc_id")
+    for route in ("d", "s"):
+        create_text_index(engine, "docs", f"tix_{route}", "doc_id", "text",
+                          buckets=4)
+        mh.create_minhash_index(engine, "docs", f"mh_{route}", "doc_id",
+                                "text", num_hashes=16, bands=4)
+    for rows in (FOLD_DOCS[:5], FOLD_DOCS[5:]):
+        engine.insert(_mk(spark, rows), "docs")
+        routes = iter("ds")
+
+        def fold():
+            route = next(routes)
+            for name, refresh in ((f"tix_{route}", refresh_text_index),
+                                  (f"mh_{route}", mh.refresh_minhash_index)):
+                assert refresh(engine, name)["files_removed"] == []
+            return route
+
+        read_routes(engine, fold)
+        for kind in ("tix", "mh"):
+            d, s = f"{kind}_d", f"{kind}_s"
+            assert engine.read(d).schema == engine.read(s).schema
+            assert _index_rows(engine, d) == _index_rows(engine, s), kind
+        assert _stats(engine._resolve("tix_d")) == _stats(
+            engine._resolve("tix_s")
+        )
+    terms = {r[0] for r in _index_rows(engine, "tix_d")}
+    assert {"a\u00a0b", "c\u2003d", "e\x1cf", "naïve"} <= terms
+    return _stats(engine._resolve("tix_d"))

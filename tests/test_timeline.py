@@ -2566,13 +2566,42 @@ def test_minhash_driver_probe_matches_spark_route(engine, spark, read_routes,
     assert (104 in {q for q, _ in pairs}) == (state != "dml_window")
 
 
+def test_minhash_driver_probe_merges_an_id_signed_in_two_slices(
+    engine, spark, monkeypatch
+):
+    """Admission signs the batch slice by slice. An id in two slices
+    gets one signature per slice, and their elementwise min is the
+    signature `lsh_band_rows` gives the union of its shingles: the
+    probe matches what it matches past the cap, where the whole batch
+    signs as one plan."""
+    from hudi_demo_spark.engine import minhash_index as mh
+
+    _probe_fixture(engine, spark, "appended")
+    greek = ("zeta eta theta iota kappa lambda mu nu xi omicron pi rho "
+             "sigma tau upsilon phi chi psi omega")
+    rows = [(300, "doc 1 talks about w1 w1 w1 and w1"),  # a clone of doc 1
+            (301, "novel words " * 5),
+            (300, greek),  # dominates the minima of 300's union
+            (302, "doc 3 talks about w3 w3 w0 and w3")]  # a clone of doc 3
+    batch = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2), "doc_id int, text string"
+    )
+    assert batch.rdd.glom().map(len).collect() == [2, 2]
+    got = sorted(tuple(r) for r in mh.minhash_probe(engine, "mh", batch)
+                 .collect())
+    monkeypatch.setattr(mh, "_PROBE_COLLECT_CAP", 0)
+    assert got == sorted(
+        tuple(r) for r in mh.minhash_probe(engine, "mh", batch).collect()
+    )
+    assert (302, 3) in got and (300, 1) not in got
+
+
 def test_minhash_driver_admission_job_budget(engine, spark, monkeypatch):
     """A driver-served admission of a one-slice batch, collect
-    included, runs 5 Spark jobs: 3 for the size aggregate over the
-    persisted batch, 1 to take it for driver signing and 1 for the
-    filtered batch. The Spark route (the cut at zero, the plan every
-    admission ran before the driver route) runs 9: it also scans the
-    index, joins it and broadcasts the hits for the anti-join."""
+    included, runs 2 Spark jobs: 1 that signs the batch and collects
+    its band rows, and 1 for the filtered batch. The Spark route (the
+    cut at zero) runs more: it also scans the index, joins it and
+    broadcasts the hits for the anti-join."""
     import hudi_demo_spark.engine.engine as E
     from hudi_demo_spark.engine import minhash_index as mh
     from hudi_demo_spark.operators.util import rows_df
@@ -2595,7 +2624,7 @@ def test_minhash_driver_admission_job_budget(engine, spark, monkeypatch):
     monkeypatch.setattr(E, "_SMALL_READ_CUT", (0, 0))
     spark_side, n_spark = jobs("spark-admission")
     assert driver == spark_side
-    assert n_driver <= 5 < n_spark, (n_driver, n_spark)
+    assert n_driver <= 2 < n_spark, (n_driver, n_spark)
 
 
 @pytest.mark.slow
