@@ -49,7 +49,6 @@ from hudi_demo_spark.engine.config import (
     PAYLOAD_DEFAULT,
     PAYLOAD_PARTIAL,
     RECORD_KEY_META,
-    TIMELINE_DIR,
     TableConfig,
 )
 from hudi_demo_spark.engine.keys import partition_path_col, record_key_col
@@ -3952,7 +3951,7 @@ class Engine:
         compact after N delta commits (default 2, `compact.inline` prop)."""
         if cfg.table_type != MOR:
             return
-        if not cfg.props.get("compact.inline", False):
+        if not self._truthy(cfg.props.get("compact.inline")):
             return
         max_delta = int(cfg.props.get("compact.max_delta_commits", 2))
         max_bytes = int(cfg.props.get("compact.max_delta_bytes", 0))
@@ -4035,22 +4034,16 @@ class Engine:
             affected.update(self._key_probe(cfg, live, {None: dranges}))
         return affected
 
-    def _requested_path(self, cfg: TableConfig, instant: str) -> Path:
-        # leading underscore keeps plan files out of Timeline.instants()
-        return (
-            Path(cfg.path) / TIMELINE_DIR
-            / f"_requested-{instant}.compaction.json"
-        )
-
     def schedule_compaction(self, table: str | TableConfig) -> str | None:
         """Hudi's async-compaction SCHEDULE step
         (`hoodie.compact.schedule.inline` / `call run_compaction(op =>
         'schedule')`): capture the current delta file set as an
         immutable plan, so a SEPARATE process can execute it later
         without racing ongoing writers — new deltas landing after the
-        schedule stay live and untouched by that execution, and OCC
-        fails the execution loudly if a plan file was replaced
-        meanwhile. Returns the plan instant, or None with no deltas."""
+        schedule stay live and untouched by that execution, and a plan
+        whose files were replaced meanwhile is dropped before it writes
+        anything (`_run_plans`). Returns the plan instant, or None with
+        no deltas."""
         cfg = self._resolve(table)
         tl = Timeline(cfg.path)
         scope = self._compaction_scope(
@@ -4059,31 +4052,73 @@ class Engine:
         if scope is None:
             return None
         instant = new_instant()
-        p = self._requested_path(cfg, instant)
-        p.parent.mkdir(parents=True, exist_ok=True)
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(json.dumps({"instant": instant, "files": scope}))
-        tmp.replace(p)
+        tl.request_plan(tlmod.COMPACTION, instant, {"files": scope})
         return instant
 
     def pending_compactions(self, table: str | TableConfig) -> list[str]:
-        cfg = self._resolve(table)
-        return sorted(
-            p.name[len("_requested-") : -len(".compaction.json")]
-            for p in (Path(cfg.path) / TIMELINE_DIR).glob(
-                "_requested-*.compaction.json"
-            )
+        return Timeline(self._resolve(table).path).pending_plans(
+            tlmod.COMPACTION
         )
 
-    def _execute_compaction_plan(
-        self, cfg: TableConfig, tl: Timeline, instant: str,
-        affected: dict[str, dict],
+    def _run_plans(
+        self, cfg: TableConfig, service: str, execute: Callable,
+        instant: str | None = None,
+    ) -> dict | None:
+        """The execute step of every planned table service: run the named
+        (or oldest) pending `service` plan as `execute(instant, plan)`,
+        drop it, and return the commit metadata; None when no plan is
+        (or the named one is not) pending. A plan whose files a later
+        write replaced can never commit (OCC), so it is checked on the
+        driver first. A stale plan, or one whose commit raises
+        ConcurrentWriteError, is dropped, not left to block every later
+        plan: an unnamed run moves on to the next plan, a named one
+        re-raises after the drop."""
+        tl = Timeline(cfg.path)
+        while True:
+            pending = tl.pending_plans(service)
+            if instant is not None:
+                pending = [instant] if instant in pending else []
+            if not pending:
+                return None
+            target = pending[0]
+            plan = tl.read_plan(service, target)
+            try:
+                tl.require_live(target, plan["files"])
+                meta = execute(target, plan)
+            except tlmod.ConcurrentWriteError:
+                tl.drop_plan(service, target)
+                if instant is not None:
+                    raise
+                continue
+            tl.drop_plan(service, target)
+            return meta
+
+    def _rewrite(
+        self, cfg: TableConfig, instant: str, action: str, operation: str,
+        files: dict[str, dict], kind: str = "base",
+        arrange: Callable | None = None, stats_cols: list[str] | None = None,
     ) -> dict:
-        df = self._read_files(cfg, affected)
-        merged = self._drop_tombstones(self._merge_view(df, cfg))
-        added, written = self._materialize(merged, cfg, instant, "base")
-        return tl.commit(
-            instant, tlmod.COMPACTION, "compact", added, sorted(affected),
+        """The rewrite tail of every row-preserving table service
+        (compaction, log compaction, clustering, bucket resize): read
+        `files`, fold their deltas with `_merge_view`, drop tombstones
+        when writing base files (a delta `kind` keeps them: they still
+        shadow base rows), let `arrange` order the rows (clustering's
+        range sort; the write then keeps that layout and records
+        `stats_cols`), `_materialize`, and publish `action` replacing
+        `files`."""
+        df = self._read_files(cfg, files)
+        if any(m.get("kind") == "delta" for m in files.values()):
+            df = self._merge_view(df, cfg)
+        if kind == "base":
+            df = self._drop_tombstones(df)
+        if arrange is not None:
+            df = arrange(df)
+        added, written = self._materialize(
+            df, cfg, instant, kind, pre_arranged=arrange is not None,
+            stats_cols=stats_cols,
+        )
+        return Timeline(cfg.path).commit(
+            instant, action, operation, added, sorted(files),
             {"rows_written": written},
         )
 
@@ -4106,32 +4141,20 @@ class Engine:
                 "log compaction is unsafe for partial_update payloads "
                 "(non-associative merge); run full compact() instead"
             )
-        tl = Timeline(cfg.path)
-        live = tl.live_files()
-        deltas = {
-            p: m for p, m in live.items() if m.get("kind") == "delta"
-        }
+        by_part: dict[str, dict[str, dict]] = {}
+        for p, m in Timeline(cfg.path).live_files().items():
+            if m.get("kind") == "delta":
+                by_part.setdefault(m.get("partition", ""), {})[p] = m
         # only partitions where folding helps (≥2 delta files)
-        by_part: dict[str, list[str]] = {}
-        for p, m in deltas.items():
-            by_part.setdefault(m.get("partition", ""), []).append(p)
         target = {
-            p: deltas[p]
-            for pp, ps in by_part.items()
-            if len(ps) >= 2
-            for p in ps
+            p: m for ds in by_part.values() if len(ds) >= 2
+            for p, m in ds.items()
         }
         if not target:
             return None
-        instant = new_instant()
-        df = self._read_files(cfg, target)
-        folded = self._merge_view(df, cfg)
-        # delete markers MUST survive folding (they still shadow base
-        # rows); only read() filters them
-        added, written = self._materialize(folded, cfg, instant, "delta")
-        return tl.commit(
-            instant, "logcompaction", "log_compact", added, sorted(target),
-            {"rows_written": written},
+        return self._rewrite(
+            cfg, new_instant(), tlmod.LOGCOMPACTION, "log_compact", target,
+            kind="delta",
         )
 
     def compact(
@@ -4146,29 +4169,26 @@ class Engine:
 
         If async plans exist (`schedule_compaction`), the OLDEST pending
         plan is executed instead — its captured file set exactly, never
-        deltas that arrived after the schedule (Hudi execute semantics).
-        The plan file is consumed on success."""
+        deltas that arrived after the schedule (Hudi execute semantics);
+        a stale plan is dropped and the next one runs (`_run_plans`).
+        With no plan left, the current deltas are compacted."""
         cfg = self._resolve(table)
-        tl = Timeline(cfg.path)
-        pending = self.pending_compactions(cfg)
-        if pending:
-            instant = pending[0]
-            plan_file = self._requested_path(cfg, instant)
-            plan = json.loads(plan_file.read_text())
-            meta = self._execute_compaction_plan(
-                cfg, tl, instant, plan["files"]
+
+        def run(instant: str, files: dict[str, dict]) -> dict:
+            return self._rewrite(
+                cfg, instant, tlmod.COMPACTION, "compact", files
             )
-            plan_file.unlink(missing_ok=True)
+
+        meta = self._run_plans(
+            cfg, tlmod.COMPACTION, lambda i, plan: run(i, plan["files"])
+        )
+        if meta is not None:
             return meta
-        live = tl.live_files()
         affected = self._compaction_scope(
-            cfg, live, self._compact_budget(cfg, max_io_mb)
+            cfg, Timeline(cfg.path).live_files(),
+            self._compact_budget(cfg, max_io_mb),
         )
-        if affected is None:
-            return None
-        return self._execute_compaction_plan(
-            cfg, tl, new_instant(), affected
-        )
+        return None if affected is None else run(new_instant(), affected)
 
     @staticmethod
     def _compact_budget(
@@ -4330,74 +4350,58 @@ class Engine:
         only merges ADJACENT ranges, so per-file disjointness survives
         file sizing."""
         cfg = self._resolve(table)
-        tl = Timeline(cfg.path)
-        live = tl.live_files()
+        live = Timeline(cfg.path).live_files()
         if partition_filter is not None:
             live = self._prune_files(live, partition_filter)
         if not live:
             return None
         return self._execute_cluster(
-            cfg, tl, new_instant(), live, sort_cols, strategy
+            cfg, new_instant(), live, sort_cols, strategy
         )
 
     def _execute_cluster(
-        self,
-        cfg: TableConfig,
-        tl: Timeline,
-        instant: str,
-        live: dict[str, dict],
-        sort_cols: list[str],
-        strategy: str,
+        self, cfg: TableConfig, instant: str, live: dict[str, dict],
+        sort_cols: list[str], strategy: str,
     ) -> dict:
-        df = self._read_files(cfg, live)
-        if cfg.table_type == MOR and any(
-            m.get("kind") == "delta" for m in live.values()
-        ):
-            df = self._merge_view(df, cfg)
-        df = self._drop_tombstones(df)
-        range_keys = [F.col(PARTITION_PATH_META)] if cfg.partition_fields else []
-        drop_helpers: list[str] = []
-        if strategy == "zorder":
-            # multi-dimensional clustering: one interleaved sort key
-            # instead of lexicographic (which only skips on the leading
-            # column); per-file stats still recorded per ORIGINAL column
-            range_keys += [self._zorder_col(df, sort_cols)]
-        elif strategy == "hilbert":
-            # same layout contract as zorder under the better-locality
-            # curve (every unit step on the curve is a unit step in
-            # space — no z-shaped jumps), Hudi's
-            # `hoodie.layout.optimize.curve.build.method=hilbert` analog
-            # same sign-bit cap as _zorder_col: n*bits <= 63 (4-D drops
-            # to 15 bits/axis, keeping each code's MOST significant bits)
-            hbits = min(16, 63 // max(1, len(sort_cols)))
-            hcodes = self._normalized_codes(df, sort_cols)
-            if hbits < 16:
-                hcodes = [F.shiftright(c, 16 - hbits) for c in hcodes]
-            df = self._attach_hilbert(df, hcodes, hbits)
-            range_keys += [F.col("__hilbert")]
-            drop_helpers = self._hilbert_helper_cols(len(sort_cols))
-        elif strategy == "linear":
-            range_keys += [F.col(c) for c in sort_cols]
-        else:
-            raise ValueError(f"unknown clustering strategy: {strategy!r}")
-        arranged = df.repartitionByRange(*range_keys).sortWithinPartitions(
-            *range_keys
-        )
-        if drop_helpers:
-            # projection preserves the range partitioning + sort order
-            arranged = arranged.drop(*drop_helpers)
-        with self._file_sizing(cfg):
-            added, written = self._materialize(
-                arranged, cfg, instant, "base", pre_arranged=True,
-                stats_cols=sort_cols,
+        def arrange(df: DataFrame) -> DataFrame:
+            range_keys = (
+                [F.col(PARTITION_PATH_META)] if cfg.partition_fields else []
             )
-        return tl.commit(
-            instant,
-            tlmod.REPLACECOMMIT,
-            "cluster",
-            added,
-            sorted(live),
-            {"rows_written": written},
+            drop_helpers: list[str] = []
+            if strategy == "zorder":
+                # multi-dimensional clustering: one interleaved sort key
+                # instead of lexicographic (which only skips on the
+                # leading column); per-file stats still recorded per
+                # ORIGINAL column
+                range_keys += [self._zorder_col(df, sort_cols)]
+            elif strategy == "hilbert":
+                # same layout contract as zorder under the better-locality
+                # curve (every unit step on the curve is a unit step in
+                # space — no z-shaped jumps), Hudi's
+                # `hoodie.layout.optimize.curve.build.method=hilbert`
+                # analog; same sign-bit cap as _zorder_col: n*bits <= 63
+                # (4-D drops to 15 bits/axis, keeping each code's MOST
+                # significant bits)
+                hbits = min(16, 63 // max(1, len(sort_cols)))
+                hcodes = self._normalized_codes(df, sort_cols)
+                if hbits < 16:
+                    hcodes = [F.shiftright(c, 16 - hbits) for c in hcodes]
+                df = self._attach_hilbert(df, hcodes, hbits)
+                range_keys += [F.col("__hilbert")]
+                drop_helpers = self._hilbert_helper_cols(len(sort_cols))
+            elif strategy == "linear":
+                range_keys += [F.col(c) for c in sort_cols]
+            else:
+                raise ValueError(f"unknown clustering strategy: {strategy!r}")
+            df = df.repartitionByRange(*range_keys).sortWithinPartitions(
+                *range_keys
+            )
+            # projection preserves the range partitioning + sort order
+            return df.drop(*drop_helpers) if drop_helpers else df
+
+        return self._rewrite(
+            cfg, instant, tlmod.REPLACECOMMIT, "cluster", live,
+            arrange=arrange, stats_cols=sort_cols,
         )
 
     def schedule_clustering(
@@ -4411,10 +4415,9 @@ class Engine:
         => 'schedule')`): capture the current live file set + sort spec
         as an immutable plan for a separate process to execute.
         Files written after the schedule stay live and untouched by the
-        execution; if a planned file group is replaced meanwhile, the
-        execution fails loudly via OCC (commit() refuses to replace
-        non-live files). Returns the plan instant, or None when
-        empty."""
+        execution; a plan whose file group was replaced meanwhile is
+        dropped before it writes anything (`_run_plans`). Returns the
+        plan instant, or None when empty."""
         cfg = self._resolve(table)
         tl = Timeline(cfg.path)
         live = tl.live_files()
@@ -4423,67 +4426,33 @@ class Engine:
         if not live:
             return None
         instant = new_instant()
-        p = Path(cfg.path) / TIMELINE_DIR / (
-            f"_requested-{instant}.clustering.json"
-        )
-        p.parent.mkdir(parents=True, exist_ok=True)
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(json.dumps({
-            "instant": instant,
-            "files": live,
-            "sort_cols": list(sort_cols),
-            "strategy": strategy,
-        }))
-        tmp.replace(p)
+        tl.request_plan("clustering", instant, {
+            "files": live, "sort_cols": list(sort_cols), "strategy": strategy,
+        })
         return instant
 
     def pending_clusterings(self, table: str | TableConfig) -> list[str]:
-        cfg = self._resolve(table)
-        return sorted(
-            p.name[len("_requested-"): -len(".clustering.json")]
-            for p in (Path(cfg.path) / TIMELINE_DIR).glob(
-                "_requested-*.clustering.json"
-            )
+        return Timeline(self._resolve(table).path).pending_plans(
+            "clustering"
         )
 
     def run_clustering_plan(
         self, table: str | TableConfig, instant: str | None = None
     ) -> dict | None:
         """Async-clustering EXECUTE step: run the named (or earliest)
-        scheduled plan and drop the plan file. Returns the replacecommit
-        metadata, or None when no plan is pending.
-
-        A plan whose file groups were replaced by a later write can
-        NEVER succeed (OCC refuses to replace non-live files) — such a
-        stale plan is dropped on conflict rather than left to
-        permanently block every later plan: unnamed execution skips to
-        the next pending plan; a named execution re-raises after
-        dropping so the caller sees the conflict."""
+        scheduled plan and drop the plan file (`_run_plans`: a stale plan
+        is dropped; unnamed execution moves on to the next, a named one
+        re-raises). Returns the replacecommit metadata, or None when no
+        plan is pending."""
         cfg = self._resolve(table)
-        tl = Timeline(cfg.path)
-        while True:
-            pending = self.pending_clusterings(cfg)
-            if not pending:
-                return None
-            if instant is not None and instant not in pending:
-                return None
-            target = instant or pending[0]
-            p = Path(cfg.path) / TIMELINE_DIR / (
-                f"_requested-{target}.clustering.json"
-            )
-            plan = json.loads(p.read_text())
-            try:
-                meta = self._execute_cluster(
-                    cfg, tl, target, plan["files"], plan["sort_cols"],
-                    plan.get("strategy", "linear"),
-                )
-            except tlmod.ConcurrentWriteError:
-                p.unlink(missing_ok=True)
-                if instant is not None:
-                    raise
-                continue
-            p.unlink(missing_ok=True)
-            return meta
+        return self._run_plans(
+            cfg, "clustering",
+            lambda i, plan: self._execute_cluster(
+                cfg, i, plan["files"], plan["sort_cols"],
+                plan.get("strategy", "linear"),
+            ),
+            instant,
+        )
 
     def copy_to_table(
         self,
@@ -4534,8 +4503,7 @@ class Engine:
         cfg = self._resolve(table)
         if not cfg.props.get("bucket.num"):
             raise ValueError("table has no bucket index (`bucket.num` prop)")
-        tl = Timeline(cfg.path)
-        live = tl.live_files()
+        live = Timeline(cfg.path).live_files()
         if partition_filter is not None:
             live = self._prune_files(live, partition_filter)
         # persist the new fan-out first: a write racing this resize
@@ -4544,21 +4512,8 @@ class Engine:
         cfg.save()
         if not live:
             return None
-        instant = new_instant()
-        df = self._read_files(cfg, live)
-        if cfg.table_type == MOR and any(
-            m.get("kind") == "delta" for m in live.values()
-        ):
-            df = self._merge_view(df, cfg)
-        df = self._drop_tombstones(df)
-        added, written = self._materialize(df, cfg, instant, "base")
-        return tl.commit(
-            instant,
-            tlmod.REPLACECOMMIT,
-            "bucket_resize",
-            added,
-            sorted(live),
-            {"rows_written": written},
+        return self._rewrite(
+            cfg, new_instant(), tlmod.REPLACECOMMIT, "bucket_resize", live
         )
 
     def clean(

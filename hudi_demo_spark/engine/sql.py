@@ -779,6 +779,23 @@ class SqlRouter:
                 bands=int(args.get("bands", 16)),
             )
             return None
+        if proc == "create_text_index":
+            # CALL create_text_index(table => 'docs', name => 'tix',
+            #   id_col => 'doc_id', text_col => 'text' [, buckets => '16'])
+            from hudi_demo_spark.engine.text_index import create_text_index
+
+            name = args.get("name")
+            id_col, text_col = args.get("id_col"), args.get("text_col")
+            if not name or not id_col or not text_col:
+                raise ValueError(
+                    "call create_text_index(table => 'docs', "
+                    "name => 'tix', id_col => 'id', text_col => 'text')"
+                )
+            create_text_index(
+                self.engine, table, name, id_col, text_col,
+                buckets=int(args.get("buckets", 16)),
+            )
+            return None
         if proc == "create_decontam_view":
             # CALL create_decontam_view(table => 'train', name => 'clean',
             #   eval_table => 'ev', id_col => 'doc_id',

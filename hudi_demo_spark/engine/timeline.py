@@ -40,6 +40,7 @@ COMMIT = "commit"  # COW base-file write
 DELTACOMMIT = "deltacommit"  # MOR delta-file write
 REPLACECOMMIT = "replacecommit"  # overwrite: drops all prior files
 COMPACTION = "compaction"  # MOR deltas merged into base
+LOGCOMPACTION = "logcompaction"  # MOR deltas folded into one delta
 CLEAN = "clean"
 
 _last_instant = [""]
@@ -127,14 +128,7 @@ class Timeline:
         coordination; `lock()` exists for callers who prefer pessimistic
         serialization."""
         if files_removed and files_removed != "*":
-            live = self.live_files()
-            gone = [p for p in files_removed if p not in live]
-            if gone:
-                raise ConcurrentWriteError(
-                    f"instant {instant} replaces files already replaced by "
-                    f"a concurrent writer: {gone[:3]}"
-                )
-        self.dir.mkdir(parents=True, exist_ok=True)
+            self.require_live(instant, files_removed)
         meta = {
             "instant": instant,
             "action": action,
@@ -151,11 +145,60 @@ class Timeline:
             # monotonic within a process): clobbering would silently drop
             # the other writer's commit
             raise ConcurrentWriteError(f"instant collision: {p.name}")
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(json.dumps(meta))
-        tmp.replace(p)  # atomic publish
+        self._publish(p, meta)
         self.finish_inflight(instant)
         return meta
+
+    @staticmethod
+    def _publish(p: Path, obj: dict) -> None:
+        """Write `obj` as JSON to `p` atomically (write, then rename)."""
+        p.parent.mkdir(parents=True, exist_ok=True)
+        tmp = p.with_suffix(".tmp")
+        tmp.write_text(json.dumps(obj))
+        tmp.replace(p)
+
+    def require_live(self, instant: str, paths) -> None:
+        """The OCC rule: raise ConcurrentWriteError unless every one of
+        `paths` is still live, i.e. no writer replaced it since
+        `instant` read its snapshot."""
+        live = self.live_files()
+        gone = [p for p in paths if p not in live]
+        if gone:
+            raise ConcurrentWriteError(
+                f"instant {instant} replaces files already replaced by "
+                f"a concurrent writer: {gone[:3]}"
+            )
+
+    # ---------------- table-service plans ----------------
+
+    # `_requested-<instant>.<service>.json`, service "compaction" or
+    # "clustering": the leading underscore keeps plans out of instants()
+    PLAN_PREFIX = "_requested"
+
+    def _plan_path(self, service: str, instant: str) -> Path:
+        return self.dir / f"{self.PLAN_PREFIX}-{instant}.{service}.json"
+
+    def request_plan(self, service: str, instant: str, plan: dict) -> None:
+        """Persist a table-service plan (Hudi's requested instant): the
+        files to rewrite and how, for a later execution."""
+        self._publish(
+            self._plan_path(service, instant), {"instant": instant, **plan}
+        )
+
+    def pending_plans(self, service: str) -> list[str]:
+        """Instants of the requested, not yet executed `service` plans,
+        oldest first."""
+        head, tail = f"{self.PLAN_PREFIX}-", f".{service}.json"
+        return sorted(
+            p.name[len(head):-len(tail)]
+            for p in self.dir.glob(f"{head}*{tail}")
+        )
+
+    def read_plan(self, service: str, instant: str) -> dict:
+        return json.loads(self._plan_path(service, instant).read_text())
+
+    def drop_plan(self, service: str, instant: str) -> None:
+        self._plan_path(service, instant).unlink(missing_ok=True)
 
     # ---------------- inflight markers ----------------
 
@@ -169,11 +212,10 @@ class Timeline:
         whose writer died (stale mtime, no commit) lets clean() reclaim
         that instant's files PROMPTLY and by name, instead of waiting
         out a blanket age gate."""
-        self.dir.mkdir(parents=True, exist_ok=True)
-        p = self.dir / f"{self.INFLIGHT_PREFIX}-{instant}.json"
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(json.dumps({"instant": instant, "operation": operation}))
-        tmp.replace(p)
+        self._publish(
+            self.dir / f"{self.INFLIGHT_PREFIX}-{instant}.json",
+            {"instant": instant, "operation": operation},
+        )
 
     def heartbeat_inflight(self, instant: str) -> None:
         """Refresh the marker mtime mid-write (long jobs outlive any
@@ -298,10 +340,10 @@ class Timeline:
     SAVEPOINT_PREFIX = "_savepoint"
 
     def create_savepoint(self, instant: str) -> None:
-        p = self.dir / f"{self.SAVEPOINT_PREFIX}-{instant}.json"
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(json.dumps({"instant": instant}))
-        tmp.replace(p)
+        self._publish(
+            self.dir / f"{self.SAVEPOINT_PREFIX}-{instant}.json",
+            {"instant": instant},
+        )
 
     def delete_savepoint(self, instant: str) -> bool:
         p = self.dir / f"{self.SAVEPOINT_PREFIX}-{instant}.json"

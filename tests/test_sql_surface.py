@@ -755,14 +755,18 @@ def test_call_minhash_index_and_decontam_view(engine, spark):
         "on a.band = b.band and a.bucket = b.bucket and a.doc_id < b.doc_id"
     ).select("a", "b").distinct().collect()
     assert {(r["a"], r["b"]) for r in pairs} == {(1, 2)}
-    # a text index on the same docs refreshes through the same CALL
-    # route and serves hits (it has no CALL create procedure)
-    from hudi_demo_spark.engine.text_index import (
-        create_text_index,
-        text_index_search,
-    )
+    # a text index on the same docs is created and refreshed through
+    # the same CALL route and serves hits
+    from hudi_demo_spark.engine.text_index import text_index_search
 
-    create_text_index(engine, "mdocs", "mtix", "doc_id", "text", buckets=4)
+    with pytest.raises(ValueError, match="call create_text_index"):
+        engine.sql("call create_text_index(table => 'mdocs', "
+                   "name => 'mtix', id_col => 'doc_id')")
+    engine.sql(
+        "call create_text_index(table => 'mdocs', name => 'mtix', "
+        "id_col => 'doc_id', text_col => 'text', buckets => '4')"
+    )
+    assert engine._resolve("mtix").props["textindex.buckets"] == "4"
     got = engine.sql("call refresh_text_index(table => 'mtix')").collect()
     assert got[0]["refreshed"] is True
     hits = text_index_search(engine, "mtix", ["totally"]).collect()

@@ -64,13 +64,22 @@ def test_incremental_puller(engine, spark):
 
 
 def test_inline_compaction_trigger(engine, spark):
-    """T5: MOR compaction fires after compact.max_delta_commits deltas."""
+    """T5: MOR compaction fires after compact.max_delta_commits deltas;
+    `compact.inline` is read as a flag, so 'false' keeps it off."""
+    mk = lambda i, ts: spark.createDataFrame([(i, f"v{ts}", 1.0, ts, "d")], SCHEMA)
+    engine.create_table(
+        "off", table_type="mor", record_key="id", precombine="ts",
+        props={"compact.inline": "false", "compact.max_delta_commits": 1},
+    )
+    engine.insert(mk(1, 1), "off")
+    engine.upsert(mk(1, 2), "off")
+    actions = [c["action"] for c in engine.show_commits("off").collect()]
+    assert actions == ["deltacommit", "deltacommit"]
     engine.create_table(
         "m", record_key="id", precombine="ts", partition_by="dt",
         table_type="mor",
         props={"compact.inline": True, "compact.max_delta_commits": 2},
     )
-    mk = lambda i, ts: spark.createDataFrame([(i, f"v{ts}", 1.0, ts, "d")], SCHEMA)
     engine.insert(mk(1, 1), "m")
     engine.upsert(mk(1, 2), "m")  # 2nd delta → compaction fires
     actions = [c["action"] for c in engine.show_commits("m").collect()]
@@ -217,6 +226,44 @@ def test_async_compaction_schedule_then_execute(engine, spark):
     engine.compact("a")
     live2 = Timeline(engine._resolve("a").path).live_files()
     assert all(m["kind"] == "base" for m in live2.values())
+
+
+def test_stale_compaction_plan_dropped(engine, spark):
+    """A scheduled compaction whose files a later write replaced can
+    never commit (OCC). `compact()` drops it and compacts the current
+    deltas instead of raising forever, and so does the inline
+    compaction in a MOR upsert's commit tail."""
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    engine.create_table("sc", record_key="id", precombine="ts",
+                        partition_by="dt", table_type="mor")
+    mk = lambda rows: spark.createDataFrame(rows, SCHEMA)
+    engine.insert(mk([(1, "a", 1.0, 1, "x"), (2, "b", 2.0, 1, "y")]), "sc")
+    stale = engine.schedule_compaction("sc")
+    engine.cluster("sc", ["price"])  # replaces every planned file
+    engine.upsert(mk([(1, "a2", 1.5, 2, "x")]), "sc")
+    assert engine.pending_compactions("sc") == [stale]
+    meta = engine.compact("sc")
+    assert meta is not None and meta["instant"] != stale
+    assert engine.pending_compactions("sc") == []
+    live = Timeline(engine._resolve("sc").path).live_files()
+    assert all(m["kind"] == "base" for m in live.values())
+    by_id = {r["id"]: r["name"] for r in engine.read("sc").collect()}
+    assert by_id == {1: "a2", 2: "b"}
+    # inline: the upsert whose tail compacts returns normally
+    engine.upsert(mk([(2, "b2", 2.5, 2, "y")]), "sc")
+    engine.schedule_compaction("sc")
+    engine.cluster("sc", ["price"])
+    cfg = engine._resolve("sc")
+    cfg.props.update({"compact.inline": "true",
+                      "compact.max_delta_commits": 1})
+    cfg.save()
+    engine.upsert(mk([(3, "c", 3.0, 3, "x")]), "sc")
+    assert engine.pending_compactions("sc") == []
+    actions = [m["action"] for m in Timeline(cfg.path).instants()]
+    assert actions[-2:] == ["deltacommit", "compaction"]
+    by_id = {r["id"]: r["name"] for r in engine.read("sc").collect()}
+    assert by_id == {1: "a2", 2: "b2", 3: "c"}
 
 
 def test_schedule_compaction_none_without_deltas(engine, spark):
